@@ -3,8 +3,8 @@
 Everything here is pure Python/NumPy/PyArrow: the engine only ever sees
 the files written. The same seed gives the same bytes.
 
-- ``write_tables`` writes the TPC-H-ish star schema plus ``events`` and
-  ``documents`` (the shapes of the engine's testdata) at a scale factor.
+- ``write_events`` writes the ``events`` table (the shape of the
+  engine's testdata) that the monitoring-layer queries read.
 - ``write_ingest_backlog`` writes a backlog of polling-cycle JSON-lines
   files and a stations dimension, and predicts what every sink of the
   streaming pipeline must hold after draining it.
@@ -24,240 +24,38 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 # ---------------------------------------------------------------------------
-# Star schema + events + documents
+# events
 # ---------------------------------------------------------------------------
 
-REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
-SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
-PART_ADJ = ["blue", "old", "red", "small", "new", "hot", "large", "cold"]
-PART_NOUN = ["ring", "gear", "bolt", "plate", "anvil", "rod", "widget", "gizmo"]
-PART_TYPES = ["ECONOMY", "STANDARD", "LARGE", "SMALL", "MEDIUM", "PROMO"]
-PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
 EVENT_TYPES = ["click", "view", "purchase", "signup", "error"]
-LANGS = ["en", "de", "fr", "es", "zh"]
-LANG_P = [0.44, 0.14, 0.13, 0.15, 0.14]
-VOCAB = (
-    "a agg batch big column customer data dup fast filter group hash join key "
-    "line merge order part query row scan slow small sort spark stream table "
-    "the value vector window"
-).split()
-
-_TS = pa.timestamp("us")
-SCHEMAS = {
-    "region": pa.schema([("r_regionkey", pa.int32()), ("r_name", pa.string())]),
-    "nation": pa.schema(
-        [("n_nationkey", pa.int32()), ("n_name", pa.string()), ("n_regionkey", pa.int32())]
-    ),
-    "customer": pa.schema(
-        [
-            ("c_custkey", pa.int64()),
-            ("c_name", pa.string()),
-            ("c_nationkey", pa.int32()),
-            ("c_acctbal", pa.float64()),
-            ("c_mktsegment", pa.string()),
-        ]
-    ),
-    "supplier": pa.schema(
-        [
-            ("s_suppkey", pa.int64()),
-            ("s_name", pa.string()),
-            ("s_nationkey", pa.int32()),
-            ("s_acctbal", pa.float64()),
-        ]
-    ),
-    "part": pa.schema(
-        [
-            ("p_partkey", pa.int64()),
-            ("p_name", pa.string()),
-            ("p_brand", pa.string()),
-            ("p_type", pa.string()),
-            ("p_size", pa.int32()),
-            ("p_retailprice", pa.float64()),
-        ]
-    ),
-    "orders": pa.schema(
-        [
-            ("o_orderkey", pa.int64()),
-            ("o_custkey", pa.int64()),
-            ("o_orderstatus", pa.string()),
-            ("o_totalprice", pa.float64()),
-            ("o_orderdate", _TS),
-            ("o_orderpriority", pa.string()),
-        ]
-    ),
-    "lineitem": pa.schema(
-        [
-            ("l_orderkey", pa.int64()),
-            ("l_partkey", pa.int64()),
-            ("l_suppkey", pa.int64()),
-            ("l_linenumber", pa.int32()),
-            ("l_quantity", pa.float64()),
-            ("l_extendedprice", pa.float64()),
-            ("l_discount", pa.float64()),
-            ("l_tax", pa.float64()),
-            ("l_returnflag", pa.string()),
-            ("l_linestatus", pa.string()),
-            ("l_shipdate", _TS),
-        ]
-    ),
-    "events": pa.schema(
-        [
-            ("event_id", pa.int64()),
-            ("ts", _TS),
-            ("user_id", pa.int64()),
-            ("event_type", pa.string()),
-            ("value", pa.float64()),
-            ("props", pa.string()),
-        ]
-    ),
-    "documents": pa.schema(
-        [
-            ("doc_id", pa.int64()),
-            ("text", pa.string()),
-            ("lang", pa.string()),
-            ("source", pa.string()),
-            ("n_chars", pa.int64()),
-        ]
-    ),
-}
+EVENTS_SCHEMA = pa.schema(
+    [
+        ("event_id", pa.int64()),
+        ("ts", pa.timestamp("us")),
+        ("user_id", pa.int64()),
+        ("event_type", pa.string()),
+        ("value", pa.float64()),
+        ("props", pa.string()),
+    ]
+)
 
 
-def _cents(rng: np.random.Generator, lo: int, hi: int, n: int) -> np.ndarray:
-    """Two-decimal doubles drawn as integer cents in [lo, hi)."""
-    return rng.integers(lo, hi, n) / 100.0
-
-
-def _days(rng: np.random.Generator, start: str, span_days: int, n: int) -> np.ndarray:
-    base = np.datetime64(start, "us")
-    return base + rng.integers(0, span_days, n).astype("timedelta64[D]")
-
-
-def _documents(rng: np.random.Generator, n: int) -> dict:
-    """Word-salad documents with planted exact and near duplicates, so the
-    dedup and similarity-join operators have real work."""
-    texts: list[str] = []
-    for i in range(n):
-        r = rng.random()
-        if i > 10 and r < 0.05:  # exact duplicate of an earlier doc
-            texts.append(texts[int(rng.integers(0, i))])
-        elif i > 10 and r < 0.12:  # near duplicate: one word replaced
-            words = texts[int(rng.integers(0, i))].split()
-            words[int(rng.integers(0, len(words)))] = VOCAB[int(rng.integers(0, len(VOCAB)))]
-            texts.append(" ".join(words))
-        else:
-            k = int(rng.integers(8, 90))
-            texts.append(" ".join(VOCAB[j] for j in rng.integers(0, len(VOCAB), k)))
-    return {
-        "doc_id": np.arange(n, dtype=np.int64),
-        "text": texts,
-        "lang": rng.choice(LANGS, n, p=LANG_P).tolist(),
-        "source": [f"src{j}" for j in rng.integers(0, 20, n)],
-        "n_chars": np.array([len(t) for t in texts], dtype=np.int64),
-    }
-
-
-def table_columns(seed: int, sf: float) -> dict[str, dict]:
-    """Column arrays of every table at scale factor ``sf`` (sf 0.01 gives
-    60k lineitem rows, like the engine's sf0.01 testdata, and half its
-    documents: the similarity-join oracle is quadratic in them)."""
+def write_events(out_dir: str, seed: int, n: int, n_users: int) -> None:
+    """Write ``<out_dir>/events.parquet``: ``n`` events over one month,
+    in time order, in one row group like the engine's testdata."""
     rng = np.random.default_rng([seed, 7])
-    n_cust = max(10, int(150_000 * sf))
-    n_supp = max(5, int(10_000 * sf))
-    n_part = max(20, int(200_000 * sf))
-    n_ord = max(40, int(1_500_000 * sf))
-    n_ev = max(100, int(1_000_000 * sf))
-    n_doc = max(20, int(25_000 * sf))
-    n_user = max(10, int(15_000 * sf))
-
-    cols: dict[str, dict] = {}
-    cols["region"] = {
-        "r_regionkey": np.arange(5, dtype=np.int32),
-        "r_name": REGIONS,
-    }
-    cols["nation"] = {
-        "n_nationkey": np.arange(25, dtype=np.int32),
-        "n_name": [f"NATION_{i}" for i in range(25)],
-        "n_regionkey": (np.arange(25) % 5).astype(np.int32),
-    }
-    cols["customer"] = {
-        "c_custkey": np.arange(n_cust, dtype=np.int64),
-        "c_name": [f"Customer#{i:09d}" for i in range(n_cust)],
-        "c_nationkey": rng.integers(0, 25, n_cust).astype(np.int32),
-        "c_acctbal": _cents(rng, -99_999, 1_000_000, n_cust),
-        "c_mktsegment": rng.choice(SEGMENTS, n_cust).tolist(),
-    }
-    cols["supplier"] = {
-        "s_suppkey": np.arange(n_supp, dtype=np.int64),
-        "s_name": [f"Supplier#{i:09d}" for i in range(n_supp)],
-        "s_nationkey": rng.integers(0, 25, n_supp).astype(np.int32),
-        "s_acctbal": _cents(rng, -99_999, 1_000_000, n_supp),
-    }
-    adj = rng.integers(0, len(PART_ADJ), n_part)
-    noun = rng.integers(0, len(PART_NOUN), n_part)
-    retail = 900.0 + (np.arange(n_part) % 1000) / 10.0
-    cols["part"] = {
-        "p_partkey": np.arange(n_part, dtype=np.int64),
-        "p_name": [f"{PART_ADJ[a]} {PART_NOUN[b]}" for a, b in zip(adj, noun)],
-        "p_brand": [f"Brand#{j}" for j in rng.integers(1, 26, n_part)],
-        "p_type": rng.choice(PART_TYPES, n_part).tolist(),
-        "p_size": rng.integers(1, 51, n_part).astype(np.int32),
-        "p_retailprice": np.round(retail, 2),
-    }
-    lines_per_order = rng.integers(1, 8, n_ord)
-    n_li = int(lines_per_order.sum())
-    l_order = np.repeat(np.arange(n_ord, dtype=np.int64), lines_per_order)
-    l_line = (
-        np.arange(n_li) - np.repeat(np.cumsum(lines_per_order) - lines_per_order, lines_per_order) + 1
-    ).astype(np.int32)
-    l_part = rng.integers(0, n_part, n_li).astype(np.int64)
-    qty = rng.integers(1, 51, n_li).astype(np.float64)
-    cols["lineitem"] = {
-        "l_orderkey": l_order,
-        "l_partkey": l_part,
-        "l_suppkey": rng.integers(0, n_supp, n_li).astype(np.int64),
-        "l_linenumber": l_line,
-        "l_quantity": qty,
-        "l_extendedprice": np.round(qty * retail[l_part], 2),
-        "l_discount": rng.integers(0, 11, n_li) / 100.0,
-        "l_tax": rng.integers(0, 9, n_li) / 100.0,
-        "l_returnflag": rng.choice(["A", "N", "R"], n_li).tolist(),
-        "l_linestatus": rng.choice(["F", "O"], n_li).tolist(),
-        "l_shipdate": _days(rng, "1995-01-02", 2498, n_li),
-    }
-    cols["orders"] = {
-        "o_orderkey": np.arange(n_ord, dtype=np.int64),
-        "o_custkey": rng.integers(0, n_cust, n_ord).astype(np.int64),
-        "o_orderstatus": rng.choice(["F", "O", "P"], n_ord).tolist(),
-        "o_totalprice": _cents(rng, 101_370, 50_000_000, n_ord),
-        "o_orderdate": _days(rng, "1995-01-01", 2404, n_ord),
-        "o_orderpriority": rng.choice(PRIORITIES, n_ord).tolist(),
-    }
-    # events: one month of time-ordered activity
-    gaps = rng.integers(1, int(30 * 86400e6 / n_ev) * 2, n_ev)
-    cols["events"] = {
-        "event_id": np.arange(n_ev, dtype=np.int64),
+    gaps = rng.integers(1, int(30 * 86400e6 / n) * 2, n)
+    cols = {
+        "event_id": np.arange(n, dtype=np.int64),
         "ts": np.datetime64("2024-01-01T00:00:00", "us") + np.cumsum(gaps).astype("timedelta64[us]"),
-        "user_id": rng.integers(0, n_user, n_ev).astype(np.int64),
-        "event_type": rng.choice(EVENT_TYPES, n_ev).tolist(),
-        "value": _cents(rng, 1, 49_003, n_ev),
-        "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n_ev)],
+        "user_id": rng.integers(0, n_users, n).astype(np.int64),
+        "event_type": rng.choice(EVENT_TYPES, n).tolist(),
+        "value": rng.integers(1, 49_003, n) / 100.0,  # two-decimal doubles
+        "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n)],
     }
-    cols["documents"] = _documents(rng, n_doc)
-    return cols
-
-
-def write_tables(out_dir: str, seed: int, sf: float, names=None) -> dict[str, int]:
-    """Write ``<out_dir>/<table>.parquet`` (one row group each, like the
-    engine's testdata); returns the row count per table."""
     os.makedirs(out_dir, exist_ok=True)
-    counts = {}
-    for name, cols in table_columns(seed, sf).items():
-        if names is not None and name not in names:
-            continue
-        table = pa.Table.from_pydict(cols, schema=SCHEMAS[name])
-        pq.write_table(table, f"{out_dir}/{name}.parquet", row_group_size=1 << 30)
-        counts[name] = table.num_rows
-    return counts
+    pq.write_table(pa.Table.from_pydict(cols, schema=EVENTS_SCHEMA), f"{out_dir}/events.parquet",
+                   row_group_size=1 << 30)
 
 
 # ---------------------------------------------------------------------------

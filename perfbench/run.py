@@ -1,13 +1,14 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload {ingest,dashboard_reads,analytics_batch}
+    python3 perfbench/run.py --workload {ingest,dashboard_reads}
                              --seed N --seconds S --trace {0,1}
 
 Run from the repository root. Generates the workload's inputs from the
 seed, drives the engine for about ``--seconds`` of timed work, checks
 every output, and prints as its last stdout line one JSON object:
 ``{"correct", "attempted", "failed", "metrics"}`` — the end-to-end
-metrics with ``--trace 0``, the per-layer metrics with ``--trace 1``.
+metrics with ``--trace 0``, the per-layer metrics with ``--trace 1``,
+named, and with the units, that ``BENCHMARK.json`` lists.
 The line before it holds run details (sample counts, the tail
 percentile, mismatches). Exits 1 when any output is wrong and 2 when
 the engine is not there to run.
@@ -26,33 +27,6 @@ import sys  # noqa: E402
 import tempfile  # noqa: E402
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-E2E = {"setup_s": "s", "latency_p50_ms": "ms", "cpu_ms_per_op": "ms"}
-PER_LAYER = [
-    "session.start_ms",
-    "sources.load_table_calls", "sources.load_table_ms", "sources.load_table_jobs",
-    "plans.build_ms", "plans.build_jobs", "plans.build_task_ms",
-    "catalyst.analysis_ms", "catalyst.optimization_ms", "catalyst.planning_ms",
-    "operators.process_observations_ms", "operators.build_alerts_ms",
-    "exec.jobs", "exec.stages", "exec.tasks", "exec.task_ms", "exec.task_skew",
-    "exec.shuffle_write_mb", "exec.shuffle_read_mb", "exec.spill_mb", "exec.gc_ms",
-    "sinks.archive_ms", "sinks.fact_ms", "sinks.alerts_ms", "sinks.dlq_ms", "sinks.files", "sinks.mb",
-    "stream.add_batch_ms", "stream.query_planning_ms", "stream.latest_offset_ms",
-    "stream.wal_commit_ms", "stream.commit_offsets_ms", "stream.overhead_ms", "stream.first_batch_ms",
-    "proc.peak_rss_mb", "proc.heap_live_mb", "proc.gc_ms", "box.anchor_ms", "box.steal_pct",
-]
-
-
-def layer_unit(name: str) -> str:
-    if name.endswith("_ms"):
-        return "ms"
-    if name.endswith("_mb") or name == "sinks.mb":
-        return "MB"
-    if name == "exec.task_skew":
-        return "ratio"
-    if name.endswith("_pct"):
-        return "%"
-    return "count"
 
 
 def _engine_present() -> bool:
@@ -86,7 +60,7 @@ def _stop_jvm():
 
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--workload", required=True, choices=["ingest", "dashboard_reads", "analytics_batch"])
+    ap.add_argument("--workload", required=True, choices=["ingest", "dashboard_reads"])
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=int, required=True)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
@@ -95,6 +69,8 @@ def main(argv=None) -> int:
     if not _engine_present():
         print(f"perfbench: the engine is not in {ROOT}; nothing to measure", file=sys.stderr)
         return 2
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        specs = json.load(f)["per_layer" if args.trace else "end_to_end"]
     sys.path.insert(0, ROOT)
     tmp = os.path.join(ROOT, ".perfbench", "tmp")
     os.makedirs(tmp, exist_ok=True)
@@ -116,10 +92,8 @@ def main(argv=None) -> int:
         run.cleanup()
 
     detail = dict(res.detail, mismatches=res.mismatches, e2e=res.e2e)
-    if args.trace:
-        metrics = {k: {"value": res.layers.get(k, 0.0), "unit": layer_unit(k)} for k in PER_LAYER}
-    else:
-        metrics = {k: {"value": res.e2e.get(k, 0.0), "unit": u} for k, u in E2E.items()}
+    values = res.layers if args.trace else res.e2e
+    metrics = {m["name"]: {"value": values.get(m["name"], 0.0), "unit": m["unit"]} for m in specs}
     print(json.dumps({"detail": detail}, default=str))
     print(json.dumps({"correct": res.correct, "attempted": res.attempted, "failed": res.failed, "metrics": metrics}))
     return 0 if res.correct else 1

@@ -36,6 +36,19 @@ def quartile_spread(values: list[float]) -> float:
     return (q3 - q1) / q2
 
 
+def mix_median(samples: list[tuple[str, float]], weights: dict[str, int] | None = None) -> float:
+    """Value of one operation drawn from a weighted mix of operation
+    types (weight 1 unless given), each type's value being the median of
+    its samples. With one type this is the plain median. Host contention
+    that slows fewer than half of a type's samples does not move it."""
+    by_type: dict[str, list[float]] = {}
+    for name, value in samples:
+        by_type.setdefault(name, []).append(value)
+    w = weights or {}
+    total = sum(w.get(name, 1) for name in by_type)
+    return sum(w.get(name, 1) * statistics.median(v) for name, v in by_type.items()) / total
+
+
 def _tree(root: int) -> list[int]:
     """``root`` and every live descendant process."""
     children: dict[int, list[int]] = {}
@@ -78,20 +91,6 @@ def peak_rss_mb(pid: int) -> float:
             if line.startswith("VmHWM:"):
                 return int(line.split()[1]) / 1024.0
     return 0.0
-
-
-def typed_median(samples: list[tuple[str, float]]) -> float:
-    """Geometric mean, over operation types, of each type's median.
-
-    With one type this is the plain median. With a mix (dashboard
-    requests, analytics queries) it does not depend on where the overall
-    median falls between types, so neither the seeded order nor a cliff
-    between a cheap and a costly request moves it."""
-    by_type: dict[str, list[float]] = {}
-    for name, value in samples:
-        by_type.setdefault(name, []).append(value)
-    logs = [math.log(statistics.median(v)) for v in by_type.values()]
-    return math.exp(sum(logs) / len(logs))
 
 
 def cpu_ticks() -> tuple[int, int]:
