@@ -72,11 +72,12 @@ def reformat_ymdhm(col: Column | str) -> Column:
     ).otherwise(c)
 
 
-def parse_obs_time_kst(col: Column | str) -> Column:
+def parse_obs_time_kst(col: Column | str, now: Column | str) -> Column:
     """``yyyy-MM-dd HH:mm`` interpreted as Asia/Seoul wall time → UTC wall time.
 
     Mirrors HRFCOStorageService.java:224-244: the observation time string
-    is naive KST; parse failure or null falls back to now(). Implementation
+    is naive KST; parse failure or null falls back to now(), read from
+    the timestamp column ``now`` (a stream's batch clock). Implementation
     detail: ``try_to_timestamp`` parses in the session TZ, and the cast to
     TIMESTAMP_NTZ renders back in the same session TZ, so the NTZ value is
     the literal wall time from the string regardless of cluster TZ config;
@@ -85,6 +86,6 @@ def parse_obs_time_kst(col: Column | str) -> Column:
     ntz = F.try_to_timestamp(_c(col), F.lit("yyyy-MM-dd HH:mm")).cast("timestamp_ntz")
     parsed = F.convert_timezone(F.lit("Asia/Seoul"), F.lit("UTC"), ntz)
     now_utc = F.convert_timezone(
-        F.current_timezone(), F.lit("UTC"), F.localtimestamp().cast("timestamp_ntz")
+        F.current_timezone(), F.lit("UTC"), _c(now).cast("timestamp_ntz")
     )
     return F.coalesce(parsed, now_utc)

@@ -3397,7 +3397,7 @@ def _nb_confusion(train: DataFrame, evald: DataFrame) -> DataFrame:
             F.count("*").alias("n_docs")
         )
     )
-    tot = pri.agg(F.sum("n_docs").alias("n_total"))
+    tot = pri.agg(F.coalesce(F.sum("n_docs"), F.lit(0)).alias("n_total"))
     vocab = ct.select("tok").distinct()
     v = vocab.agg(F.count("*").alias("v"))
     # dense (tok, lang) grid so unseen cells carry the smoothed

@@ -15,9 +15,15 @@ Reference semantics → Spark-idiomatic form:
 - W8 DLQ (DeadLetterQueueProducer.java:49-86): append-only envelope
   dataset.
 
-All writers take already-classified DataFrames; the 3-way fan-out
-(W6) is ``persist() → three writes → unpersist()`` in
-streaming/pipeline.py, replacing the reference's 3-thread executor.
+All writers take already-classified DataFrames; the fan-out (W6) is
+``coalesce(1) → persist() → four writes → unpersist()`` in
+streaming/pipeline.py, replacing the reference's 3-thread executor: one
+partition, one cache and one batch clock per micro-batch, so each write
+is one task and one file per partition directory. The single partition
+relies on the micro-batch bound of the source (the file source's
+``maxFilesPerTrigger``, the Kafka source's ``maxOffsetsPerTrigger``).
+``write_fact`` and ``write_dlq`` stamp from the batch clock, the ``now``
+column the stream passes them.
 """
 
 from __future__ import annotations
@@ -47,30 +53,34 @@ def write_archive(
     )
 
 
-def write_fact(classified: DataFrame, path: str) -> None:
+def write_fact(classified: DataFrame, path: str, now: str) -> None:
     """W4: the relational fact table (hypertable analog).
 
     Schema mirrors hrfco.water_level_data (TimescaleDBRepository.java:
     81-93); partitioned by observation date so time-range queries prune.
+    ``created_at`` and the observation-time fallback read the timestamp
+    column ``now`` of ``classified``.
     """
     from hrfco_data_pipeline_spark.functions.coercion import parse_obs_time_kst
 
     fact = classified.select(
         F.col("wlobscd").alias("observation_code"),
-        parse_obs_time_kst("obs_time_str").alias("observation_time"),
+        parse_obs_time_kst("obs_time_str", now=now).alias("observation_time"),
         F.col("water_level"),
         F.col("flow_rate"),
         F.coalesce("is_anomaly", F.lit(False)).alias("is_anomaly"),
         F.col("flood_warning_level"),
-        F.current_timestamp().alias("created_at"),
+        F.col(now).alias("created_at"),
     ).withColumn("obs_date", F.to_date("observation_time"))
     fact.write.partitionBy("obs_date").mode("append").parquet(path)
 
 
-def write_dlq(dlq: DataFrame, path: str) -> None:
-    """W8: append failure envelopes (adds publish timestamp)."""
+def write_dlq(dlq: DataFrame, path: str, now: str) -> None:
+    """W8: append failure envelopes, adding the publish ``timestamp``
+    (epoch ms) from the timestamp column ``now`` of ``dlq``, which is
+    not written."""
     (
-        dlq.withColumn("timestamp", F.unix_millis(F.current_timestamp()))
+        dlq.select(*[c for c in dlq.columns if c != now], F.unix_millis(now).alias("timestamp"))
         .write.mode("append")
         .parquet(path)
     )

@@ -8,16 +8,34 @@ Topology (mirrors §3.1 of the survey):
 
     kafka/file JSON source
       → from_json (T3, corrupt-record capture)
-      → process_observations (F1, F2, J1 stream-static broadcast join,
-        C1-C4)                                  [stateless → no watermark]
-      → foreachBatch:  persist → archive (W3) + fact (W4) + DLQ (W8)
+      → batch clock: ``current_timestamp()``, pinned by Spark to the
+        offset log's ``batchTimestampMs``
+      → foreachBatch:  coalesce(1) → persist
+        → process_observations (F1, F2, J1 stream-static broadcast
+          join, C1-C4) → persist        [stateless → no watermark]
+        → archive (W3) + fact (W4) + alerts (C5, W7) + DLQ (W8)
         → unpersist    [replaces the 3-thread storage executor, W6]
-      alerts (C5) → kafka/memory sink keyed by wlobscd (W7)
 
-Delivery: checkpointed at-least-once into idempotent appends — the same
-guarantee the reference achieves with acks=all + DLQ (SURVEY §4 note).
-The stations dim is re-read every micro-batch by the stream-static
-join, which subsumes the reference's threshold cache refresh (J1).
+One partition, one cache, one batch clock per micro-batch. A micro-batch
+is a few polling cycles of one record per station, so one task per stage
+writes it: one file per sink and partition directory, instead of one per
+scan split. The single partition relies on that bound, which both
+bindings set: ``maxFilesPerTrigger=4`` on the file source and
+``maxOffsetsPerTrigger=MAX_OFFSETS_PER_TRIGGER`` on the Kafka source, so
+a stream that starts behind a backlog drains it in bounded batches.
+Every timestamp the sinks stamp — fact ``created_at``, alert and DLQ
+``timestamp``, the observation-time fallback — reads the batch clock, so
+generated code repeats from batch to batch and a replayed batch rewrites
+the same values.
+
+Delivery: at-least-once. A batch that fails or crashes before the
+checkpoint commits is replayed in full, and its rows are appended again
+(duplicates, not losses); the replayed rows equal the first write's,
+batch clock included. The DLQ carries parse failures and, with
+``breakers``, sink failures (the reference's acks=all + DLQ contract,
+SURVEY §4 note). The stations dim is re-read every micro-batch by the
+stream-static join, which subsumes the reference's threshold cache
+refresh (J1).
 
 Kafka options mirror S4 (subscribe hrfco-waterlevel, startingOffsets
 earliest); tests use the file source for hermeticity.
@@ -38,6 +56,11 @@ from hrfco_data_pipeline_spark.sinks.writers import (
     write_dlq,
     write_fact,
 )
+
+BATCH_TS = "_batch_ts"  # the micro-batch clock column; no sink writes it
+# records per Kafka micro-batch: a few polling cycles of one record per
+# station, the Kafka twin of the file source's maxFilesPerTrigger=4
+MAX_OFFSETS_PER_TRIGGER = 4000
 
 OBS_WIRE_SCHEMA = (
     "wlobscd string, ymdhm string, wl string, fw string, _corrupt string"
@@ -83,6 +106,7 @@ def observations_kafka_stream(
         .option("kafka.bootstrap.servers", bootstrap)
         .option("subscribe", topic)
         .option("startingOffsets", starting_offsets)
+        .option("maxOffsetsPerTrigger", MAX_OFFSETS_PER_TRIGGER)
         .load()
     )
     rec = F.from_json(
@@ -127,37 +151,38 @@ def run_stream(
     """
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.persist()
+        batch = batch.coalesce(1).persist()
         try:
             good = batch.filter(F.col("_corrupt").isNull())
             dlq = batch.filter(F.col("_corrupt").isNotNull()).select(
                 F.lit(None).cast("string").alias("original_key"),
                 F.col("value").alias("original_value"),
                 F.lit("Processing failed: JsonParseException").alias("error_reason"),
+                BATCH_TS,
             )
             classified = process_observations(
                 good.drop("value", "_corrupt"), stations
             ).persist()
 
             def write_alerts() -> None:
-                build_alerts(classified).withColumn(
-                    "timestamp", F.unix_millis(F.current_timestamp())
-                ).write.mode("append").parquet(f"{out_dir}/alerts")
+                build_alerts(classified, extra_cols=(BATCH_TS,)).withColumn(
+                    "timestamp", F.unix_millis(BATCH_TS)
+                ).drop(BATCH_TS).write.mode("append").parquet(f"{out_dir}/alerts")
 
             sinks = (
-                ("archive", lambda: write_archive(classified, f"{out_dir}/archive", fmt="json")),
-                ("fact", lambda: write_fact(classified, f"{out_dir}/fact")),
+                (
+                    "archive",
+                    lambda: write_archive(classified.drop(BATCH_TS), f"{out_dir}/archive", fmt="json"),
+                ),
+                ("fact", lambda: write_fact(classified, f"{out_dir}/fact", now=BATCH_TS)),
                 ("alerts", write_alerts),
             )
             # W6 fan-out: independent writes over one cached batch
             storage_failures: list[tuple[str, str]] = []
             for name, fn in sinks:
                 breaker = (breakers or {}).get(name)
-                if breaker is None and breakers is not None:
-                    fn()
-                    continue
-                if breakers is None:
-                    fn()  # fail-stop default: no breaker layer at all
+                if breaker is None:
+                    fn()  # fail-stop: no breaker guards this sink
                     continue
                 try:
                     breaker.call(fn)
@@ -165,15 +190,20 @@ def run_stream(
                     storage_failures.append((name, type(exc).__name__))
 
             if storage_failures:
+                # the batch clock of an empty batch is not in any row;
+                # its envelopes fall back to the write clock
+                clock = batch.agg(
+                    F.coalesce(F.max(BATCH_TS), F.current_timestamp()).alias(BATCH_TS)
+                )
                 env = spark.createDataFrame(
                     [
                         (None, f"batch {batch_id}", f"Storage failed: {n}: {e}")
                         for n, e in storage_failures
                     ],
                     "original_key string, original_value string, error_reason string",
-                )
-                dlq = dlq.unionByName(env)
-            write_dlq(dlq, f"{out_dir}/dlq")
+                ).crossJoin(clock)
+                dlq = dlq.unionByName(env).coalesce(1)
+            write_dlq(dlq, f"{out_dir}/dlq", now=BATCH_TS)
             classified.unpersist()
         finally:
             batch.unpersist()
@@ -186,6 +216,8 @@ def run_stream(
         # isn't, so state would grow without bound on a real stream.
         # The WithinWatermark variant expires keys once they fall behind
         # the watermark, bounding state to one hour of traffic.
+        # ``_corrupt`` joins the key so that distinct unparseable lines,
+        # whose station and minute are both null, each reach the DLQ.
         src = (
             src.withColumn(
                 "event_ts",
@@ -195,11 +227,14 @@ def run_stream(
                 ),
             )
             .withWatermark("event_ts", "1 hour")
-            .dropDuplicatesWithinWatermark(["wlobscd", "ymdhm"])
+            .dropDuplicatesWithinWatermark(["wlobscd", "ymdhm", "_corrupt"])
         )
 
+    # the batch clock: Spark replaces current_timestamp() in a streaming
+    # plan by the offset log's batchTimestampMs, the same on a replay
     writer = (
-        src.writeStream.foreachBatch(process_batch)
+        src.withColumn(BATCH_TS, F.current_timestamp())
+        .writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )

@@ -1,6 +1,8 @@
-"""E2E streaming pipeline test: file source → foreachBatch 3-way fan-out."""
+"""E2E streaming pipeline tests: file source → foreachBatch fan-out to the four sinks."""
 
 from __future__ import annotations
+
+import pytest
 
 from hrfco_data_pipeline_spark.plans.wire import synthetic_wire
 from hrfco_data_pipeline_spark.sources.synthetic import synthetic_stations
@@ -123,3 +125,163 @@ def test_snapshot_sink_complete_mode(spark, tmp_path):
     assert not [
         d for d in os.listdir(tmp_path) if ".staging" in d or d.endswith(".old")
     ]
+
+
+def _polling_files(src, n_files: int, dates=("01", "02")) -> None:
+    """``n_files`` JSON-lines files, file ``i`` carrying minute ``i`` in
+    every observation time (one record per station and date, so each
+    micro-batch reaches every partition) and one corrupt line naming it.
+    Modification times follow ``i``, so the file source takes them in
+    that order."""
+    import json
+    import os
+
+    os.makedirs(src)
+    for i in range(n_files):
+        lines = [
+            json.dumps({"wlobscd": str(c), "ymdhm": f"202501{d}12{i:02d}", "wl": f"{c}.50", "fw": "1.0"})
+            for d in dates
+            for c in range(10)
+        ]
+        path = os.path.join(src, f"f{i:02d}.json")
+        with open(path, "w") as fh:
+            fh.write("\n".join([*lines, f"not json {i}"]) + "\n")
+        os.utime(path, (1_000 + i, 1_000 + i))
+
+
+def _batch_clock(ckpt: str) -> tuple[dict[int, int], dict[int, int]]:
+    """(batchTimestampMs per batch id, batch id per source file index),
+    read from the checkpoint's offset log and file-source log."""
+    import glob
+    import json
+    import os
+
+    clock, batch_of = {}, {}
+    for path in glob.glob(f"{ckpt}/offsets/[0-9]*"):
+        with open(path) as fh:
+            clock[int(os.path.basename(path))] = json.loads(fh.read().splitlines()[1])["batchTimestampMs"]
+    for path in glob.glob(f"{ckpt}/sources/0/[0-9]*"):
+        with open(path) as fh:
+            for line in fh.read().splitlines()[1:]:
+                entry = json.loads(line)
+                batch_of[int(entry["path"].rsplit("/f", 1)[1][:2])] = entry["batchId"]
+    return clock, batch_of
+
+
+@pytest.mark.parametrize("dedup", [False, True])
+def test_stream_one_file_per_batch_stamped_by_batch_clock(spark, tmp_path, monkeypatch, dedup):
+    """Two micro-batches of four polling files. Each micro-batch writes
+    one data file per sink and partition directory, and every timestamp
+    it stamps — fact ``created_at``, alert and DLQ ``timestamp``, a
+    storage-failure envelope's included — is that batch's
+    ``batchTimestampMs`` from the offset log. With ``dedup`` the batch
+    comes out of the stateful duplicate drop, whose advancing watermark
+    makes Spark run a third, no-data micro-batch; it writes one empty
+    file to each unpartitioned sink (alerts, DLQ)."""
+    import glob
+    import json
+    import os
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import hrfco_data_pipeline_spark.streaming.pipeline as pl
+    from hrfco_data_pipeline_spark.sinks.reliability import SinkCircuitBreaker
+
+    src, out, ckpt = str(tmp_path / "src"), str(tmp_path / "out"), str(tmp_path / "ck")
+    _polling_files(src, 8)
+
+    write_archive, calls = pl.write_archive, []
+
+    def archive_down_once(*a, **k):  # the first micro-batch's archive write fails
+        calls.append(1)
+        if len(calls) == 1:
+            raise IOError("object store down")
+        write_archive(*a, **k)
+
+    monkeypatch.setattr(pl, "write_archive", archive_down_once)
+    q = pl.run_stream(
+        spark,
+        pl.observations_file_stream(spark, src),
+        synthetic_stations(spark),
+        out,
+        ckpt,
+        dedup=dedup,
+        breakers={"archive": SinkCircuitBreaker(name="archive")},
+    )
+    assert q.awaitTermination(300)
+    clock, batch_of = _batch_clock(ckpt)
+    assert sorted(clock) == ([0, 1, 2] if dedup else [0, 1]) and sorted(set(batch_of.values())) == [0, 1]
+
+    def dlq_batch(value: str) -> int:
+        n = int(value.split()[-1])  # "not json <file>" or "batch <id>"
+        return n if value.startswith("batch ") else batch_of[n]
+
+    def stamped(sink: str, path: str) -> list[tuple[int, int | None]]:
+        """(micro-batch the row came from, its timestamp in epoch ms) per row."""
+        if sink == "archive":
+            with open(path) as fh:
+                return [(batch_of[int(json.loads(line)["ymdhm"][-2:])], None) for line in fh]
+        table = pq.read_table(path)
+        rows = table.to_pylist()
+        if sink == "fact":
+            created = table.column("created_at").cast(pa.timestamp("ms"), safe=False).cast(pa.int64())
+            return [(batch_of[r["observation_time"].minute], c) for r, c in zip(rows, created.to_pylist())]
+        if sink == "alerts":
+            return [(batch_of[int(r["observation_time"][-2:])], r["timestamp"]) for r in rows]
+        return [(dlq_batch(r["original_value"]), r["timestamp"]) for r in rows]
+
+    dirs = {}
+    for path in glob.glob(f"{out}/**/*", recursive=True):
+        if os.path.isfile(path) and not os.path.basename(path).startswith((".", "_")):
+            dirs.setdefault(os.path.dirname(os.path.relpath(path, out)), []).append(path)
+    assert sorted(dirs) == [
+        "alerts", "archive/kind=normal/obs_date=2025-01-01", "archive/kind=normal/obs_date=2025-01-02",
+        "dlq", "fact/obs_date=2025-01-01", "fact/obs_date=2025-01-02",
+    ]
+    for d, files in dirs.items():
+        batches = []
+        for path in files:
+            rows = stamped(d.split("/")[0], path)
+            if not rows:  # the no-data micro-batch
+                assert dedup and d in ("alerts", "dlq"), f"{path} is empty"
+                batches.append(2)
+                continue
+            assert len({b for b, _ in rows}) == 1, f"{path} mixes micro-batches"
+            batches.append(rows[0][0])
+            assert all(ts is None or ts == clock[b] for b, ts in rows), f"{path} not stamped by its batch clock"
+        # the archive write of batch 0 failed; everything else has both
+        expected = [1] if d.startswith("archive") else [0, 1]
+        assert sorted(batches) == expected + ([2] if dedup and d in ("alerts", "dlq") else []), d
+    dlq = [r for path in dirs["dlq"] for r in pq.read_table(path).to_pylist()]
+    envelopes = [(r["original_value"], r["timestamp"]) for r in dlq if r["error_reason"].startswith("Storage failed")]
+    assert envelopes == [("batch 0", clock[0])]
+    # every unparseable line reaches the DLQ, with or without dedup
+    assert sorted(r["original_value"] for r in dlq if r["error_reason"].startswith("Processing")) == [
+        f"not json {i}" for i in range(8)
+    ]
+
+
+def test_stream_steady_batches_reuse_generated_code(spark, tmp_path, monkeypatch):
+    """Steady micro-batches reuse the sinks' generated classes. Only the
+    batch's source stage compiles again: Spark folds the batch clock
+    into a literal in that stage's code, so its class differs from batch
+    to batch (2 compilation events per batch on pyspark 4.1.2). A sink
+    that stamped its own ``current_timestamp()`` would compile its stage
+    anew every batch (6 events per batch before the batch clock)."""
+    import hrfco_data_pipeline_spark.streaming.pipeline as pl
+
+    src, out, ckpt = str(tmp_path / "src"), str(tmp_path / "out"), str(tmp_path / "ck")
+    _polling_files(src, 12)
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    write_dlq, after = pl.write_dlq, []
+
+    def counted(*a, **k):  # the DLQ write ends every micro-batch
+        write_dlq(*a, **k)
+        after.append(compiled.getCount())
+
+    monkeypatch.setattr(pl, "write_dlq", counted)
+    q = pl.run_stream(spark, pl.observations_file_stream(spark, src), synthetic_stations(spark), out, ckpt)
+    assert q.awaitTermination(300)
+    assert len(after) == 3
+    steady = [after[1] - after[0], after[2] - after[1]]  # batch 0 compiles every stage
+    assert max(steady) <= 2, f"compilations per steady micro-batch: {steady}"
