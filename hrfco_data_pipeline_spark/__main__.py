@@ -66,8 +66,8 @@ def main(argv: list[str] | None = None) -> int:
         print(f"unknown query {args.query!r}{hint}", file=sys.stderr)
         return 2
 
-    # documented eager exceptions: these run their driver-side loop at
-    # plan-build time, so `explain` would execute the full query first
+    # documented eager exceptions: these run Spark jobs at plan-build
+    # time, so `explain` would execute that work first
     EAGER = {
         "events_median_bisect",
         "docs_train_linear_gate",
@@ -77,12 +77,17 @@ def main(argv: list[str] | None = None) -> int:
         # 1-row aggregates) at plan-build time since r9
         "orders_salted_revenue",
         "events_segment_enrichment",
+        # materialize intermediates (_materialized checkpoints) while
+        # the plan is built
+        "docs_select_token_budget",
+        "docs_nb_lang_classifier",
+        "docs_nb_holdout_eval",
+        "docs_learning_curve",
     }
     if args.cmd == "explain" and args.query in EAGER:
         print(
-            f"note: {args.query} executes a driver-side iterative loop "
-            "at call time; building the plan below runs the query "
-            "(see docs/QUERIES.md)",
+            f"note: {args.query} runs Spark jobs at call time; "
+            "building the plan below runs them (see docs/QUERIES.md)",
             file=sys.stderr,
         )
 

@@ -39,8 +39,8 @@ RUNTIME property: AQE's exchange reuse appears only in the executed
 ``isFinalPlan=true`` plan (measured r11: 7-10 ReusedExchange nodes in
 the KS/MW consumers), so a static ``explain`` — which prints every
 branch's subtree — overstates the scan count; see SCALE.md §r11.
-Measured crossover vs the single-task window
-(tools/scale_probe_partitioned_cumsum.py): 2.76× faster at 20M rows,
+Measured crossover vs the single-task window (SCALE.md §r11
+findings): 2.76× faster at 20M rows,
 0.72× at 2M where the sample/offset overhead dominates. The collected
 sample is capped at ``sample_cap`` rows BY CONSTRUCTION: a one-row
 count of the first-level hash sample drives a second-level hash cut

@@ -106,10 +106,9 @@ def choose_join_strategy(
     """Pre-flight profile of a big⋈small equi-join that returns the
     measured SCALE.md decision rule as a value: **broadcast if you
     can, salt if you can't and the key profile shows hot keys, plain
-    otherwise** (the 20M-row/90%-hot probe in
-    ``tools/scale_probe_joins.py``: broadcast 2.5 s < salted 6.4 s
-    when the dim fits; salted beats AQE-skew-split sort-merge
-    4.2-4.5x when it doesn't).
+    otherwise** (the r7 20M-row/90%-hot probe, docs/ROUND7.md §Measured
+    scale probes: broadcast 2.5 s < salted 6.4 s when the dim fits;
+    salted beats AQE-skew-split sort-merge 4.2-4.5x when it doesn't).
 
     Runs TWO bounded actions (an aggregate over the small side and a
     two-level aggregate over the big side's key counts — map-side

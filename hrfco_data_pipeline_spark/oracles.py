@@ -10950,335 +10950,3 @@ RELATIONAL_ORACLES["brand_itemset3_support"] = """
     JOIN c2 pbc ON pbc.ia = c3.ib AND pbc.ib = c3.ic
     WHERE 10000 * c3.n_abc >= 35 * n.n_orders
     """
-
-# ---------------------------------------------------------------------------
-# STAGED r16 oracles — NOT registered in oracle_sql() (the r15 window
-# is pinned at the 16-cap). Move into RELATIONAL_ORACLES alongside the
-# queries() head entries at r16 open. Verified against the staged
-# Spark faces at sf0.001/0.01 by tests/test_r16_staged.py.
-# ---------------------------------------------------------------------------
-
-STAGED_R16_ORACLES: dict[str, str] = {}
-
-# Compaction-invariance certificate: the KS batch face + both flags.
-STAGED_R16_ORACLES["stream_batch_compaction_parity"] = (
-    "WITH b AS ("
-    + RELATIONAL_ORACLES["events_ks_two_sample"]
-    + """)
-    SELECT event_type, n_t, n_rest, d_stat, d_at_value,
-      TRUE AS survives_compaction,
-      TRUE AS matches_batch_face
-    FROM b
-    """
-)
-
-# Association rules from the frequent triples: the itemset oracle's
-# MATERIALIZED CTE skeleton (see the brand_itemset3_support note on
-# DuckDB CTE inlining), three pair-antecedent rules per triple, and
-# the chained-division confidence/lift both engines evaluate
-# identically.
-STAGED_R16_ORACLES["brand_assoc_rules"] = """
-    WITH ob AS MATERIALIZED (
-      SELECT DISTINCT l_orderkey AS ok, p_brand AS b
-      FROM lineitem JOIN part ON l_partkey = p_partkey
-    ), n AS (SELECT count(DISTINCT ok) AS n_orders FROM ob),
-    c1 AS MATERIALIZED (SELECT b, count(*) AS n1 FROM ob GROUP BY b),
-    c2 AS MATERIALIZED (
-      SELECT a.b AS ia, x.b AS ib, count(*) AS n2
-      FROM ob a JOIN ob x ON a.ok = x.ok AND a.b < x.b
-      GROUP BY 1, 2
-    ), c3 AS MATERIALIZED (
-      SELECT a.b AS ia, x.b AS ib, y.b AS ic, count(*) AS n_abc
-      FROM ob a JOIN ob x ON a.ok = x.ok AND a.b < x.b
-                JOIN ob y ON a.ok = y.ok AND x.b < y.b
-      GROUP BY 1, 2, 3
-    ), l3 AS MATERIALIZED (
-      SELECT c3.ia, c3.ib, c3.ic, c3.n_abc,
-        sa.n1 AS n_a, sb.n1 AS n_b, sc.n1 AS n_c,
-        pab.n2 AS n_ab, pac.n2 AS n_ac, pbc.n2 AS n_bc
-      FROM c3
-      CROSS JOIN n
-      JOIN c1 sa ON sa.b = c3.ia
-      JOIN c1 sb ON sb.b = c3.ib
-      JOIN c1 sc ON sc.b = c3.ic
-      JOIN c2 pab ON pab.ia = c3.ia AND pab.ib = c3.ib
-      JOIN c2 pac ON pac.ia = c3.ia AND pac.ib = c3.ic
-      JOIN c2 pbc ON pbc.ia = c3.ib AND pbc.ib = c3.ic
-      WHERE 10000 * c3.n_abc >= 35 * n.n_orders
-    ), rules AS (
-      SELECT ia AS antecedent_a, ib AS antecedent_b, ic AS consequent,
-        n_ab AS n_antecedent, n_abc, n_c AS n_consequent FROM l3
-      UNION ALL
-      SELECT ia, ic, ib, n_ac, n_abc, n_b FROM l3
-      UNION ALL
-      SELECT ib, ic, ia, n_bc, n_abc, n_a FROM l3
-    )
-    SELECT antecedent_a, antecedent_b, consequent,
-      CAST(n_antecedent AS BIGINT) AS n_antecedent,
-      CAST(n_abc AS BIGINT) AS n_abc,
-      CAST(n_consequent AS BIGINT) AS n_consequent,
-      round(CAST(n_abc AS DOUBLE) / CAST(n_antecedent AS DOUBLE), 6)
-        AS confidence,
-      round((CAST(n_abc AS DOUBLE) / CAST(n_antecedent AS DOUBLE))
-            / (CAST(n_consequent AS DOUBLE) / CAST(n.n_orders AS DOUBLE)),
-            6) AS lift
-    FROM rules CROSS JOIN n
-    """
-
-# Token-budget dedup curve: the chaining-sweep recursive-closure
-# skeleton per rung, with the dropped set joined back to exact
-# whitespace token counts. Same-name CTE conventions as the certified
-# sweep oracle.
-STAGED_R16_ORACLES["dedup_token_budget_curve"] = r"""
-    WITH RECURSIVE tok AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-      FROM documents
-    ), tokc AS (
-      SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tok FROM tok
-    ), tot AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_docs_total,
-        CAST(sum(n_tok) AS BIGINT) AS tokens_total
-      FROM tokc
-    ), sh AS (
-      SELECT doc_id,
-        CASE WHEN len(toks) >= 5 THEN
-          list_distinct([array_to_string(toks[i:i+4], ' ')
-                         FOR i IN range(1, len(toks) - 3)])
-        ELSE [] END AS shingles
-      FROM tok
-    ), ex AS (
-      SELECT doc_id, len(shingles) AS n_sh, unnest(shingles) AS s FROM sh
-    ), hot AS (
-      SELECT s FROM ex GROUP BY s HAVING count(*) > 50
-    ), exc AS (
-      SELECT ex.* FROM ex ANTI JOIN hot USING (s)
-    ), pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        a.n_sh AS na, b.n_sh AS nb, count(*) AS common
-      FROM exc a JOIN exc b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2, 3, 4
-    ), jpbase AS (
-      SELECT doc_a, doc_b,
-        CAST(common AS DOUBLE) / (na + nb - common) AS j
-      FROM pairs
-      WHERE CAST(common AS DOUBLE) / (na + nb - common) >= 0.2
-    )
-    , jp_t30 AS (SELECT doc_a, doc_b FROM jpbase WHERE j >= 0.3
-    ), edges_t30 AS (
-      SELECT doc_a AS src, doc_b AS dst FROM jp_t30
-      UNION SELECT doc_b, doc_a FROM jp_t30
-    ), reach_t30 AS (
-      SELECT src AS id, src AS r FROM edges_t30
-      UNION
-      SELECT reach_t30.id, e.dst FROM reach_t30
-        JOIN edges_t30 e ON reach_t30.r = e.src
-    ), comp_t30 AS (
-      SELECT id, min(r) AS component FROM reach_t30 GROUP BY id
-    ), drop_t30 AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_docs_dropped,
-        CAST(COALESCE(sum(n_tok), 0) AS BIGINT) AS tokens_dropped
-      FROM comp_t30 JOIN tokc ON comp_t30.id = tokc.doc_id
-      WHERE id <> component
-    )
-    , jp_t50 AS (SELECT doc_a, doc_b FROM jpbase WHERE j >= 0.5
-    ), edges_t50 AS (
-      SELECT doc_a AS src, doc_b AS dst FROM jp_t50
-      UNION SELECT doc_b, doc_a FROM jp_t50
-    ), reach_t50 AS (
-      SELECT src AS id, src AS r FROM edges_t50
-      UNION
-      SELECT reach_t50.id, e.dst FROM reach_t50
-        JOIN edges_t50 e ON reach_t50.r = e.src
-    ), comp_t50 AS (
-      SELECT id, min(r) AS component FROM reach_t50 GROUP BY id
-    ), drop_t50 AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_docs_dropped,
-        CAST(COALESCE(sum(n_tok), 0) AS BIGINT) AS tokens_dropped
-      FROM comp_t50 JOIN tokc ON comp_t50.id = tokc.doc_id
-      WHERE id <> component
-    )
-    , jp_t70 AS (SELECT doc_a, doc_b FROM jpbase WHERE j >= 0.7
-    ), edges_t70 AS (
-      SELECT doc_a AS src, doc_b AS dst FROM jp_t70
-      UNION SELECT doc_b, doc_a FROM jp_t70
-    ), reach_t70 AS (
-      SELECT src AS id, src AS r FROM edges_t70
-      UNION
-      SELECT reach_t70.id, e.dst FROM reach_t70
-        JOIN edges_t70 e ON reach_t70.r = e.src
-    ), comp_t70 AS (
-      SELECT id, min(r) AS component FROM reach_t70 GROUP BY id
-    ), drop_t70 AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_docs_dropped,
-        CAST(COALESCE(sum(n_tok), 0) AS BIGINT) AS tokens_dropped
-      FROM comp_t70 JOIN tokc ON comp_t70.id = tokc.doc_id
-      WHERE id <> component
-    ), curve AS (
-      SELECT CAST(0.3 AS DOUBLE) AS threshold, * FROM drop_t30
-      UNION ALL
-      SELECT CAST(0.5 AS DOUBLE), * FROM drop_t50
-      UNION ALL
-      SELECT CAST(0.7 AS DOUBLE), * FROM drop_t70
-    )
-    SELECT threshold,
-      tot.n_docs_total,
-      curve.n_docs_dropped,
-      CAST(tot.n_docs_total - curve.n_docs_dropped AS BIGINT)
-        AS n_docs_kept,
-      tot.tokens_total,
-      curve.tokens_dropped,
-      CAST(tot.tokens_total - curve.tokens_dropped AS BIGINT)
-        AS tokens_kept,
-      round(CAST(tot.tokens_total - curve.tokens_dropped AS DOUBLE)
-            / CAST(tot.tokens_total AS DOUBLE), 6) AS kept_token_share
-    FROM curve CROSS JOIN tot
-    """
-
-# k-truss peel rung: dense support-1 co-purchase graph (the support-2
-# substrate is triangle-vacuous above sf0.001 — measured), two
-# per-stage exact-integer rollups. CTEs materialized per the r15
-# inlining rule.
-STAGED_R16_ORACLES["copurchase_truss_peel"] = """
-    WITH op AS MATERIALIZED (
-      SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ), edges0 AS MATERIALIZED (
-      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      FROM op a JOIN op b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ), tri0 AS MATERIALIZED (
-      SELECT e1.u AS x, e1.v AS y, e2.v AS z
-      FROM edges0 e1
-      JOIN edges0 e2 ON e1.v = e2.u
-      JOIN edges0 e3 ON e3.u = e1.u AND e3.v = e2.v
-    ), sup0 AS MATERIALIZED (
-      SELECT u, v, count(*) AS sup FROM (
-        SELECT x AS u, y AS v FROM tri0
-        UNION ALL SELECT y, z FROM tri0
-        UNION ALL SELECT x, z FROM tri0
-      ) GROUP BY 1, 2
-    ), j0 AS (
-      SELECT COALESCE(s.sup, 0) AS sup
-      FROM edges0 e LEFT JOIN sup0 s ON e.u = s.u AND e.v = s.v
-    ), edges1 AS MATERIALIZED (
-      SELECT e.u, e.v
-      FROM edges0 e JOIN sup0 s ON e.u = s.u AND e.v = s.v
-      WHERE s.sup >= 8
-    ), tri1 AS MATERIALIZED (
-      SELECT e1.u AS x, e1.v AS y, e2.v AS z
-      FROM edges1 e1
-      JOIN edges1 e2 ON e1.v = e2.u
-      JOIN edges1 e3 ON e3.u = e1.u AND e3.v = e2.v
-    ), sup1 AS MATERIALIZED (
-      SELECT u, v, count(*) AS sup FROM (
-        SELECT x AS u, y AS v FROM tri1
-        UNION ALL SELECT y, z FROM tri1
-        UNION ALL SELECT x, z FROM tri1
-      ) GROUP BY 1, 2
-    ), j1 AS (
-      SELECT COALESCE(s.sup, 0) AS sup
-      FROM edges1 e LEFT JOIN sup1 s ON e.u = s.u AND e.v = s.v
-    )
-    SELECT CAST(0 AS INTEGER) AS stage,
-      CAST(count(*) AS BIGINT) AS n_edges,
-      CAST(COALESCE(sum(sup), 0) // 3 AS BIGINT) AS n_triangles,
-      CAST(COALESCE(sum(sup), 0) AS BIGINT) AS sum_support,
-      CAST(COALESCE(max(sup), 0) AS BIGINT) AS max_support,
-      CAST(COALESCE(sum(CASE WHEN sup < 8 THEN 1 ELSE 0 END), 0)
-           AS BIGINT) AS n_below_k
-    FROM j0
-    UNION ALL
-    SELECT CAST(1 AS INTEGER),
-      CAST(count(*) AS BIGINT),
-      CAST(COALESCE(sum(sup), 0) // 3 AS BIGINT),
-      CAST(COALESCE(sum(sup), 0) AS BIGINT),
-      CAST(COALESCE(max(sup), 0) AS BIGINT),
-      CAST(COALESCE(sum(CASE WHEN sup < 8 THEN 1 ELSE 0 END), 0)
-           AS BIGINT)
-    FROM j1
-    """
-
-
-# JL distortion histogram: the projection oracle's component
-# expressions verbatim (shared matrix by construction), adjacent-pair
-# join, index-ordered distance folds, explicit floor() band
-# arithmetic (Spark's double->long cast truncates, DuckDB's rounds —
-# floor is the shared form).
-STAGED_R16_ORACLES["embedding_jl_distortion"] = """
-    WITH base AS MATERIALIZED (
-      SELECT vec_id, embedding,
-      sqrt(3) * list_reduce(list_prepend(0.0,
-        list_transform(range(0, len(embedding)),
-          i -> CAST(embedding[i + 1] AS DOUBLE) *
-               (CASE ((i * 8 + 0) * 2654435761) % 2147483648 % 6
-                WHEN 0 THEN 1.0 WHEN 1 THEN -1.0 ELSE 0.0 END))),
-        (acc, x) -> acc + x) AS p0,
-      sqrt(3) * list_reduce(list_prepend(0.0,
-        list_transform(range(0, len(embedding)),
-          i -> CAST(embedding[i + 1] AS DOUBLE) *
-               (CASE ((i * 8 + 1) * 2654435761) % 2147483648 % 6
-                WHEN 0 THEN 1.0 WHEN 1 THEN -1.0 ELSE 0.0 END))),
-        (acc, x) -> acc + x) AS p1,
-      sqrt(3) * list_reduce(list_prepend(0.0,
-        list_transform(range(0, len(embedding)),
-          i -> CAST(embedding[i + 1] AS DOUBLE) *
-               (CASE ((i * 8 + 2) * 2654435761) % 2147483648 % 6
-                WHEN 0 THEN 1.0 WHEN 1 THEN -1.0 ELSE 0.0 END))),
-        (acc, x) -> acc + x) AS p2,
-      sqrt(3) * list_reduce(list_prepend(0.0,
-        list_transform(range(0, len(embedding)),
-          i -> CAST(embedding[i + 1] AS DOUBLE) *
-               (CASE ((i * 8 + 3) * 2654435761) % 2147483648 % 6
-                WHEN 0 THEN 1.0 WHEN 1 THEN -1.0 ELSE 0.0 END))),
-        (acc, x) -> acc + x) AS p3,
-      sqrt(3) * list_reduce(list_prepend(0.0,
-        list_transform(range(0, len(embedding)),
-          i -> CAST(embedding[i + 1] AS DOUBLE) *
-               (CASE ((i * 8 + 4) * 2654435761) % 2147483648 % 6
-                WHEN 0 THEN 1.0 WHEN 1 THEN -1.0 ELSE 0.0 END))),
-        (acc, x) -> acc + x) AS p4,
-      sqrt(3) * list_reduce(list_prepend(0.0,
-        list_transform(range(0, len(embedding)),
-          i -> CAST(embedding[i + 1] AS DOUBLE) *
-               (CASE ((i * 8 + 5) * 2654435761) % 2147483648 % 6
-                WHEN 0 THEN 1.0 WHEN 1 THEN -1.0 ELSE 0.0 END))),
-        (acc, x) -> acc + x) AS p5,
-      sqrt(3) * list_reduce(list_prepend(0.0,
-        list_transform(range(0, len(embedding)),
-          i -> CAST(embedding[i + 1] AS DOUBLE) *
-               (CASE ((i * 8 + 6) * 2654435761) % 2147483648 % 6
-                WHEN 0 THEN 1.0 WHEN 1 THEN -1.0 ELSE 0.0 END))),
-        (acc, x) -> acc + x) AS p6,
-      sqrt(3) * list_reduce(list_prepend(0.0,
-        list_transform(range(0, len(embedding)),
-          i -> CAST(embedding[i + 1] AS DOUBLE) *
-               (CASE ((i * 8 + 7) * 2654435761) % 2147483648 % 6
-                WHEN 0 THEN 1.0 WHEN 1 THEN -1.0 ELSE 0.0 END))),
-        (acc, x) -> acc + x) AS p7
-      FROM embeddings
-    ), pr AS (
-      SELECT
-        list_reduce(list_prepend(0.0,
-          list_transform(range(0, len(a.embedding)),
-            i -> (CAST(a.embedding[i + 1] AS DOUBLE)
-                  - CAST(b.embedding[i + 1] AS DOUBLE))
-                 * (CAST(a.embedding[i + 1] AS DOUBLE)
-                    - CAST(b.embedding[i + 1] AS DOUBLE)))),
-          (acc, x) -> acc + x) AS d2o,
-        (a.p0 - b.p0) * (a.p0 - b.p0) + (a.p1 - b.p1) * (a.p1 - b.p1) + (a.p2 - b.p2) * (a.p2 - b.p2) + (a.p3 - b.p3) * (a.p3 - b.p3) + (a.p4 - b.p4) * (a.p4 - b.p4) + (a.p5 - b.p5) * (a.p5 - b.p5) + (a.p6 - b.p6) * (a.p6 - b.p6) + (a.p7 - b.p7) * (a.p7 - b.p7) AS d2p
-      FROM base a JOIN base b
-        ON a.vec_id % 2 = 0 AND b.vec_id = a.vec_id + 1
-    ), rn AS (
-      SELECT CAST(floor(d2p / d2o / 8.0 * 1e9) AS BIGINT) AS rn
-      FROM pr WHERE d2o > 0.0
-    ), banded AS (
-      SELECT rn,
-        CAST(least(floor(rn / 250000000.0), 12) AS INTEGER) AS band
-      FROM rn
-    )
-    SELECT band,
-      CAST(count(*) AS BIGINT) AS n_pairs,
-      CAST(min(rn) AS BIGINT) AS min_ratio_nano,
-      CAST(max(rn) AS BIGINT) AS max_ratio_nano,
-      CAST(sum(rn) AS BIGINT) AS sum_ratio_nano
-    FROM banded GROUP BY band
-    """

@@ -1248,7 +1248,8 @@ def station_crosscorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE task holding every day row, and the |stations|²×3 pair
     # generate below it ran serially in that task (SQL profile: 922 ms
     # in WholeStageCodegen over Generate, 1.27 M rows from one task).
-    # The day frame is bounded (|days| rows of station arrays), so a
+    # Contract: the day frame is |days| rows by construction (``byday``
+    # groups by day and the lag/lead select keeps its row count), so a
     # round-robin spread ahead of the explode is metadata-scale and the
     # fan-out then runs at full parallelism.
     framed = framed.repartition(spark.sparkContext.defaultParallelism)

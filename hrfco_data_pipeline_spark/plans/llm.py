@@ -2739,7 +2739,13 @@ def docs_select_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     The global cumulative sum runs through operators/ranking.
     ranked_cumsum — range-bucketed two-pass prefix sums, no
     single-partition sort of the corpus — so the plan survives the
-    100 TB documents table."""
+    100 TB documents table.
+
+    EAGER: ``scored`` (doc_id, quality, token count) is materialized
+    when the plan is built, not when it runs. That build-time job
+    scans and scores the whole corpus, so its cost grows with the
+    corpus, and the returned plan reads a snapshot fixed at build
+    time: a documents table that changes afterwards is not seen."""
     from hrfco_data_pipeline_spark.operators.ranking import ranked_cumsum
 
     budget = 15_000
@@ -8101,170 +8107,4 @@ def multimodal_patch_energy_profile(spark: SparkSession, sf_dir: str) -> DataFra
             F.col("e_tot") > 0,
             F.col("e_max").cast("double") / F.col("e_tot").cast("double"),
         ).alias("max_patch_share"),
-    )
-
-
-def dedup_token_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED for the r16 head (docs/ROUND15.md candidate list; not
-    yet registered): the dedup threshold decision priced in KEPT
-    TRAINING TOKENS rather than document counts — per Jaccard rung
-    {0.3, 0.5, 0.7}, the component-closure keep policy's surviving
-    corpus size in exact whitespace tokens, next to the doc counts.
-    Two thresholds that drop similar doc counts can retire very
-    different token volumes (near-dup clusters skew long); this is
-    the capacity-planning face the budget decision actually needs.
-
-    Composition: the certified banded/hot-capped pair table builds
-    ONCE (docs_ngram_jaccard_pairs materializes); one (doc_id, n_tok)
-    projection MATERIALIZES for its four consumers (corpus totals +
-    three per-rung dropped-set joins); per rung, ONE pointer-jumping
-    CC on the monotonically shrinking pair graph (pairs, never docs)
-    and a doc_id-keyed join of the dropped set back to token counts.
-    All counts exact longs; kept_token_share is one IEEE division.
-
-    Non-vacuous by construction at every SF: the 0.3 rung's pair
-    graph is non-empty wherever the certified chaining sweep's is.
-    """
-    from hrfco_data_pipeline_spark.operators.dedup import (
-        _materialized,
-        connected_components,
-    )
-
-    thresholds = [0.3, 0.5, 0.7]
-    docs = _materialized(
-        load_table(spark, sf_dir, "documents").select(
-            "doc_id", F.size(_tokens()).cast("long").alias("n_tok")
-        )
-    )
-    totals = docs.agg(
-        F.count("*").cast("long").alias("n_docs_total"),
-        F.sum("n_tok").cast("long").alias("tokens_total"),
-    )
-    pairs = docs_ngram_jaccard_pairs(spark, sf_dir)
-    per_rung = []
-    for t in thresholds:
-        comp = connected_components(
-            pairs.filter(F.col("jaccard") >= t),
-            "doc_a",
-            "doc_b",
-            distinct_pairs=True,
-        )
-        dropped = comp.filter(F.col("id") != F.col("component")).select(
-            F.col("id").alias("doc_id")
-        )
-        per_rung.append(
-            dropped.join(docs, "doc_id").agg(
-                F.lit(t).alias("threshold"),
-                F.count("*").cast("long").alias("n_docs_dropped"),
-                F.coalesce(F.sum("n_tok"), F.lit(0))
-                .cast("long")
-                .alias("tokens_dropped"),
-            )
-        )
-    curve = per_rung[0]
-    for df in per_rung[1:]:
-        curve = curve.unionByName(df)
-    out = curve.crossJoin(F.broadcast(totals))
-    kept_docs = F.col("n_docs_total") - F.col("n_docs_dropped")
-    kept_toks = F.col("tokens_total") - F.col("tokens_dropped")
-    return out.select(
-        F.col("threshold").cast("double").alias("threshold"),
-        "n_docs_total",
-        "n_docs_dropped",
-        kept_docs.cast("long").alias("n_docs_kept"),
-        "tokens_total",
-        "tokens_dropped",
-        kept_toks.cast("long").alias("tokens_kept"),
-        F.round(
-            kept_toks.cast("double") / F.col("tokens_total").cast("double"),
-            6,
-        ).alias("kept_token_share"),
-    )
-
-
-def embedding_jl_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED for the r16 head (docs/ROUND15.md candidate list; not
-    yet registered): Johnson-Lindenstrauss distortion audit of the
-    certified Achlioptas projection — does the 8-component sketch
-    preserve pairwise geometry well enough for the dedup/ANN indexes
-    built on it? Over the deterministic consecutive-pair sample
-    (vec 2k with vec 2k+1 — no sampling RNG, no pair explosion), the
-    normalized squared-distance ratio r = ||p(a)−p(b)||² /
-    (8·||a−b||²) — expectation 1 under the JL lemma — nano-quantized
-    and rolled into 0.25-wide histogram bands with exact min/max/sum
-    per band. A projection bug (wrong sign hash, dropped component,
-    broken scale) moves the whole histogram; heavy tails mean the
-    8-dim sketch is too coarse for the corpus.
-
-    Exactness: both distance folds are index-ordered IEEE chains
-    mirrored op-for-op in DuckDB (the projection's own oracle
-    convention); the ratio is the two-division left chain on
-    identical operands; floor(r·1e9) is exact; band arithmetic is
-    integer. sum_ratio_nano ≤ n_pairs·O(5e9) ≈ 2.5e13 at sf0.1 —
-    three orders under 2^53 (audited ceiling class). Zero-distance
-    originals (exact duplicate vectors) are excluded — r is
-    undefined there and the dedup family owns that case.
-
-    Scale shape: the projected-plus-raw frame MATERIALIZES once (at
-    100 TB this is the projection table you persist anyway); the
-    pair join is vec_id-adjacent (equi-join on vec_id+1, no
-    fan-out); the rollup is a bounded 13-band grid.
-    """
-    from hrfco_data_pipeline_spark.operators.dedup import _materialized
-    from hrfco_data_pipeline_spark.operators.similarity import (
-        as_double_vec,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    v = emb.select("vec_id", as_double_vec("embedding", "v"))
-    proj = _materialized(
-        v.select(
-            "vec_id",
-            "v",
-            *[
-                _achlioptas_component("v", j).alias(f"p{j}")
-                for j in range(8)
-            ],
-        )
-    )
-    a, b = proj.alias("a"), proj.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.vec_id") % 2 == 0)
-        & (F.col("b.vec_id") == F.col("a.vec_id") + 1),
-    )
-    d = F.size(F.col("a.v"))
-    ea = lambda i: F.element_at(F.col("a.v"), (i + 1).cast("int"))  # noqa: E731
-    eb = lambda i: F.element_at(F.col("b.v"), (i + 1).cast("int"))  # noqa: E731
-    d2o = F.aggregate(
-        F.sequence(F.lit(0), d - 1),
-        F.lit(0.0),
-        lambda acc, i: acc + (ea(i) - eb(i)) * (ea(i) - eb(i)),
-    )
-    d2p = None
-    for j in range(8):
-        term = (F.col(f"a.p{j}") - F.col(f"b.p{j}")) * (
-            F.col(f"a.p{j}") - F.col(f"b.p{j}")
-        )
-        d2p = term if d2p is None else d2p + term
-    staged = pairs.select(
-        d2o.alias("d2o"), d2p.alias("d2p")
-    ).filter(F.col("d2o") > 0.0)
-    ratio_nano = F.floor(
-        F.col("d2p") / F.col("d2o") / F.lit(8.0) * F.lit(1e9)
-    ).cast("long")
-    banded = staged.select(
-        ratio_nano.alias("rn"),
-        # explicit floor in BOTH engines: Spark's double->long cast
-        # truncates while DuckDB's ROUNDS — floor() is the one form
-        # they share (positives only here)
-        F.least(
-            F.floor(ratio_nano / F.lit(250_000_000.0)), F.lit(12)
-        ).cast("int").alias("band"),
-    )
-    return banded.groupBy("band").agg(
-        F.count("*").cast("long").alias("n_pairs"),
-        F.min("rn").alias("min_ratio_nano"),
-        F.max("rn").alias("max_ratio_nano"),
-        F.sum("rn").alias("sum_ratio_nano"),
     )

@@ -5219,8 +5219,8 @@ def kmv_bottomk_from_raw(
     threshold thr = min(2^31, c·k·2^31/n + 1) prunes BELOW the
     distinct, and the distinct + two-phase windows then run over
     ~c·k·dup rows per type instead of the full set. At scale every
-    post-scan exchange is sketch-sized; tools/scale_probe_kmv.py
-    measures the A/B.
+    post-scan exchange is sketch-sized (measured A/B: SCALE.md §r8
+    additions, "Prune below the distinct").
 
     Bit-identical to kmv_kmin(raw.distinct()) whenever thr exceeds the
     true k-th smallest hash: the k-th smallest of n uniform 31-bit
@@ -5252,9 +5252,7 @@ def kmv_bottomk_from_raw(
     return kmv_kmin(survivors, k)
 
 
-def kmv_pair_estimates(
-    kmin: DataFrame, k: int = 64, materialize: bool = True
-) -> DataFrame:
+def kmv_pair_estimates(kmin: DataFrame, k: int = 64) -> DataFrame:
     """Distinct-count estimates per event-type pair from bottom-k
     sketches: per-type estimate (k-1)·2^31/kth, union sketch = k
     smallest of the merged k-mins, intersection by inclusion-exclusion.
@@ -5270,17 +5268,10 @@ def kmv_pair_estimates(
     table is ≤ k·|types| rows BY CONSTRUCTION (the bounded-metadata
     contract of a bottom-k sketch), so it is materialized once here
     and every branch reads the checkpoint instead of re-deriving it.
-
-    ``materialize=False`` keeps the function lazy (no Spark job, no
-    checkpoint write at construction) for audit/timing callers —
-    plan dumps, ``tools/scale_probe_kmv.py``'s construction-vs-collect
-    split — the ``lsh_candidate_pairs`` precedent (ADVICE r16).
     """
-    kmin = kmin.select("event_type", "h")
-    if materialize:
-        from hrfco_data_pipeline_spark.operators.dedup import _materialized
+    from hrfco_data_pipeline_spark.operators.dedup import _materialized
 
-        kmin = _materialized(kmin)
+    kmin = _materialized(kmin.select("event_type", "h"))
     M = 2_147_483_648  # 2^31
 
     def est(kth, sk_n):
@@ -5756,7 +5747,7 @@ def events_sampled_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_lateness_values(
+def _events_lateness_values(
     ev: DataFrame, bucket_rows: int = 4096
 ) -> DataFrame:
     """Per-event arrival-order lateness (event_id, event_type,
@@ -5837,7 +5828,7 @@ def events_watermark_lateness_audit(
     prefix split) — the oracle runs the plain global form.
     """
     ev = load_table(spark, sf_dir, "events")
-    lat = events_lateness_values(ev, bucket_rows).select(
+    lat = _events_lateness_values(ev, bucket_rows).select(
         "event_type", "lateness_us"
     )
     q = _disc_quantiles(
@@ -8382,7 +8373,7 @@ def lateness_parity_report(
         F.col("max_us").alias("b_max"),
     )
     ev = load_table(spark, sf_dir, "events")
-    lat = events_lateness_values(ev)
+    lat = _events_lateness_values(ev)
     est = _disc_quantiles(
         lat.filter(qsample_filter(F.col("event_id"))).select(
             "event_type", F.col("lateness_us").alias("value")
@@ -8918,251 +8909,4 @@ def brand_itemset3_support(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.col("n_abc").cast("double") / F.lit(float(n_orders)), 6
         ).alias("support_share"),
-    )
-
-
-def brand_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED for the r16 head (docs/ROUND15.md candidate list; not
-    yet registered): association rules {x, y} -> z from the certified
-    frequent triples — for each L3 itemset, its three pair-antecedent
-    rules with exact supports, confidence = n_xyz / n_xy (one IEEE
-    division of exact longs), and lift = confidence / (n_z /
-    n_orders) (the chained-division form both engines evaluate
-    identically; no integer product crosses into the double domain).
-    The "customers who buy x and y also buy z" table Apriori exists
-    to produce; reads ONLY the miner's bounded output (triples are
-    grid-bounded), so the rule fan-out is 3 rows per frequent triple
-    and the plan adds zero scans beyond _brand_itemset3_base.
-    """
-    enriched, n_orders = _brand_itemset3_base(spark, sf_dir)
-    rule = lambda x, y, z, nxy, nz: enriched.select(  # noqa: E731
-        F.col(x).alias("antecedent_a"),
-        F.col(y).alias("antecedent_b"),
-        F.col(z).alias("consequent"),
-        F.col(nxy).alias("n_antecedent"),
-        "n_abc",
-        F.col(nz).alias("n_consequent"),
-    )
-    rules = (
-        rule("ia", "ib", "ic", "n_ab", "n_c")
-        .unionByName(rule("ia", "ic", "ib", "n_ac", "n_b"))
-        .unionByName(rule("ib", "ic", "ia", "n_bc", "n_a"))
-    )
-    conf = F.col("n_abc").cast("double") / F.col("n_antecedent").cast(
-        "double"
-    )
-    base = F.col("n_consequent").cast("double") / F.lit(float(n_orders))
-    return rules.select(
-        "antecedent_a",
-        "antecedent_b",
-        "consequent",
-        "n_antecedent",
-        "n_abc",
-        "n_consequent",
-        F.round(conf, 6).alias("confidence"),
-        F.round(conf / base, 6).alias("lift"),
-    )
-
-
-def stream_batch_compaction_parity(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """STAGED for the r16 head (docs/ROUND15.md candidate list; not
-    yet registered — the r15 window is pinned at the 16-cap): a
-    compaction-INVARIANCE certificate, the first of the
-    storage-maintenance class. The streaming↔batch parity family
-    certifies that maintainer stores serve batch-identical results;
-    this certifies that `compact_appended` — the fold that keeps
-    listing costs bounded on long streams — preserves them: build the
-    KS-drift store in availableNow micro-batches, serve the report,
-    FORCE the staged-swap fold, serve again from the flattened table,
-    and emit the per-type rows next to BOTH a survives_compaction
-    flag (pre == post row equality) and the usual matches-batch-face
-    flag. A fold bug (dropped b-dir, lost marker, partial flatten)
-    breaks post-rows AND both flags; the oracle is the batch face's
-    own SQL + TRUE + TRUE.
-
-    The pre-fold serving frame MATERIALIZES before the fold runs —
-    read_appended is lazy, and a lazy pre-frame would silently read
-    the post-fold table and certify a tautology (the vacuity lesson
-    applied at design time).
-
-    EAGER query: streaming run + fold execute at call time into a
-    session temp dir. At scale the certificate brackets a real
-    scheduled compaction of an existing store.
-    """
-    from hrfco_data_pipeline_spark.streaming.curation import (
-        compact_appended,
-        ks_drift_stream,
-        run_parity_stream,
-    )
-
-    from hrfco_data_pipeline_spark.operators.dedup import _materialized
-    from hrfco_data_pipeline_spark.streaming.curation import (
-        ks_report_from_counts,
-    )
-
-    # r16 (guide §2.3): stage only the maintainer's columns.
-    ev = load_table(spark, sf_dir, "events").select("event_type", "value")
-    # n_files=2 (r17, verdict item 2): additive count partials — the
-    # certificate's subject is the FOLD (compact_appended), which still
-    # folds 2 b-dirs + marker exactly as before.
-    table = run_parity_stream(
-        spark, ev, ks_drift_stream, "hrfco_compact_parity_", n_files=2
-    )
-    pre = _materialized(ks_report_from_counts(spark, table))
-    compact_appended(spark, table)
-    return compaction_parity_report(spark, sf_dir, table, pre)
-
-
-def compaction_parity_report(
-    spark: SparkSession, sf_dir: str, table: str, pre: DataFrame
-) -> DataFrame:
-    """The serve-vs-pre-vs-batch tail of
-    stream_batch_compaction_parity, factored out so the negative-path
-    test can drop a committed b-dir before forcing the fold (a lost
-    batch mid-compaction) and watch both flags flip. ``pre`` is the
-    MATERIALIZED pre-fold report (the certificate materializes it
-    before folding — a lazy pre would re-read the post-fold table and
-    certify a tautology)."""
-    from hrfco_data_pipeline_spark.operators.dedup import _materialized
-    from hrfco_data_pipeline_spark.streaming.curation import (
-        ks_report_from_counts,
-    )
-
-    post = _materialized(ks_report_from_counts(spark, table))
-    p = pre.select(
-        F.col("event_type").alias("p_et"),
-        F.col("n_t").alias("p_nt"),
-        F.col("n_rest").alias("p_nr"),
-        F.col("d_stat").alias("p_d"),
-        F.col("d_at_value").alias("p_dv"),
-    )
-    batch = events_ks_two_sample(spark, sf_dir).select(
-        F.col("event_type").alias("b_et"),
-        F.col("n_t").alias("b_nt"),
-        F.col("n_rest").alias("b_nr"),
-        F.col("d_stat").alias("b_d"),
-        F.col("d_at_value").alias("b_dv"),
-    )
-    j = post.join(p, post["event_type"] == p["p_et"], "full_outer").join(
-        batch, post["event_type"] == batch["b_et"], "full_outer"
-    )
-    return j.select(
-        F.coalesce(F.col("event_type"), F.col("p_et"), F.col("b_et")).alias(
-            "event_type"
-        ),
-        F.col("n_t"),
-        F.col("n_rest"),
-        F.col("d_stat"),
-        F.col("d_at_value"),
-        (
-            F.col("n_t").eqNullSafe(F.col("p_nt"))
-            & F.col("n_rest").eqNullSafe(F.col("p_nr"))
-            & F.col("d_stat").eqNullSafe(F.col("p_d"))
-            & F.col("d_at_value").eqNullSafe(F.col("p_dv"))
-        ).alias("survives_compaction"),
-        (
-            F.col("n_t").eqNullSafe(F.col("b_nt"))
-            & F.col("n_rest").eqNullSafe(F.col("b_nr"))
-            & F.col("d_stat").eqNullSafe(F.col("b_d"))
-            & F.col("d_at_value").eqNullSafe(F.col("b_dv"))
-        ).alias("matches_batch_face"),
-    )
-
-
-def copurchase_truss_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED for the r16 head (docs/ROUND15.md candidate list; not
-    yet registered): one k-truss peel iteration (k = 10) on the DENSE
-    co-purchase graph — edges = part pairs co-ordered at least once
-    (the support-2 substrate the triangle/k-core family uses goes
-    triangle-vacuous above sf0.001: 0 edges with truss support >= 2
-    at sf0.1, measured — the design-time vacuity rule applied), with
-    per-stage exact-integer rollups: stage 0 is the full graph, stage
-    1 the subgraph of edges whose stage-0 triangle support clears
-    k - 2 = 8, re-counted. Emits per stage the edge count, triangle
-    count, support sum/max, and how many edges fall below the bar —
-    the peel-convergence signal a full truss decomposition iterates
-    on. All-integer emission (counts and sums of counts); zero FP.
-
-    Measured selectivity (edges with support >= 8 / edges): 8899/8899
-    at sf0.001 (max support 85), 93k/116k at sf0.01, 130k/1.2M at
-    sf0.1 — the peel bites harder as the graph grows, exactly the
-    regime a truss decomposition exists for.
-
-    Scale shape: triangle enumeration is the certified
-    copurchase_triangles wedge pattern (orient low->high, wedge join
-    on the middle vertex, closure equi-join; at 100 TB orient by
-    (degree, id) so no out-list exceeds O(sqrt |E|)); the edge table
-    MATERIALIZES once per stage and feeds all three join legs; the
-    support aggregation is a union-all of the three edge projections
-    of the triangle set with map-side partials. Stage-1 re-counts on
-    the (much smaller) surviving edge set only.
-    """
-    from hrfco_data_pipeline_spark.operators.dedup import _materialized
-
-    k_sup = 8  # k-truss with k = 10: every edge needs >= k-2 triangles
-    li = load_table(spark, sf_dir, "lineitem")
-    op = li.select("l_orderkey", "l_partkey").distinct()
-    a, b = op.alias("a"), op.alias("b")
-    edges0 = _materialized(
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("u"),
-            F.col("b.l_partkey").alias("v"),
-        )
-        .distinct()
-    )
-
-    def supports(edges: DataFrame) -> DataFrame:
-        e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
-        tri = (
-            e1.join(e2, F.col("e1.v") == F.col("e2.u"))
-            .join(
-                e3,
-                (F.col("e3.u") == F.col("e1.u"))
-                & (F.col("e3.v") == F.col("e2.v")),
-            )
-            .select(
-                F.col("e1.u").alias("x"),
-                F.col("e1.v").alias("y"),
-                F.col("e2.v").alias("z"),
-            )
-        )
-        sides = (
-            tri.select(F.col("x").alias("u"), F.col("y").alias("v"))
-            .unionAll(tri.select(F.col("y").alias("u"), F.col("z").alias("v")))
-            .unionAll(tri.select(F.col("x").alias("u"), F.col("z").alias("v")))
-        )
-        return sides.groupBy("u", "v").agg(F.count("*").alias("sup"))
-
-    def stage_row(edges: DataFrame, sup: DataFrame, stage: int) -> DataFrame:
-        joined = edges.join(sup, ["u", "v"], "left").select(
-            F.coalesce(F.col("sup"), F.lit(0)).alias("sup")
-        )
-        return joined.agg(
-            F.lit(stage).cast("int").alias("stage"),
-            F.count("*").cast("long").alias("n_edges"),
-            # every triangle contributes its three sides within the
-            # same edge set, so sum_support div 3 is exact
-            F.expr("sum(sup) div 3").cast("long").alias("n_triangles"),
-            F.sum("sup").cast("long").alias("sum_support"),
-            F.max("sup").cast("long").alias("max_support"),
-            F.sum(F.when(F.col("sup") < k_sup, 1).otherwise(0))
-            .cast("long")
-            .alias("n_below_k"),
-        )
-
-    sup0 = _materialized(supports(edges0))
-    edges1 = _materialized(
-        edges0.join(
-            sup0.filter(F.col("sup") >= k_sup).select("u", "v"), ["u", "v"]
-        )
-    )
-    return stage_row(edges0, sup0, 0).unionByName(
-        stage_row(edges1, supports(edges1), 1)
     )

@@ -358,7 +358,7 @@ def wire_csv_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     Corruption for CSV is column-count-based (a truncated line is
     still 'valid' CSV, unlike JSON): rows with < 4 fields fail the
     contract. One scan + one bounded-key aggregate; all counts exact."""
-    obs = synthetic_wire_csv(spark, sf_dir)
+    obs = _synthetic_wire_csv(spark, sf_dir)
     n_fields = F.size(F.split(F.col("value"), ",", -1))
     parsed = obs.select(
         "obs_id",
@@ -382,7 +382,7 @@ def wire_csv_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def synthetic_wire_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _synthetic_wire_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV-encoded observation records (nulls as empty fields); every
     53rd truncated to 7 chars — the delimiter twin of synthetic_wire."""
     from hrfco_data_pipeline_spark.sources.synthetic import (

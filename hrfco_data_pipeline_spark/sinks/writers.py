@@ -2,9 +2,9 @@
 
 Reference semantics → Spark-idiomatic form:
 - W3 MinIO JSON archive (HRFCOStorageService.java:143-158):
-  ``{kind}/{date}`` partitioned files. We partition by *event* date by
-  default (the reference uses wall-clock now — HRFCOStorageService.java:
-  207 — set ``parity_mode=True`` to reproduce that quirk).
+  ``{kind}/{date}`` partitioned files. We partition by *event* date, not
+  the reference's wall-clock now (HRFCOStorageService.java:207), whose
+  path date would differ when a batch is replayed.
 - W4 Timescale hypertable append (TimescaleDBRepository.java:136-161):
   date-partitioned parquet — hypertable ≙ time partitioning; bucket or
   Z-order by observation_code stands in for the secondary indexes.
@@ -32,25 +32,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def write_archive(
-    classified: DataFrame,
-    path: str,
-    fmt: str = "json",
-    parity_mode: bool = False,
-) -> None:
-    """W3: kind/date-partitioned raw archive."""
+def write_archive(classified: DataFrame, path: str) -> None:
+    """W3: kind/event-date-partitioned JSON archive."""
     kind = F.when(F.col("is_anomaly"), "anomalies").otherwise("normal")
-    if parity_mode:
-        date = F.date_format(F.current_timestamp(), "yyyy-MM-dd")
-    else:
-        date = F.substring("obs_time_str", 1, 10)
+    date = F.substring("obs_time_str", 1, 10)
     out = classified.withColumn("kind", kind).withColumn("obs_date", date)
-    (
-        out.write.partitionBy("kind", "obs_date")
-        .mode("append")
-        .format(fmt)
-        .save(path)
-    )
+    out.write.partitionBy("kind", "obs_date").mode("append").json(path)
 
 
 def write_fact(classified: DataFrame, path: str, now: str) -> None:

@@ -172,7 +172,7 @@ def run_stream(
             sinks = (
                 (
                     "archive",
-                    lambda: write_archive(classified.drop(BATCH_TS), f"{out_dir}/archive", fmt="json"),
+                    lambda: write_archive(classified.drop(BATCH_TS), f"{out_dir}/archive"),
                 ),
                 ("fact", lambda: write_fact(classified, f"{out_dir}/fact", now=BATCH_TS)),
                 ("alerts", write_alerts),

@@ -44,10 +44,9 @@ def test_no_duplicate_toplevel_functions(path):
     )
 
 
-def test_no_reassigned_oracle_keys():
-    """Each ``<FAMILY>_ORACLES["name"] = ...`` key must be assigned
-    exactly once across the module (including the dict-literal
-    initializers), or one oracle silently replaces another."""
+def _oracle_key_assignments() -> Counter:
+    """Count each ``(<FAMILY>_ORACLES, key)`` assignment in oracles.py,
+    both dict-literal initializers and subscript assignments."""
     tree = ast.parse((PKG / "oracles.py").read_text())
     keys: Counter = Counter()
     for node in ast.walk(tree):
@@ -74,8 +73,31 @@ def test_no_reassigned_oracle_keys():
                     and isinstance(t.slice, ast.Constant)
                 ):
                     keys[(t.value.id, t.slice.value)] += 1
+    return keys
+
+
+def test_no_reassigned_oracle_keys():
+    """Each ``<FAMILY>_ORACLES["name"] = ...`` key must be assigned
+    exactly once across the module (including the dict-literal
+    initializers), or one oracle silently replaces another."""
+    keys = _oracle_key_assignments()
     dups = sorted(f"{d}[{k!r}]" for (d, k), c in keys.items() if c > 1)
     assert not dups, f"oracle keys assigned more than once: {dups}"
+
+
+def test_every_oracle_key_is_a_registered_query():
+    """An oracle for a query that ``queries()`` does not register is
+    dead code: no check ever runs it. Register the query with its
+    oracle or delete both."""
+    import __spark_entry__
+
+    registered = set(__spark_entry__.queries())
+    staged = sorted(
+        f"{d}[{k!r}]"
+        for d, k in _oracle_key_assignments()
+        if k not in registered
+    )
+    assert not staged, f"oracles for unregistered queries: {staged}"
 
 
 def test_no_cross_module_plan_name_collisions():

@@ -12,8 +12,29 @@ import sys
 
 sys.path.insert(0, ".")
 
+from hrfco_data_pipeline_spark.plans import llm, relational  # noqa: E402
 from hrfco_data_pipeline_spark.session import get_spark  # noqa: E402
 import __spark_entry__ as entry_mod  # noqa: E402
+
+# queries that eagerly materialize (checkpointed pair sets, driver-side
+# folds) would audit as a bare ExistingRDD scan — ask for the lazy inner
+# plan instead
+LAZY_OVERRIDES = {
+    "docs_ngram_jaccard_pairs": lambda s, d: llm.docs_ngram_jaccard_pairs(
+        s, d, materialize=False
+    ),
+    "copurchase_triangles": lambda s, d: relational.copurchase_triangles(
+        s, d, materialize=False
+    ),
+    # one lazy iteration shows the per-round shape; 5 lazy rounds
+    # would re-embed the upstream tree exponentially (~2 MB plan)
+    "nation_trade_pagerank": lambda s, d: relational.nation_trade_pagerank(
+        s, d, iters=1, materialize=False
+    ),
+    "copurchase_jaccard_parts": lambda s, d: (
+        relational.copurchase_jaccard_parts(s, d, materialize=False)
+    ),
+}
 
 AUDIT = [
     "q1_pricing_summary",
@@ -225,35 +246,13 @@ def main() -> None:
     spark = get_spark(app_name="plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
     queries = entry_mod.queries()
-    # queries that eagerly materialize (checkpointed pair sets) would
-    # audit as a bare ExistingRDD scan — ask for the lazy inner plan
-    from hrfco_data_pipeline_spark.plans import llm
-
-    from hrfco_data_pipeline_spark.plans import relational
-
-    lazy_overrides = {
-        "docs_ngram_jaccard_pairs": lambda s, d: llm.docs_ngram_jaccard_pairs(
-            s, d, materialize=False
-        ),
-        "copurchase_triangles": lambda s, d: relational.copurchase_triangles(
-            s, d, materialize=False
-        ),
-        # one lazy iteration shows the per-round shape; 5 lazy rounds
-        # would re-embed the upstream tree exponentially (~2 MB plan)
-        "nation_trade_pagerank": lambda s, d: relational.nation_trade_pagerank(
-            s, d, iters=1, materialize=False
-        ),
-        "copurchase_jaccard_parts": lambda s, d: (
-            relational.copurchase_jaccard_parts(s, d, materialize=False)
-        ),
-    }
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
     out = ["# Physical plan audit", "",
            f"Generated by tools/dump_plans.py over {sf_dir}.", ""]
     for name in AUDIT:
-        fn = lazy_overrides.get(name, queries[name])
+        fn = LAZY_OVERRIDES.get(name, queries[name])
         plan = (
             fn(spark, sf_dir)
             ._jdf.queryExecution()

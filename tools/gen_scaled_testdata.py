@@ -18,7 +18,9 @@ STRICTLY a measurement instrument:
     duplicate-text rates shift under replication); the oracle gate
     stays at the driver SFs.
 
-Key shifts per replica i (i = 0 keeps the original rows bit-identical):
+Key shifts per replica i (i = 0 keeps the original key values; with
+K > 1 its document text still gets the " replica0" suffix, so no
+replica repeats the sf0.1 rows bit for bit):
   orders.o_orderkey/lineitem.l_orderkey        += i * 10_000_000
   customer.c_custkey/orders.o_custkey          += i * 1_000_000
   part.p_partkey/lineitem.l_partkey            += i * 1_000_000
