@@ -77,7 +77,7 @@ def main(argv: list[str] | None = None) -> int:
         # 1-row aggregates) at plan-build time since r9
         "orders_salted_revenue",
         "events_segment_enrichment",
-        # materialize intermediates (_materialized checkpoints) while
+        # materialize intermediates (functions/hints.materialized checkpoints) while
         # the plan is built
         "docs_select_token_budget",
         "docs_nb_lang_classifier",

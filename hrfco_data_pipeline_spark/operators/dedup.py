@@ -30,6 +30,8 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 from pyspark.storagelevel import StorageLevel
 
+from hrfco_data_pipeline_spark.functions.hints import materialized
+
 
 def shingle_array(text: Column, n: int = 5) -> Column:
     """Distinct n-token shingles of a whitespace-tokenized text column."""
@@ -194,17 +196,11 @@ def lsh_candidate_pairs(
     # keeps the plan lazy (plan audits, schema-only callers) at the
     # cost of recomputing sigs per consumer.
     if materialize:
-        out = _materialized(out)
+        out = materialized(out)
         sigs.unpersist()
     else:
         sigs.unpersist(blocking=False)
     return out
-
-
-def _materialized(df: DataFrame) -> DataFrame:
-    if df.sparkSession.sparkContext.getCheckpointDir():
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
 
 
 def minhash_dedup(
@@ -390,11 +386,9 @@ def connected_components(
     rather than d — a 20-iteration budget covers components of
     diameter ~2^20.
 
-    Durability: each round truncates lineage via reliable
-    ``checkpoint()`` when ``sparkContext.setCheckpointDir`` has been
-    called (survives executor loss — required at cluster scale), and
-    falls back to ``localCheckpoint`` otherwise (fine on local[N],
-    fragile to block loss on a real cluster).
+    Durability: each round truncates lineage through
+    ``functions/hints.materialized`` (reliable ``checkpoint()`` when a
+    checkpoint dir is set, ``localCheckpoint`` otherwise).
 
     ``strict=True`` raises RuntimeError if the fixpoint is not reached
     within ``max_iterations`` — silently returning half-propagated
@@ -414,16 +408,6 @@ def connected_components(
     Returns (id, component) where component = min node id in the
     cluster. Nodes only appear if they occur in ``pairs``.
     """
-    spark = pairs.sparkSession
-    reliable = spark.sparkContext.getCheckpointDir() is not None
-
-    def _truncate(df: DataFrame) -> DataFrame:
-        if reliable:
-            df = df.checkpoint(eager=True)
-        else:
-            df = df.localCheckpoint(eager=True)
-        return df
-
     edges = pairs.select(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
     ).unionByName(
@@ -484,7 +468,7 @@ def connected_components(
                 F.coalesce("cc", F.col("x.component")).alias("component"),
             )
         )
-        jumped = _truncate(jumped)
+        jumped = materialized(jumped)
         changed = (
             jumped.filter(F.col("component") != F.col("prev"))
             .limit(1)

@@ -27,10 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hrfco_data_pipeline_spark.sources.tables import (
-    load_table,
-    parallelize_small_scan,
-)
+from hrfco_data_pipeline_spark.functions.hints import parallelize_small_scan
+from hrfco_data_pipeline_spark.sources.tables import load_table
 
 
 def curate_corpus(

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hrfco_data_pipeline_spark.functions.barriers import no_pushdown
+from hrfco_data_pipeline_spark.functions.hints import materialized, no_pushdown
 from hrfco_data_pipeline_spark.functions.coercion import java_double
 from hrfco_data_pipeline_spark.operators.classify import (
     THRESHOLD_COLS,
@@ -215,7 +215,7 @@ def sensor_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no_pushdown: a predicate on a PARSE-derived column can never
     # reach the parquet scan as a pushed filter — pushing it down only
     # re-inlines the parse into the scan-stage filter (see
-    # functions/barriers + SCALE.md r6 notes)
+    # functions/hints + SCALE.md r6 notes)
     t = c.withColumn("obs_ts", ts).filter(no_pushdown(F.col("obs_ts")).isNotNull())
     w = Window.partitionBy("wlobscd").orderBy(F.asc("obs_ts"), F.asc("obs_id"))
     epoch_s = F.unix_timestamp("obs_ts")
@@ -267,7 +267,7 @@ def resample_10min(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-split scan stage, on top of the projection's own
     # evaluation (measured: ~2 s of the ~4 s warm time at sf0.1).
     # Two changes fix it:
-    # 1. both filters go through functions/barriers.no_pushdown, so
+    # 1. both filters go through functions/hints.no_pushdown, so
     #    each derived column is evaluated exactly once, above the
     #    input repartition (the filters keep no scan I/O anyway);
     # 2. the group key is the NUMERIC 10-minute index
@@ -1532,10 +1532,9 @@ def level_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame makes every layer read the bounded domain instead
     (guide §5 — reuse beats recompute when the intermediate is tiny).
     """
-    from hrfco_data_pipeline_spark.operators.dedup import _materialized
 
     c = classified(spark, sf_dir)
-    agg = _materialized(
+    agg = materialized(
         # shielded derived-column filter (SCALE.md §Optimizer traps, r17)
         c.filter(no_pushdown(F.col("water_level").isNotNull()))
         .groupBy(

@@ -21,6 +21,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hrfco_data_pipeline_spark.functions.hints import (
+    materialized,
+    parallelize_small_scan,
+)
 from hrfco_data_pipeline_spark.sources.tables import load_table
 
 STOPWORDS = ("the", "a", "of", "and", "data")
@@ -39,7 +43,6 @@ def _docs_parallel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents scan routed through parallelize_small_scan — the
     CPU-heavy shingle/hash kernels below serialize on the testdata's
     single-split file otherwise (no-op on real multi-split layouts)."""
-    from hrfco_data_pipeline_spark.sources.tables import parallelize_small_scan
 
     return parallelize_small_scan(load_table(spark, sf_dir, "documents"))
 
@@ -130,13 +133,11 @@ def docs_ngram_jaccard_pairs(
     )
     # materialize the (small) pair set so the exploded-shingle cache is
     # released before returning (reliable checkpoint on a cluster,
-    # localCheckpoint locally — see operators/dedup._materialized);
+    # localCheckpoint locally — see functions/hints.materialized);
     # materialize=False keeps the plan lazy for plan audits at the cost
     # of recomputing the explode per consumer
-    from hrfco_data_pipeline_spark.operators.dedup import _materialized
-
     if materialize:
-        out = _materialized(out)
+        out = materialized(out)
         cached.unpersist()
     else:
         cached.unpersist(blocking=False)
@@ -2758,9 +2759,7 @@ def docs_select_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     # featurize-once shape), so it materializes once and every branch
     # reads the checkpoint. Static plan 6 → 0 embedded scans (one
     # eager build scan).
-    from hrfco_data_pipeline_spark.operators.dedup import _materialized
-
-    scored = _materialized(
+    scored = materialized(
         docs.select(
             "doc_id",
             quality_score_expr(_tokens()).alias("q"),
@@ -3383,7 +3382,6 @@ def _nb_confusion(train: DataFrame, evald: DataFrame) -> DataFrame:
     derived from ``pri`` (Σ n_docs ≡ count(*), exact longs) instead
     of a separate corpus scan. Executed plan: 7 scans → 2 (the ct
     build + the eval tokenize), 11 → 5 exchanges."""
-    from hrfco_data_pipeline_spark.operators.dedup import _materialized
 
     toks_of = lambda d: d.select(  # noqa: E731
         "doc_id",
@@ -3394,11 +3392,11 @@ def _nb_confusion(train: DataFrame, evald: DataFrame) -> DataFrame:
     )
     toks = toks_of(train)
     # training counts: c(tok, lang), N_lang, priors, vocabulary
-    ct = _materialized(
+    ct = materialized(
         toks.groupBy("tok", "lang").agg(F.count("*").alias("c"))
     )
     nl = ct.groupBy("lang").agg(F.sum("c").alias("n_l"))
-    pri = _materialized(
+    pri = materialized(
         train.groupBy(F.col("lang").alias("p_lang")).agg(
             F.count("*").alias("n_docs")
         )
@@ -3726,7 +3724,6 @@ def docs_train_linear_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     median, new wins every pair; identical output row.
     Eager exception like events_median_bisect: the descent loop runs
     at call time (the CLI explain path warns)."""
-    from hrfco_data_pipeline_spark.operators.dedup import _materialized
 
     docs = load_table(spark, sf_dir, "documents")
     toks = _tokens()
@@ -3744,7 +3741,7 @@ def docs_train_linear_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.when(ttr >= 0.3, 0.3).otherwise(0.0)
         + F.when((stop >= 0.01) & (stop <= 0.5), 0.3).otherwise(0.0)
     )
-    feats = _materialized(
+    feats = materialized(
         docs.select(
             F.lit(1.0).alias("x0"),
             (F.least(n, F.lit(1000)).cast("double") / 1000.0).alias("x1"),
@@ -4018,7 +4015,7 @@ def _bm25_candidates(docs: DataFrame, qterms: DataFrame) -> DataFrame:
     The postings frame is consumed three times downstream (tf join
     side, per-term df aggregate, corpus stats aggregate) and each
     consumer re-embeds the scan+tokenize chain — but an r16
-    interleaved A/B showed `_materialized(bm25_postings(docs))` is a
+    interleaved A/B showed `materialized(bm25_postings(docs))` is a
     WASH-to-loss (old 1.63–1.84 s vs new 1.54–3.00 s warm at sf0.1):
     the re-embedded subtrees are column-pruned far below the full
     postings row (df needs `term` only, stats `doc_id`/`tf` only) and
@@ -4797,12 +4794,11 @@ def docs_source_halves_drift(
         F.conv(F.substring(F.md5(F.lower("tok")), 1, 15), 16, 10).cast("long")
         % n_buckets
     ).alias("b")
-    from hrfco_data_pipeline_spark.operators.dedup import _materialized
 
     # the bounded |sources|·2·n_buckets count grid MATERIALIZES so its
     # two consumers (bucket pivot, per-source totals) tokenize the
     # corpus once, not twice (the r14 plan-census rule)
-    counts = _materialized(
+    counts = materialized(
         toks.select("source", "half", bucket)
         .groupBy("source", "half", "b")
         .agg(F.count("*").alias("c"))
@@ -7106,9 +7102,6 @@ def ann_recall_by_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_centroids,
         ivf_topk,
     )
-    from hrfco_data_pipeline_spark.sources.tables import (
-        parallelize_small_scan,
-    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     # r17 (guide §2.5): spread the ~1 MB single-row-group vector frame
@@ -7693,10 +7686,9 @@ def dedup_survivor_source_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     flow aggregates on the |sources|² grid (broadcast) and the share
     window runs over it.
     """
-    from hrfco_data_pipeline_spark.operators.dedup import _materialized
 
     docs = load_table(spark, sf_dir, "documents")
-    hashed = _materialized(
+    hashed = materialized(
         docs.select(
             "doc_id",
             "source",
@@ -7773,7 +7765,6 @@ def embedding_shard_cell_drift(
     lesson, caught by the r14 plan spot-check); the global/per-shard
     totals broadcast.
     """
-    from hrfco_data_pipeline_spark.operators.dedup import _materialized
     from hrfco_data_pipeline_spark.operators.similarity import (
         as_double_vec,
         assign_cells,
@@ -7786,7 +7777,7 @@ def embedding_shard_cell_drift(
     cells = assign_cells(vecs, cents).select(
         F.pmod(F.col("vec_id"), F.lit(n_shards)).alias("shard"), "cell"
     )
-    cs = _materialized(
+    cs = materialized(
         cells.groupBy("shard", "cell").agg(F.count("*").alias("s"))
     )
     gl = cs.groupBy("cell").agg(F.sum("s").alias("g"))
@@ -7988,16 +7979,12 @@ def ann_ivf_pq_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     (≤ 256 rows) so its three consumers (per-cell rollup, column
     marginal, λ scalars) never re-run the encoding.
     """
-    from hrfco_data_pipeline_spark.operators.dedup import _materialized
     from hrfco_data_pipeline_spark.operators.similarity import (
         as_double_vec,
         assign_cells,
         ivf_centroids,
         pq_codes,
         pq_subcentroids,
-    )
-    from hrfco_data_pipeline_spark.sources.tables import (
-        parallelize_small_scan,
     )
 
     n_cells, m, ksub, dim = 16, 8, 16, 64
@@ -8018,7 +8005,7 @@ def ann_ivf_pq_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cell",
         F.element_at(pq_codes(pq_cents), 1).alias("code"),
     )
-    grid = _materialized(
+    grid = materialized(
         enc.groupBy("cell", "code").agg(F.count("*").alias("o"))
     )
     per_cell = grid.groupBy("cell").agg(

@@ -18,6 +18,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hrfco_data_pipeline_spark.functions.hints import (
+    materialized,
+    parallelize_small_scan,
+)
 from hrfco_data_pipeline_spark.sources.tables import load_table
 
 
@@ -1732,8 +1736,6 @@ def lineitem_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Same under-split mitigation as lineitem_zorder_layout (r16):
     # the Hilbert kernel is even heavier per row than Morton's.
-    from hrfco_data_pipeline_spark.sources.tables import parallelize_small_scan
-
     q = parallelize_small_scan(q)
     h = hilbert_index(F.col("qx"), F.col("qy"), bits=8)
     return (
@@ -1778,7 +1780,6 @@ def layout_pruning_report(
         hilbert_index,
         morton_interleave,
     )
-    from hrfco_data_pipeline_spark.operators.dedup import _materialized
     from hrfco_data_pipeline_spark.operators.ranking import int_ntile
 
     pk_lo, pk_hi, sk_lo, sk_hi = 500, 700, 20, 40
@@ -1805,9 +1806,7 @@ def layout_pruning_report(
     # straggler serialized the whole build — measured 3.1 s -> 1.3 s
     # for the kernel alone); no-op on real multi-split layouts (r16
     # optimization, same mitigation as lineitem_zorder_layout).
-    from hrfco_data_pipeline_spark.sources.tables import parallelize_small_scan
-
-    codes = _materialized(
+    codes = materialized(
         parallelize_small_scan(q).select(
             "uid",
             "pk",
@@ -2731,11 +2730,10 @@ def copurchase_triangles(
     O(sqrt(|E|)) — same plan, different orientation key. The edge
     table (support-filtered, ≪ corpus) is materialized once and reused
     by all three join legs and the degree agg."""
-    from hrfco_data_pipeline_spark.operators.dedup import _materialized
 
     edges = _copurchase_edges(spark, sf_dir)
     if materialize:
-        edges = _materialized(edges)
+        edges = materialized(edges)
     e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
     tri = (
         e1.join(e2, F.col("e1.v") == F.col("e2.u"))
@@ -2810,9 +2808,6 @@ def nation_trade_pagerank(
     ``materialize=False`` (lazy, per-round join + agg; plan audits
     pass iters=1 to see it), and lineage would be cut per round as
     connected_components does."""
-    from hrfco_data_pipeline_spark.sources.tables import (
-        parallelize_small_scan,
-    )
 
     # r17 (verdict item 1, guide §2.5 input under-split): the testdata
     # lineitem file is ONE parquet row group, so the scan stage — which
@@ -3717,11 +3712,10 @@ def copurchase_label_propagation(
     bounded iteration shape as connected components, with lineage
     cut per round. Output: per-community sizes (communities = label
     fixpoints after 3 rounds)."""
-    from hrfco_data_pipeline_spark.operators.dedup import _materialized
 
     half = _copurchase_edges(spark, sf_dir)
     # undirected adjacency: both directions
-    adj = _materialized(
+    adj = materialized(
         half.unionAll(
             half.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
@@ -3739,7 +3733,7 @@ def copurchase_label_propagation(
             .groupBy("node", "label")
             .agg(F.count("*").alias("cnt"))
         )
-        labels = _materialized(
+        labels = materialized(
             nbr.withColumn("rn", F.row_number().over(pick))
             .filter(F.col("rn") == 1)
             .select("node", "label")
@@ -4180,7 +4174,7 @@ def copurchase_bfs_levels(
     The frontier loop is the canonical bounded-iteration Spark shape:
     per depth, one frontier⋈adjacency join + distinct + one anti-join
     against the visited set, lineage cut per round
-    (operators/dedup._materialized — a lazy loop re-embeds the
+    (functions/hints.materialized — a lazy loop re-embeds the
     upstream tree exponentially). Depth is capped, never data-sized;
     an empty frontier makes remaining rounds no-ops without a
     driver-side convergence check. The DuckDB twin is a recursive CTE
@@ -4197,22 +4191,21 @@ def copurchase_bfs_levels(
     each round is ONE job (join + distinct + anti-join + checkpoint).
     Same rows: visited ≡ ∪ levels, and the anti-join reads the same
     node set either way."""
-    from hrfco_data_pipeline_spark.operators.dedup import _materialized
 
     half = _copurchase_edges(spark, sf_dir)
-    adj = _materialized(
+    adj = materialized(
         half.unionAll(
             half.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
     )
-    frontier = _materialized(
+    frontier = materialized(
         adj.agg(F.min("u").alias("node")).select(
             "node", F.lit(0).alias("level")
         )
     )
     visited = frontier
     for depth in range(1, max_depth + 1):
-        nxt = _materialized(
+        nxt = materialized(
             frontier.select(F.col("node").alias("u"))
             .join(adj, "u")
             .select(F.col("v").alias("node"))
@@ -4456,12 +4449,11 @@ def events_markov_concentration(
     cells = pairs.groupBy("from_type", "to_type").agg(
         F.count("*").alias("n")
     )
-    from hrfco_data_pipeline_spark.operators.dedup import _materialized
 
     # the bounded |types| rollup MATERIALIZES so the grand total and
     # the per-state rows don't each re-run the lag window over the
     # full event scan (the r14 plan-census rule)
-    per_state = _materialized(
+    per_state = materialized(
         cells.groupBy("from_type").agg(
             F.sum("n").alias("n_out"),
             F.sum(F.col("n") * F.col("n")).alias("sum_sq"),
@@ -4739,13 +4731,12 @@ def copurchase_jaccard_parts(
     data; for unbounded baskets apply the same salt pattern to the
     l_orderkey key.
     """
-    from hrfco_data_pipeline_spark.operators.dedup import _materialized
 
     if wedge_salt < 1:
         raise ValueError("wedge_salt must be >= 1")
     edges = _copurchase_edges(spark, sf_dir)
     if materialize:
-        edges = _materialized(edges)
+        edges = materialized(edges)
     sym = edges.unionByName(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = sym.groupBy(F.col("u").alias("p")).agg(F.count("*").alias("deg"))
     salt = int(wedge_salt)
@@ -4812,13 +4803,12 @@ def copurchase_kcore(
     ≪ corpus) edge list, with lineage cut per round so the plan
     cannot grow exponentially.
     """
-    from hrfco_data_pipeline_spark.operators.dedup import _materialized
 
     half = _copurchase_edges(spark, sf_dir)
     sym = half.unionByName(
         half.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-    alive = _materialized(sym) if materialize else sym
+    alive = materialized(sym) if materialize else sym
     for _ in range(rounds):
         deg = alive.groupBy("u").agg(F.count("*").alias("deg"))
         keep = deg.filter(F.col("deg") >= k).select("u")
@@ -4826,7 +4816,7 @@ def copurchase_kcore(
             keep.select(F.col("u").alias("v")), "v", "left_semi"
         )
         if materialize:
-            alive = _materialized(alive)
+            alive = materialized(alive)
     return (
         alive.groupBy("u")
         .agg(F.count("*").alias("core_degree"))
@@ -5129,9 +5119,7 @@ def events_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan+distinct runs once instead of three times (the r15
     # live-subplan lesson). The exact arms remain the toy-scale QA
     # face — a production 100 TB run ships only the sketch arms.
-    from hrfco_data_pipeline_spark.operators.dedup import _materialized
-
-    base = _materialized(ev.select("event_type", "user_id").distinct())
+    base = materialized(ev.select("event_type", "user_id").distinct())
     exact = base.groupBy("event_type").agg(F.count("*").alias("exact_n"))
     inter = (
         base.alias("x")
@@ -5269,9 +5257,8 @@ def kmv_pair_estimates(kmin: DataFrame, k: int = 64) -> DataFrame:
     contract of a bottom-k sketch), so it is materialized once here
     and every branch reads the checkpoint instead of re-deriving it.
     """
-    from hrfco_data_pipeline_spark.operators.dedup import _materialized
 
-    kmin = _materialized(kmin.select("event_type", "h"))
+    kmin = materialized(kmin.select("event_type", "h"))
     M = 2_147_483_648  # 2^31
 
     def est(kth, sk_n):
@@ -6000,7 +5987,6 @@ def copurchase_weighted_sssp(
     map-side-combined min — the pointer-free iterative pattern shared
     with BFS/label-prop/PageRank; lineage cut per round.
     """
-    from hrfco_data_pipeline_spark.operators.dedup import _materialized
 
     li = load_table(spark, sf_dir, "lineitem")
     op = li.select("l_orderkey", "l_partkey").distinct()
@@ -6024,7 +6010,7 @@ def copurchase_weighted_sssp(
             F.col("v").alias("u"), F.col("u").alias("v"), F.col("w")
         )
     )
-    sym = _materialized(sym) if materialize else sym
+    sym = materialized(sym) if materialize else sym
     src = sym.agg(F.min("u").alias("vertex")).select(
         "vertex", F.lit(0).cast("long").alias("dist")
     )
@@ -6048,7 +6034,7 @@ def copurchase_weighted_sssp(
             .agg(F.min("dist").alias("dist"))
         )
         if materialize:
-            dist = _materialized(dist)
+            dist = materialized(dist)
     return dist.select(
         F.col("vertex").alias("part"), F.col("dist").cast("long").alias("dist")
     )
@@ -6119,7 +6105,6 @@ def ks_from_counts(raw_counts: DataFrame) -> DataFrame:
     integers: same steps, same decimal sums, same tie-break, and the
     final division is the same two exact-int casts."""
     d38 = lambda c: c.cast("decimal(38,0)")
-    from hrfco_data_pipeline_spark.operators.dedup import _materialized
 
     # r17 (guide §2.4; the r15 live-subplan lesson): the counts table
     # is consumed by the per-type collect, the cv aggregate, and —
@@ -6130,7 +6115,7 @@ def ks_from_counts(raw_counts: DataFrame) -> DataFrame:
     # — the compressed KS substrate everything downstream derives
     # from — so it materializes once and every branch reads the
     # checkpoint: ~5 upstream re-aggregations per face → 1.
-    ct = _materialized(
+    ct = materialized(
         raw_counts.groupBy("event_type", "value").agg(
             F.sum("c_t").alias("c_t")
         )
@@ -8806,13 +8791,12 @@ def _brand_itemset3_base(spark: SparkSession, sf_dir: str):
     part = load_table(spark, sf_dir, "part").select(
         "p_partkey", "p_brand"
     )
-    from hrfco_data_pipeline_spark.operators.dedup import _materialized
 
     # the (order, brand) basket substrate MATERIALIZES once: its six
     # consumers (three bounded-metadata collects + the three-way
     # within-basket self-join) would otherwise each re-run the
     # scan+join+distinct (measured 15.7 s cold at sf0.1 -> 11.4 after)
-    ob = _materialized(
+    ob = materialized(
         li.join(part, li["l_partkey"] == part["p_partkey"])
         .select(
             F.col("l_orderkey").alias("ok"), F.col("p_brand").alias("b")

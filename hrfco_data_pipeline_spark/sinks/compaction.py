@@ -8,8 +8,8 @@ rewrites each partition's fragments into ~target-size files.
 
 Spark-idiomatic form: read → repartition on the partition columns
 (one shuffle keyed so each output partition's rows co-locate) →
-``maxRecordsPerFile`` caps file size → write to a staging dir → atomic
-swap (same crash-safe rename protocol as ``writers.merge_stations``).
+``maxRecordsPerFile`` caps file size → row-count check → the staged
+swap of every directory-replacing sink (``writers.swap_in``).
 On Delta/Iceberg this is ``OPTIMIZE`` / ``rewriteDataFiles``; this is
 the plain-parquet equivalent.
 """
@@ -22,6 +22,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hrfco_data_pipeline_spark.sinks.writers import swap_in
+
 
 def compact_partitions(
     spark: SparkSession,
@@ -33,57 +35,43 @@ def compact_partitions(
 ) -> dict[str, int]:
     """Rewrite a partitioned dataset into few large files per partition.
 
-    Returns {"files_before": n, "files_after": m, "rows": r}. The swap
-    is staging-dir + rename: a crash before the final rename leaves the
-    original table untouched.
+    Returns {"files_before": n, "files_after": m, "rows": r}. The
+    rewrite replaces the table through ``writers.swap_in`` (marker
+    ``_committed``) only after its row count matches the original, so
+    a crash or a bad rewrite never loses the table, and a crash of an
+    earlier compaction is healed on entry.
     """
-    df = spark.read.format(fmt).load(path)
-    rows = df.count()
-    files_before = _count_data_files(path)
+    stats: dict[str, int] = {}
 
-    staging = path.rstrip("/") + ".compact-staging"
-    backup = path.rstrip("/") + ".compact-backup"
-    shutil.rmtree(staging, ignore_errors=True)
+    def _write(staging: str) -> None:
+        df = spark.read.format(fmt).load(path)
+        stats["rows"] = df.count()
+        stats["files_before"] = _count_data_files(path)
+        # repartition on the partition columns: each output task holds
+        # complete hive-partitions, so every partition compacts to one
+        # file (oversized ones split by maxRecordsPerFile).
+        if partition_cols:
+            compacted = df.repartition(*[F.col(c) for c in partition_cols])
+        else:
+            compacted = df.repartition(max(files_per_partition, 1))
+        writer = (
+            compacted.write.format(fmt)
+            .mode("overwrite")
+            .option("maxRecordsPerFile", max_records_per_file)
+        )
+        if partition_cols:
+            writer = writer.partitionBy(*partition_cols)
+        writer.save(staging)
+        # verify before swapping — never replace good data with a bad rewrite
+        recount = spark.read.format(fmt).load(staging).count()
+        if recount != stats["rows"]:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise RuntimeError(
+                f"compaction row mismatch: {stats['rows']} -> {recount}"
+            )
 
-    # repartition on the partition columns: each output task holds
-    # complete hive-partitions, so every partition compacts to one file
-    # (oversized ones split by maxRecordsPerFile).
-    if partition_cols:
-        compacted = df.repartition(*[F.col(c) for c in partition_cols])
-    else:
-        compacted = df.repartition(max(files_per_partition, 1))
-    writer = (
-        compacted.write.format(fmt)
-        .mode("overwrite")
-        .option("maxRecordsPerFile", max_records_per_file)
-    )
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.save(staging)
-
-    # verify before swapping — never replace good data with a bad rewrite
-    recount = spark.read.format(fmt).load(staging).count()
-    if recount != rows:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise RuntimeError(f"compaction row mismatch: {rows} -> {recount}")
-
-    # a backup left by a prior crashed run would make the rename fail
-    # with ENOTEMPTY and wedge every later compaction of this table —
-    # the live table is still intact at `path`, so the stale backup is
-    # safe to discard (same discipline as writers.merge_stations)
-    shutil.rmtree(backup, ignore_errors=True)
-    os.rename(path.rstrip("/"), backup)
-    try:
-        os.rename(staging, path.rstrip("/"))
-    except OSError:
-        os.rename(backup, path.rstrip("/"))  # roll back
-        raise
-    shutil.rmtree(backup, ignore_errors=True)
-    return {
-        "files_before": files_before,
-        "files_after": _count_data_files(path),
-        "rows": rows,
-    }
+    swap_in(path, _write, "_committed", "1")
+    return {**stats, "files_after": _count_data_files(path)}
 
 
 def _count_data_files(path: str) -> int:

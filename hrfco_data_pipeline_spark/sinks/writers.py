@@ -28,6 +28,10 @@ column the stream passes them.
 
 from __future__ import annotations
 
+import os
+import shutil
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -74,33 +78,30 @@ def write_dlq(dlq: DataFrame, path: str, now: str) -> None:
 
 
 def recover_swap(table_path: str, marker: str = "_SUCCESS") -> str | None:
-    """Complete or roll back an interrupted staged swap for
-    ``table_path`` (the ``<table>__staging__`` / ``<table>__old__``
-    protocol shared by merge_stations and streaming.curation.
-    merge_lm_counts).
+    """Complete or roll back an interrupted ``swap_in`` of
+    ``table_path`` (its ``<table>__staging__`` / ``<table>__old__``
+    dirs).
 
     A crash between the two commit renames leaves NO live table while
-    the only full copies sit in the staging dir (the just-merged
-    result) and/or the backup dir (the pre-merge state). Without this
-    recovery, the next merge call would treat the table as absent,
-    delete both dirs, and silently rebuild from the new batch alone —
-    losing all accumulated state.
+    the only full copies sit in the staging dir (the just-written
+    result) and/or the backup dir (the previous state). Without this
+    recovery, the next write would treat the table as absent and
+    silently rebuild from the new batch alone — losing all accumulated
+    state.
 
     Resolution order when the live table is missing:
     1. staging dir containing ``marker`` (written strictly after the
-       data, so its presence proves the merge fully committed) →
+       data, so its presence proves the write fully committed) →
        roll FORWARD: rename staging to live.
     2. otherwise a backup dir → roll BACK: rename backup to live (the
-       merge that crashed mid-write is retried by the caller's
-       at-least-once replay).
+       write that crashed is retried by the caller's at-least-once
+       replay).
     When the live table exists, leftover staging/backup dirs are stale
     (crash after the final rename) and are removed.
 
     Returns ``"forward"``, ``"back"``, or ``None`` (nothing to do).
     """
-    import os
-    import shutil
-
+    table_path = table_path.rstrip("/")
     staging = f"{table_path}__staging__"
     backup = f"{table_path}__old__"
     if os.path.isdir(table_path):
@@ -118,6 +119,54 @@ def recover_swap(table_path: str, marker: str = "_SUCCESS") -> str | None:
     return None
 
 
+def swap_in(
+    table_path: str, write: Callable[[str], None], marker: str, stamp: str
+) -> None:
+    """Replace the directory ``table_path`` with what ``write`` produces,
+    never leaving a half-replaced table: the one staged-swap commit of
+    every sink that rewrites a whole directory.
+
+    ``recover_swap`` first heals a crash of an earlier swap; then
+    ``write(staging)`` fills ``<table>__staging__`` while the live
+    table is untouched (a write plan may read the live table lazily,
+    so nothing may overwrite it mid-computation, and ``write`` may
+    raise to abort — e.g. a failed verification), then ``marker`` is
+    written into staging with ``stamp`` as its content, strictly after
+    the data, and the staging dir is swapped in with two renames:
+    live → ``<table>__old__``, staging → live. A crash before the first
+    rename leaves the live table intact; a crash between the renames is
+    healed by ``recover_swap`` on the next call (roll forward from the
+    marked staging dir, else back from the backup); an ``OSError`` on
+    the second rename is rolled back in process.
+
+    The marker is the caller's own file, NOT the Hadoop committer's
+    ``_SUCCESS``, whose presence depends on a deployment config
+    (``mapreduce.fileoutputcommitter.marksuccessfuljobs``): on a cluster
+    that disables it the roll-forward path would silently never engage.
+    Rename-as-commit assumes a filesystem with atomic dir rename
+    (local/HDFS); on S3-like stores use a transactional table format.
+    """
+    table_path = table_path.rstrip("/")
+    recover_swap(table_path, marker)
+    staging = f"{table_path}__staging__"
+    backup = f"{table_path}__old__"
+    shutil.rmtree(staging, ignore_errors=True)
+    write(staging)
+    with open(os.path.join(staging, marker), "w") as fh:
+        fh.write(stamp)
+    shutil.rmtree(backup, ignore_errors=True)
+    existed = os.path.isdir(table_path)
+    if existed:
+        os.rename(table_path, backup)
+    try:
+        os.rename(staging, table_path)
+    except OSError:
+        if existed:
+            os.rename(backup, table_path)
+        raise
+    shutil.rmtree(backup, ignore_errors=True)
+
+
 def merge_stations(
     spark: SparkSession, table_path: str, updates: DataFrame, key: str = "wlobscd"
 ) -> None:
@@ -128,55 +177,22 @@ def merge_stations(
     a full rewrite is cheap at any scale; swap for Delta/Iceberg
     ``MERGE INTO`` where a transactional format is available.
 
-    Durability: the merged result is fully written to a STAGING dir
-    while the live table is still untouched (the merge plan reads the
-    live table lazily, so nothing may overwrite it mid-computation),
-    then swapped in with two renames — live → backup, staging → live —
-    and the backup removed. A crash anywhere before the first rename
-    leaves the live table intact; a crash between the renames is
-    healed by ``recover_swap`` on the next call (roll forward from the
-    committed staging dir, else roll back from the backup). Never a
-    state where the only copy is a half-written directory.
-    Rename-as-commit assumes a filesystem with atomic dir rename
-    (local/HDFS); on S3-like stores use a transactional table format
-    instead.
-
-    Commit evidence is an explicit ``_committed`` file written by this
-    function strictly after the staging write returns — NOT the Hadoop
-    committer's ``_SUCCESS``, whose presence depends on a deployment
-    config (``mapreduce.fileoutputcommitter.marksuccessfuljobs``); on
-    a cluster that disables it the roll-forward path would silently
-    never engage (same contract as merge_lm_counts' ``_batch_id``).
+    Durability: the merged result replaces the table through
+    ``swap_in`` with the ``_committed`` marker.
     """
-    import os
-    import shutil
 
-    recover_swap(table_path, marker="_committed")
-    staging = f"{table_path}__staging__"
-    backup = f"{table_path}__old__"
-    shutil.rmtree(staging, ignore_errors=True)
+    def _write(staging: str) -> None:
+        try:
+            current = spark.read.parquet(table_path)
+        except Exception:
+            merged = updates
+        else:
+            merged = current.join(updates, on=key, how="left_anti").unionByName(
+                updates, allowMissingColumns=True
+            )
+        merged.write.mode("overwrite").parquet(staging)
 
-    try:
-        current = spark.read.parquet(table_path)
-        exists = True
-    except Exception:
-        current, exists = None, False
-
-    if exists:
-        merged = current.join(updates, on=key, how="left_anti").unionByName(
-            updates, allowMissingColumns=True
-        )
-    else:
-        merged = updates
-
-    merged.write.mode("overwrite").parquet(staging)
-    with open(os.path.join(staging, "_committed"), "w") as fh:
-        fh.write("1")
-    shutil.rmtree(backup, ignore_errors=True)
-    if exists:
-        os.rename(table_path, backup)
-    os.rename(staging, table_path)
-    shutil.rmtree(backup, ignore_errors=True)
+    swap_in(table_path, _write, "_committed", "1")
 
 
 def write_range_sharded(
@@ -204,24 +220,19 @@ def write_range_sharded(
 
 def snapshot_sink(out_dir: str):
     """foreachBatch sink that maintains an always-consistent SNAPSHOT
-    of a complete/update-mode streaming aggregate: each batch writes
-    the full current result to a staging dir and atomically renames it
-    over the previous snapshot (readers always see one complete
-    version — the parquet analog of a materialized view refresh).
-    Idempotent across batch replays: re-writing batch N just re-renames
-    the same content."""
-    import os
-    import shutil
+    of a complete/update-mode streaming aggregate: each batch replaces
+    the previous snapshot with the full current result through
+    ``swap_in`` (readers always see one complete version — the parquet
+    analog of a materialized view refresh), its ``_committed`` marker
+    holding the batch id. Idempotent across batch replays: re-writing
+    batch N just swaps in the same content."""
 
     def _write(batch_df, batch_id: int) -> None:
-        staging = out_dir.rstrip("/") + f".staging-{batch_id}"
-        backup = out_dir.rstrip("/") + ".old"
-        shutil.rmtree(staging, ignore_errors=True)
-        batch_df.write.mode("overwrite").parquet(staging)
-        shutil.rmtree(backup, ignore_errors=True)
-        if os.path.exists(out_dir):
-            os.rename(out_dir, backup)
-        os.rename(staging, out_dir)
-        shutil.rmtree(backup, ignore_errors=True)
+        swap_in(
+            out_dir,
+            batch_df.write.mode("overwrite").parquet,
+            "_committed",
+            str(batch_id),
+        )
 
     return _write

@@ -57,7 +57,7 @@ def synthetic_observations(spark: SparkSession, sf_dir: str) -> DataFrame:
     if cores > 1 and ev.rdd.getNumPartitions() < cores:
         # NOTE (r17): this spread only helps if downstream filters on
         # DERIVED (parse/classify) columns are shielded with
-        # functions/barriers.no_pushdown — PushDownPredicates otherwise
+        # functions/hints.no_pushdown — PushDownPredicates otherwise
         # re-inlines the whole derivation tree below this exchange,
         # into the single scan task (hydro_station_crosscorr profiled
         # 1.7 s of classify work under the round-robin Exchange before

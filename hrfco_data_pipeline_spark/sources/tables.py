@@ -99,27 +99,3 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view for the SQL surface."""
     for name, df in load_tables(spark, sf_dir).items():
         df.createOrReplaceTempView(name)
-
-
-def parallelize_small_scan(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:
-    """Round-robin repartition for UNDER-SPLIT scans feeding CPU-heavy
-    text kernels (shingling, per-shingle hashing, regex) — a LOCAL
-    testdata mitigation, not a cluster pattern.
-
-    The driver testdata ships one single-row-group parquet file per
-    table, so Spark plans the scan as ONE task and a shingle explode
-    serializes on one core (measured: 3-gram shingle+md5 over sf0.1
-    documents 6.6 s single-task vs 2.8 s after repartition(32) —
-    the base table is ~50 MB, so the extra exchange is noise). At real
-    scale a 100 TB corpus arrives as thousands of splits and this
-    helper NO-OPS: it repartitions only when the scan's split count is
-    below ``min_fraction`` x defaultParallelism. Only the heavy text
-    operators opt in — a blanket post-scan repartition was tried and
-    reverted (it taxes every window/agg query with a second exchange,
-    see load_table's note).
-    """
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= max(2, int(target * min_fraction)):
-        return df
-    return df.repartition(target)

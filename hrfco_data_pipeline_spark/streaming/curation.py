@@ -155,57 +155,39 @@ def bigram_counts(docs: DataFrame) -> DataFrame:
 
 def merge_lm_counts(spark, table_path: str, new_counts: DataFrame, batch_id: int) -> None:
     """Merge a micro-batch's bigram counts into the stored count table
-    with the staged-swap durability of sinks/writers.merge_stations,
-    plus EXACTLY-ONCE replay protection: the applied batch id is
-    written INSIDE the staging dir (``_batch_id``) before the rename,
-    so it commits atomically with the data — a replayed micro-batch
-    (foreachBatch is at-least-once) sees its own id already recorded
-    and no-ops instead of double-counting.
-
-    Crash-window recovery: a crash between the two commit renames
-    leaves no live table while the only merged copy sits in staging
-    (committed iff ``_batch_id`` is inside — it is written strictly
-    after the data) and the only historical copy in the backup dir.
-    ``recover_swap`` heals that state on entry — roll forward from a
-    committed staging, else roll back from the backup — instead of
-    silently rebuilding from the new batch alone."""
+    through ``sinks/writers.swap_in``, plus EXACTLY-ONCE replay
+    protection: the applied batch id is the swap's ``_batch_id``
+    marker, so it commits atomically with the data — a replayed
+    micro-batch (foreachBatch is at-least-once) sees its own id already
+    recorded and no-ops instead of double-counting. ``recover_swap``
+    runs before that check, so a marker left in a committed staging dir
+    by a crash between the renames is seen."""
     import os
-    import shutil
 
-    from hrfco_data_pipeline_spark.sinks.writers import recover_swap
+    from hrfco_data_pipeline_spark.sinks.writers import recover_swap, swap_in
 
     recover_swap(table_path, marker="_batch_id")
-    marker = os.path.join(table_path, "_batch_id")
     try:
-        with open(marker) as fh:
+        with open(os.path.join(table_path, "_batch_id")) as fh:
             if batch_id <= int(fh.read().strip()):
                 return
     except OSError:
         pass
 
-    staging = f"{table_path}__staging__"
-    backup = f"{table_path}__old__"
-    shutil.rmtree(staging, ignore_errors=True)
-    try:
-        current = spark.read.parquet(table_path)
-        exists = True
-    except Exception:
-        current, exists = None, False
-    merged = (
-        current.unionByName(new_counts)
-        .groupBy("bg")
-        .agg(F.sum("c").alias("c"))
-        if exists
-        else new_counts
-    )
-    merged.write.mode("overwrite").parquet(staging)
-    with open(os.path.join(staging, "_batch_id"), "w") as fh:
-        fh.write(str(batch_id))
-    shutil.rmtree(backup, ignore_errors=True)
-    if exists:
-        os.rename(table_path, backup)
-    os.rename(staging, table_path)
-    shutil.rmtree(backup, ignore_errors=True)
+    def _write(staging: str) -> None:
+        try:
+            current = spark.read.parquet(table_path)
+        except Exception:
+            merged = new_counts
+        else:
+            merged = (
+                current.unionByName(new_counts)
+                .groupBy("bg")
+                .agg(F.sum("c").alias("c"))
+            )
+        merged.write.mode("overwrite").parquet(staging)
+
+    swap_in(table_path, _write, "_batch_id", str(batch_id))
 
 
 def lm_stats_stream(docs_stream: DataFrame, table_path: str):
@@ -366,31 +348,24 @@ def read_appended(spark, table_path: str) -> DataFrame:
 
 def compact_appended(spark, table_path: str) -> None:
     """Fold all committed batch subdirectories (plus previously
-    compacted root files) into one flat parquet table under the
-    staged-swap protocol (``recover_swap`` heals a crash between the
-    commit renames; the carried ``_batch_id`` marker — max of the
-    marker and the folded dir ids — keeps replay protection across
-    the fold, when the per-batch dirs no longer exist to check)."""
-    import os
-    import shutil
-
-    from hrfco_data_pipeline_spark.sinks.writers import recover_swap
+    compacted root files) into one flat parquet table through
+    ``sinks/writers.swap_in``. Its ``_batch_id`` marker carries the max
+    of the old marker and the folded dir ids, which keeps replay
+    protection across the fold, when the per-batch dirs no longer
+    exist to check."""
+    from hrfco_data_pipeline_spark.sinks.writers import recover_swap, swap_in
 
     recover_swap(table_path, marker="_batch_id")
     applied = max(
         [_applied_batch_id(table_path)]
         + [int(d[1:]) for d in _batch_dirs(table_path)]
     )
-    staging = f"{table_path}__staging__"
-    backup = f"{table_path}__old__"
-    shutil.rmtree(staging, ignore_errors=True)
-    read_appended(spark, table_path).write.mode("overwrite").parquet(staging)
-    with open(os.path.join(staging, "_batch_id"), "w") as fh:
-        fh.write(str(applied))
-    shutil.rmtree(backup, ignore_errors=True)
-    os.rename(table_path, backup)
-    os.rename(staging, table_path)
-    shutil.rmtree(backup, ignore_errors=True)
+    swap_in(
+        table_path,
+        read_appended(spark, table_path).write.mode("overwrite").parquet,
+        "_batch_id",
+        str(applied),
+    )
 
 
 def merge_presence_counts(

@@ -56,22 +56,55 @@ def test_compaction_failed_swap_rolls_back(spark, tmp_path, monkeypatch):
 
     # fail the staging→live rename (the worst moment: live dir already
     # moved aside) and assert the rollback restores the original
-    import hrfco_data_pipeline_spark.sinks.compaction as comp
+    import os
 
-    real_rename = comp.os.rename
+    real_rename = os.rename
 
     def flaky_rename(src, dst):
-        if src.endswith(".compact-staging"):
+        if dst == path and src.endswith("__staging__"):
             raise OSError("simulated rename failure")
         real_rename(src, dst)
 
-    monkeypatch.setattr(comp.os, "rename", flaky_rename)
+    monkeypatch.setattr(os, "rename", flaky_rename)
     with pytest.raises(OSError, match="simulated"):
-        comp.compact_partitions(spark, path, ["d"])
+        compact_partitions(spark, path, ["d"])
     monkeypatch.undo()
 
     # original (uncompacted) table restored intact
     assert spark.read.parquet(path).count() == n
+
+
+def test_compaction_recovers_from_kill_between_renames(
+    spark, tmp_path, monkeypatch
+):
+    """A kill between the two commit renames (live dir moved aside,
+    compacted staging dir not yet renamed in) runs no in-process
+    rollback; the next compaction must heal the table, not fail on the
+    missing path or drop the backup."""
+    import os
+
+    path = str(tmp_path / "tbl")
+    n = _fragmented_table(spark, path)
+    real_rename = os.rename
+
+    class Killed(BaseException):
+        pass
+
+    def killing_rename(src, dst):
+        if dst == path:
+            raise Killed()
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", killing_rename)
+    with pytest.raises(Killed):
+        compact_partitions(spark, path, ["d"])
+    monkeypatch.undo()
+    assert not os.path.exists(path)
+
+    stats = compact_partitions(spark, path, ["d"])
+    assert stats["rows"] == n
+    assert spark.read.parquet(path).count() == n
+    assert os.listdir(tmp_path) == ["tbl"]
 
 
 def test_prune_partitions_drops_only_older(spark, tmp_path):

@@ -121,3 +121,45 @@ def test_no_cross_module_plan_name_collisions():
             else:
                 seen[node.name] = path.name
     assert not dups, f"plan function names defined in two modules: {dups}"
+
+
+def _package_trees(exempt: pathlib.Path):
+    for path in sorted(PKG.rglob("*.py")):
+        if path != exempt:
+            yield path.relative_to(PKG), ast.parse(path.read_text())
+
+
+def test_lineage_cuts_only_in_hints():
+    """``.checkpoint(`` / ``.localCheckpoint(`` belong to
+    functions/hints.materialized, the one copy of the
+    checkpoint-or-local rule; everything else calls it."""
+    calls = [
+        f"{rel}:{node.lineno}"
+        for rel, tree in _package_trees(PKG / "functions" / "hints.py")
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("checkpoint", "localCheckpoint")
+    ]
+    assert not calls, f"lineage cuts outside functions/hints.py: {calls}"
+
+
+def test_staged_swap_names_only_in_writers():
+    """The ``__staging__`` / ``__old__`` dirs belong to
+    sinks/writers.swap_in and recover_swap, so a directory replace
+    cannot grow a second copy of the commit protocol. Docstrings may
+    name them."""
+    found = []
+    for rel, tree in _package_trees(PKG / "sinks" / "writers.py"):
+        docstrings = {
+            id(node.value) for node in ast.walk(tree) if isinstance(node, ast.Expr)
+        }
+        found += [
+            f"{rel}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and id(node) not in docstrings
+            and ("__staging__" in node.value or "__old__" in node.value)
+        ]
+    assert not found, f"staged-swap dir names outside sinks/writers.py: {found}"

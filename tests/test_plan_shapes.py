@@ -247,7 +247,7 @@ def test_resample_10min_parse_not_duplicated_into_scan_stage(spark):
 
 
 # Every registry query whose plan routes a derived-column filter
-# through functions/barriers.no_pushdown (all in plans/hydro.py),
+# through functions/hints.no_pushdown (all in plans/hydro.py),
 # with its triaged optimizer-duplication ceiling: the residual
 # optimized-minus-analyzed count of expensive expressions that
 # remains WITH the shields working (SCALE.md "r6 follow-up" —
@@ -274,7 +274,7 @@ SHIELDED_DUP_CEILING = [
 
 
 def test_shielded_queries_hold_their_duplication_ceiling(spark):
-    """The no_pushdown barrier (functions/barriers.py) relies on
+    """The no_pushdown barrier (functions/hints.py) relies on
     shuffle() staying flagged nondeterministic — an optimizer
     implementation detail a Spark upgrade could silently change,
     reintroducing per-row duplication of the parse/format derivations

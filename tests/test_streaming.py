@@ -123,7 +123,9 @@ def test_snapshot_sink_complete_mode(spark, tmp_path):
     import os
 
     assert not [
-        d for d in os.listdir(tmp_path) if ".staging" in d or d.endswith(".old")
+        d
+        for d in os.listdir(tmp_path)
+        if d.endswith("__staging__") or d.endswith("__old__")
     ]
 
 

@@ -14,7 +14,7 @@ only compiled, never executed, so the full registry audits in minutes.
 A nonzero delta is a SMELL, not automatically a bug: the duplicate may
 sit on a tiny side of a join, or the pushed copy may enable a real
 partition prune on a STORED column. Triage top offenders by hand; fix
-with functions/barriers.no_pushdown only where the filter buys no I/O.
+with functions/hints.no_pushdown only where the filter buys no I/O.
 
 Usage: python tools/audit_expr_duplication.py [sf_dir] [query ...]
 """
