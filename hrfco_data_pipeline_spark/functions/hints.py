@@ -49,7 +49,7 @@ def materialized(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-def parallelize_small_scan(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:
+def parallelize_small_scan(df: DataFrame) -> DataFrame:
     """Round-robin repartition for UNDER-SPLIT scans feeding CPU-heavy
     text kernels (shingling, per-shingle hashing, regex) — a LOCAL
     testdata mitigation, not a cluster pattern.
@@ -61,14 +61,14 @@ def parallelize_small_scan(df: DataFrame, min_fraction: float = 0.5) -> DataFram
     the base table is ~50 MB, so the extra exchange is noise). At real
     scale a 100 TB corpus arrives as thousands of splits and this
     helper NO-OPS: it repartitions only when the scan's split count is
-    below ``min_fraction`` x defaultParallelism. Only the heavy text
+    below half of defaultParallelism. Only the heavy text
     operators opt in — a blanket post-scan repartition was tried and
     reverted (it taxes every window/agg query with a second exchange,
     see sources/tables.load_table's note).
     """
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= max(2, int(target * min_fraction)):
+    if df.rdd.getNumPartitions() >= max(2, target // 2):
         return df
     return df.repartition(target)
 

@@ -96,11 +96,11 @@ def parse_queued_count(s: Column) -> Column:
     )
 
 
-def parse_nifi_timestamp(s: Column, zone: str = "UTC") -> Column:
+def parse_nifi_timestamp(s: Column) -> Column:
     """parseNiFiTimestamp (NiFiMetricsUtils.java:124-137): NiFi emits
-    either 'MM/dd/yyyy HH:mm:ss.SSS' wall times (interpreted in the
-    server's zone — ``zone`` parameterizes what Java reads from
-    systemDefault) or ISO-8601 instants; anything else is unparseable.
+    either 'MM/dd/yyyy HH:mm:ss.SSS' wall times (interpreted as UTC,
+    where Java reads the server's systemDefault zone) or ISO-8601
+    instants; anything else is unparseable.
 
     Documented deviation: the Java fallback returns Instant.now() on
     parse failure — a side-effecting default that poisons downstream
@@ -109,7 +109,7 @@ def parse_nifi_timestamp(s: Column, zone: str = "UTC") -> Column:
     with the wall-clock-archive deviation note in plans/hydro.py.
     """
     slash = F.to_utc_timestamp(
-        F.try_to_timestamp(s, F.lit("MM/dd/yyyy HH:mm:ss.SSS")), zone
+        F.try_to_timestamp(s, F.lit("MM/dd/yyyy HH:mm:ss.SSS")), "UTC"
     )
     iso = F.try_to_timestamp(s)
     return (

@@ -29,10 +29,10 @@ def asof_join(
     left_time: str,
     right_time: str,
     payload_cols: tuple[str, ...],
-    suffix: str = "_asof",
 ) -> DataFrame:
     """Left as-of join: every left row + the payload of the most recent
-    right row with ``right_time <= left_time`` on the same key."""
+    right row with ``right_time <= left_time`` on the same key, as
+    ``<payload>_asof`` columns."""
     lt = left.select(
         F.col(on).alias("__k"),
         F.col(left_time).alias("__t"),
@@ -65,7 +65,7 @@ def asof_join(
     out = carried.filter(F.col("__side") == 0).select(
         F.col("__left.*"),
         *[
-            F.col("__last_right").getField(c).alias(f"{c}{suffix}")
+            F.col("__last_right").getField(c).alias(f"{c}_asof")
             for c in payload_cols
         ],
     )

@@ -79,14 +79,13 @@ def _pair_counts(vocab: DataFrame) -> DataFrame:
 def bpe_learn(
     docs: DataFrame,
     n_merges: int = 8,
-    text_col: str = "text",
 ) -> list[tuple[str, str, int]]:
     """Learn ``n_merges`` BPE merges over the corpus. Returns the merge
     table [(left, right, count), ...] in learned order. Ties break on
     (count desc, left asc, right asc) — a total order, so the learned
     table is deterministic at any parallelism."""
     words = docs.select(
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("w0")
+        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w0")
     ).select(F.lower("w0").alias("w"))
     vocab = (
         words.groupBy("w")
@@ -124,8 +123,6 @@ def bpe_learn(
 def bpe_token_counts(
     docs: DataFrame,
     n_merges: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Corpus-scale BPE ENCODING under a freshly learned merge table:
     per-document token counts after applying all merges.
@@ -141,8 +138,8 @@ def bpe_token_counts(
     Returns (id, n_words, n_bpe_tokens).
     """
     words = docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("w0"),
+        F.col("doc_id").alias("id"),
+        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w0"),
     ).select("id", F.lower("w0").alias("w"))
     vocab = (
         words.groupBy("w")
@@ -182,5 +179,5 @@ def bpe_token_counts(
         )
     )
     return out.select(
-        F.col("id").alias(id_col), "n_words", "n_bpe_tokens"
+        F.col("id").alias("doc_id"), "n_words", "n_bpe_tokens"
     )

@@ -18,13 +18,11 @@ def write_bucketed(
     table: str,
     bucket_col: str,
     n_buckets: int = 32,
-    sort: bool = True,
 ) -> None:
-    """Persist as a bucketed (and optionally sorted) managed table."""
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-    if sort:
-        writer = writer.sortBy(bucket_col)
-    writer.saveAsTable(table)
+    """Persist as a bucketed managed table, sorted on the bucket key."""
+    df.write.mode("overwrite").bucketBy(n_buckets, bucket_col).sortBy(
+        bucket_col
+    ).saveAsTable(table)
 
 
 def bucketed_join(

@@ -80,13 +80,7 @@ def _min_perm_kernel(k: int):
     return _sigs
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 64,
-    shingle_n: int = 5,
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, k: int = 64) -> DataFrame:
     """id → k-element MinHash signature over the shingle set.
 
     Stage 1 (JVM, codegen): shingle strings → one xxhash64 long each.
@@ -98,19 +92,13 @@ def minhash_signatures(
     docs vs ~2 s here).
     """
     base = F.transform(
-        shingle_array(F.col(text_col), shingle_n), lambda s: F.xxhash64(s)
+        shingle_array(F.col("text")), lambda s: F.xxhash64(s)
     )
-    staged = df.select(F.col(id_col).alias("id"), base.alias("base"))
+    staged = df.select(F.col("doc_id").alias("id"), base.alias("base"))
     return staged.select("id", _min_perm_kernel(k)("base").alias("sig"))
 
 
-def minhash_signatures_portable(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 2,
-    shingle_n: int = 5,
-) -> DataFrame:
+def minhash_signatures_portable(df: DataFrame, k: int = 2) -> DataFrame:
     """The SAME min-permutation kernel over a portable base hash:
     60-bit md5 prefix (conv of 15 hex chars) instead of xxhash64, so an
     independent SQL engine can recompute every signature value exactly
@@ -119,15 +107,15 @@ def minhash_signatures_portable(
     variant differs ONLY in the base hash function.
     """
     base = F.transform(
-        shingle_array(F.col(text_col), shingle_n),
+        shingle_array(F.col("text")),
         lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
     )
-    staged = df.select(F.col(id_col).alias("id"), base.alias("base"))
+    staged = df.select(F.col("doc_id").alias("id"), base.alias("base"))
     return staged.select("id", _min_perm_kernel(k)("base").alias("sig"))
 
 
 def lsh_candidate_pairs(
-    sig_df: DataFrame, bands: int = 16, k: int = 64, materialize: bool = True
+    sig_df: DataFrame, bands: int = 16, k: int = 64
 ) -> DataFrame:
     """Band the signatures; docs sharing any band bucket are candidates.
 
@@ -192,33 +180,16 @@ def lsh_candidate_pairs(
     # checkpoint dir is configured — same cluster-survivability rule as
     # connected_components; localCheckpoint is the local-mode fallback
     # and its blocks live until the returned frame is GC'd (a bounded
-    # pair set, vs the full exploded sig cache). ``materialize=False``
-    # keeps the plan lazy (plan audits, schema-only callers) at the
-    # cost of recomputing sigs per consumer.
-    if materialize:
-        out = materialized(out)
-        sigs.unpersist()
-    else:
-        sigs.unpersist(blocking=False)
+    # pair set, vs the full exploded sig cache).
+    out = materialized(out)
+    sigs.unpersist()
     return out
 
 
-def minhash_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.7,
-    k: int = 64,
-    bands: int = 16,
-    materialize: bool = True,
-) -> DataFrame:
-    """End-to-end near-dup pairs above the estimated-Jaccard threshold.
-
-    ``materialize=False`` keeps the whole plan lazy (schema-only
-    callers, plan audits) — see lsh_candidate_pairs.
-    """
-    sigs = minhash_signatures(df, text_col, id_col, k=k)
-    pairs = lsh_candidate_pairs(sigs, bands=bands, k=k, materialize=materialize)
+def minhash_dedup(df: DataFrame, threshold: float = 0.7) -> DataFrame:
+    """End-to-end near-dup pairs above the estimated-Jaccard threshold."""
+    sigs = minhash_signatures(df)
+    pairs = lsh_candidate_pairs(sigs)
     return pairs.filter(F.col("est_jaccard") >= threshold)
 
 
@@ -256,12 +227,7 @@ def simhash_64(text: Column) -> Column:
     return simhash_64_from_token_hashes(hashes)
 
 
-def simhash_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-) -> DataFrame:
+def simhash_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs with SimHash Hamming distance ≤ max_hamming.
 
     Candidate generation blocks on 16-bit chunks (pigeonhole: distance
@@ -269,7 +235,7 @@ def simhash_pairs(
     chunk values, not all-pairs.
     """
     hashed = df.select(
-        F.col(id_col).alias("id"), simhash_64(F.col(text_col)).alias("sh")
+        F.col("doc_id").alias("id"), simhash_64(F.col("text")).alias("sh")
     )
     return simhash_pairs_from(hashed, max_hamming)
 
@@ -344,11 +310,7 @@ def dedup_keep_best(
     )
 
 
-def incremental_dedup(
-    new_docs: DataFrame,
-    seen: DataFrame,
-    key: str = "text_hash",
-) -> DataFrame:
+def incremental_dedup(new_docs: DataFrame, seen: DataFrame) -> DataFrame:
     """Dedup a new batch against the accumulated corpus: keep new rows
     whose content key is absent from ``seen`` (left-anti join), then
     dedup within the batch itself (first occurrence by the key).
@@ -361,9 +323,9 @@ def incremental_dedup(
     elide the shuffle entirely on repeated runs (operators/bucketing).
     """
     survivors = new_docs.join(
-        seen.select(key).distinct(), key, "left_anti"
+        seen.select("text_hash").distinct(), "text_hash", "left_anti"
     )
-    return dedup_keep_best(survivors, key, [F.asc("doc_id")])
+    return dedup_keep_best(survivors, "text_hash", [F.asc("doc_id")])
 
 
 def connected_components(
@@ -488,13 +450,7 @@ def connected_components(
     return labels
 
 
-def prefix_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 5,
-) -> DataFrame:
+def prefix_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Exact-threshold Jaccard set-similarity self-join via prefix
     filtering (the All-Pairs / PPJoin candidate scheme, re-expressed as
     DataFrame ops in the Vernica-et-al. distributed formulation).
@@ -541,9 +497,9 @@ def prefix_jaccard_pairs(
     # of corpus size.
     sh = (
         docs.select(
-            F.col(id_col).alias("doc_id"),
+            "doc_id",
             F.transform(
-                shingle_array(F.col(text_col), shingle_n),
+                shingle_array(F.col("text")),
                 lambda s: F.xxhash64(s),
             ).alias("sh"),
         )

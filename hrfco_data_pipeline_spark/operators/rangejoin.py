@@ -29,8 +29,6 @@ def range_join_banded(
     points: DataFrame,
     intervals: DataFrame,
     ts_col: str = "ts",
-    start_col: str = "w_start",
-    end_col: str = "w_end",
     unit: str = "hour",
 ) -> DataFrame:
     """Join point rows to every interval containing them
@@ -45,13 +43,13 @@ def range_join_banded(
         "_band",
         F.explode(
             F.sequence(
-                F.date_trunc(unit, F.col(start_col)),
+                F.date_trunc(unit, F.col("w_start")),
                 # end is exclusive: an interval ending exactly on a
                 # band boundary contributes nothing to that band, but
                 # the spurious band row is harmless — the refine
                 # predicate drops it; keeping the sequence inclusive
                 # avoids an empty-sequence corner for tiny intervals.
-                F.date_trunc(unit, F.col(end_col)),
+                F.date_trunc(unit, F.col("w_end")),
                 F.expr(f"INTERVAL 1 {unit}"),
             )
         ),
@@ -60,8 +58,8 @@ def range_join_banded(
     return (
         pts.join(bands, "_band")
         .filter(
-            (F.col(ts_col) >= F.col(start_col))
-            & (F.col(ts_col) < F.col(end_col))
+            (F.col(ts_col) >= F.col("w_start"))
+            & (F.col(ts_col) < F.col("w_end"))
         )
         .drop("_band")
     )

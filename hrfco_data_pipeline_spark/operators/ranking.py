@@ -9,7 +9,7 @@ cumulative sum, or ntile over a table that grows with the data:
 1. **Deterministic sampled boundaries** (one bounded-size aggregate):
    rows whose ``xxhash64(sample_key) % sample_mod == 0`` form a
    deterministic sample; its sorted bucket-key array yields
-   ``n_buckets - 1`` range boundaries. Sorting the collected sample
+   ``N_BUCKETS - 1`` range boundaries. Sorting the collected sample
    makes the boundary array identical across re-executions — unlike
    ``spark_partition_id()`` after ``repartitionByRange`` (whose
    partition ids can shift under AQE re-planning between plan
@@ -22,7 +22,7 @@ cumulative sum, or ntile over a table that grows with the data:
    run under ``Window.partitionBy(bucket)`` — a hash exchange on the
    bucket id, each bucket sorted independently in parallel.
 3. **Tiny offset table**: per-bucket row counts and value sums
-   (≤ ``n_buckets`` rows) get prefix-summed on the driver-sized side
+   (≤ ``N_BUCKETS`` rows) get prefix-summed on the driver-sized side
    and broadcast-joined back; ``global = local + offset_of_prior
    buckets``.
 
@@ -46,7 +46,7 @@ sample is capped at ``sample_cap`` rows BY CONSTRUCTION: a one-row
 count of the first-level hash sample drives a second-level hash cut
 (keep 1-in-⌈count/cap⌉), so the collect stays bounded at any input
 size without caller tuning — ``sample_mod`` only sets how cheap the
-counting scan is. At 100 TB, raise ``n_buckets`` toward the cluster's
+counting scan is. At 100 TB, raise ``N_BUCKETS`` toward the cluster's
 task count.
 
 Reference parity note: the reference engine has no global-rank
@@ -59,6 +59,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+N_BUCKETS = 32
+
 
 def ranked_cumsum(
     df: DataFrame,
@@ -68,7 +70,6 @@ def ranked_cumsum(
     sample_key: Column,
     sums: dict[str, Column] | None = None,
     rank_name: str = "rank",
-    n_buckets: int = 32,
     sample_mod: int = 64,
     sample_cap: int = 10_000,
     partition_cols: list[str] | None = None,
@@ -82,7 +83,7 @@ def ranked_cumsum(
     partition (the SQL ``PARTITION BY p ORDER BY ...`` shape) while the
     range bucketing on ``bucket_key`` still splits EACH partition's
     order across tasks: local windows run per (partition, bucket) and
-    the offset join carries |partitions| x n_buckets rows — still
+    the offset join carries |partitions| x N_BUCKETS rows — still
     broadcastable whenever the partition domain is metadata-scale
     (event types, languages, sources). Boundaries stay GLOBAL (one
     sample over all partitions): per-partition value distributions may
@@ -145,15 +146,15 @@ def ranked_cumsum(
     )
     arr = F.sort_array(F.collect_list("_bk"))
     sz = F.size("_arr")
-    idx = lambda i: (F.floor((sz * i) / F.lit(n_buckets)) + 1).cast("int")  # noqa: E731
+    idx = lambda i: (F.floor((sz * i) / F.lit(N_BUCKETS)) + 1).cast("int")  # noqa: E731
     bounds = (
         sample.agg(arr.alias("_arr"))
         .select(
             F.when(
-                sz >= n_buckets,
+                sz >= N_BUCKETS,
                 F.array_distinct(
                     F.transform(
-                        F.sequence(F.lit(1), F.lit(n_buckets - 1)),
+                        F.sequence(F.lit(1), F.lit(N_BUCKETS - 1)),
                         lambda i: F.element_at(F.col("_arr"), idx(i)),
                     )
                 ),
@@ -179,7 +180,7 @@ def ranked_cumsum(
     for name, col in maxes.items():
         local = local.withColumn(f"_lm_{name}", F.max(col).over(wcum))
 
-    # Per-bucket totals: <= |partitions| x n_buckets rows, so the
+    # Per-bucket totals: <= |partitions| x N_BUCKETS rows, so the
     # prefix-sum window below is bounded by construction — not a smell.
     stats = withpid.groupBy(*parts, "_pid").agg(
         F.count("*").alias("_cnt"),

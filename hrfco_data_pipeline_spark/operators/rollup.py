@@ -25,9 +25,8 @@ def rollup_by_bucket(
     keys: list[str],
     aggs: list[Column],
     width: str = "hour",
-    bucket_name: str = "bucket",
 ) -> DataFrame:
     """Generic rollup: group by (time bucket, keys) and aggregate."""
     return df.groupBy(
-        time_bucket(time_col, width).alias(bucket_name), *keys
+        time_bucket(time_col, width).alias("bucket"), *keys
     ).agg(*aggs)

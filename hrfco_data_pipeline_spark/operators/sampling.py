@@ -49,10 +49,10 @@ def hash_bucket(key: Column | str, buckets: int = BUCKETS) -> Column:
     return (h + b) % b
 
 
-def sample_exact(df: DataFrame, key: str, rate: float, buckets: int = BUCKETS) -> DataFrame:
-    """Keep rows whose hash bucket < rate·buckets — an exact,
-    engine-portable Bernoulli sample at resolution 1/buckets."""
-    return df.filter(hash_bucket(key, buckets) < int(rate * buckets))
+def sample_exact(df: DataFrame, key: str, rate: float) -> DataFrame:
+    """Keep rows whose hash bucket < rate·BUCKETS — an exact,
+    engine-portable Bernoulli sample at resolution 1/BUCKETS."""
+    return df.filter(hash_bucket(key, BUCKETS) < int(rate * BUCKETS))
 
 
 def stratified_sample(
@@ -141,33 +141,26 @@ def pack_sequences(
 FFD_SCHEMA = "doc_id long, n_tokens long, pack_id long"
 
 
-def pack_sequences_ffd(
-    df: DataFrame,
-    token_col: str = "n_tokens",
-    id_col: str = "doc_id",
-    budget: int = 2048,
-    stratum: str | None = None,
-) -> DataFrame:
-    """First-fit-decreasing packing: within each stratum, sort items by
-    (tokens desc, id asc) and place each into the first open pack with
-    room — the classic bin-packing heuristic (≤ 11/9·OPT + 1 bins),
-    tighter than the streaming running-sum pack at the cost of holding
-    the stratum's open-pack table in memory.
+def pack_sequences_ffd(df: DataFrame, budget: int = 2048) -> DataFrame:
+    """First-fit-decreasing packing of ``(doc_id, n_tokens)`` rows: sort
+    items by (tokens desc, id asc) and place each into the first open
+    pack with room — the classic bin-packing heuristic (≤ 11/9·OPT + 1
+    bins), tighter than the streaming running-sum pack at the cost of
+    holding the open-pack table in memory.
 
-    Spark shape: ``applyInPandas`` per stratum — the packing itself is
-    inherently sequential, so the parallel unit is the stratum (shard /
-    source file), exactly how a 100 TB pack job runs. Deterministic:
-    the sort key is total and placement is first-fit."""
+    Spark shape: one ``applyInPandas`` group — the packing itself is
+    inherently sequential. Deterministic: the sort key is total and
+    placement is first-fit."""
     import pandas as pd
 
     def _ffd(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(
-            [token_col, id_col], ascending=[False, True], kind="stable"
+            ["n_tokens", "doc_id"], ascending=[False, True], kind="stable"
         )
         loads: list[int] = []
         out = []
         for row in pdf.itertuples(index=False):
-            toks = int(getattr(row, token_col))
+            toks = int(row.n_tokens)
             placed = None
             for i, load in enumerate(loads):
                 if load + toks <= budget:
@@ -177,14 +170,8 @@ def pack_sequences_ffd(
                 placed = len(loads)
                 loads.append(0)
             loads[placed] += toks
-            out.append((int(getattr(row, id_col)), toks, placed))
+            out.append((int(row.doc_id), toks, placed))
         return pd.DataFrame(out, columns=["doc_id", "n_tokens", "pack_id"])
 
-    cols = [id_col, token_col] + ([stratum] if stratum else [])
-    base = df.select(*cols)
-    if stratum is None:
-        base = base.withColumn("_stratum", F.lit(1))
-        key = "_stratum"
-    else:
-        key = stratum
-    return base.groupBy(key).applyInPandas(_ffd, FFD_SCHEMA)
+    base = df.select("doc_id", "n_tokens").withColumn("_stratum", F.lit(1))
+    return base.groupBy("_stratum").applyInPandas(_ffd, FFD_SCHEMA)

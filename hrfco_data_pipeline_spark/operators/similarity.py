@@ -19,6 +19,10 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# Fixed-point scale of the exact-integer centroid means (ivf_centroids,
+# pq_subcentroids, kmeans_iterate): components sum as floor(v * QUANT).
+QUANT = 1_000_000
+
 
 def dot(a: Column | str, b: Column | str) -> Column:
     """Fold-left dot product of two equal-length double arrays."""
@@ -39,12 +43,10 @@ def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
 ) -> DataFrame:
     """Exact cosine top-k: broadcast queries × corpus scan + window."""
-    c = with_norm(corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")), "cv", "cn")
-    q = with_norm(queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")), "qv", "qn")
+    c = with_norm(corpus.select(F.col("vec_id").alias("cid"), F.col("v").alias("cv")), "cv", "cn")
+    q = with_norm(queries.select(F.col("vec_id").alias("qid"), F.col("v").alias("qv")), "qv", "qn")
     joined = c.join(F.broadcast(q), F.col("cid") != F.col("qid"))
     cos = dot("qv", "cv") / (F.col("qn") * F.col("cn"))
     w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("cid"))
@@ -87,12 +89,9 @@ def hyperplane_lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
     dim: int = 64,
     n_planes: int = 16,
     bands: int = 4,
-    seed: int = 42,
 ) -> DataFrame:
     """Approximate cosine top-k: candidates share ≥1 signature band.
 
@@ -100,7 +99,7 @@ def hyperplane_lsh_topk(
     Recall rises with bands; cost with bucket size. Same output schema
     as ``brute_force_topk`` (qid, cid, cos_sim, rank) for easy A/B.
     """
-    planes = hyperplane_planes(dim, n_planes, seed)
+    planes = hyperplane_planes(dim, n_planes)
     rows = n_planes // bands
     mask = (1 << rows) - 1
 
@@ -126,8 +125,8 @@ def hyperplane_lsh_topk(
             ).alias("bb"),
         ).select(idn, vecn, nrm, F.col("bb.band").alias("band"), F.col("bb.bits").alias("bits"))
 
-    c = with_norm(corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")), "cv", "cn")
-    q = with_norm(queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")), "qv", "qn")
+    c = with_norm(corpus.select(F.col("vec_id").alias("cid"), F.col("v").alias("cv")), "cv", "cn")
+    q = with_norm(queries.select(F.col("vec_id").alias("qid"), F.col("v").alias("qv")), "qv", "qn")
     cb = banded(c, "cid", "cv", "cn")
     qb = banded(q, "qid", "qv", "qn")
     cand = cb.join(
@@ -148,24 +147,19 @@ def hyperplane_lsh_topk(
 def lsh_near_dup_pairs(
     vectors: DataFrame,
     threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-    dim: int = 64,
-    n_planes: int = 16,
-    bands: int = 4,
-    seed: int = 42,
 ) -> DataFrame:
-    """Embedding-cosine near-dup: corpus×corpus pairs with cos ≥ τ.
+    """Embedding-cosine near-dup: corpus×corpus pairs with cos ≥ τ over
+    64-dim vectors, 16 sign planes in 4 bands of 4 bits.
 
     Candidate pairs must share a signature band (self-join on
     (band, bits) — bounded buckets, the 100 TB shape), then the exact
     cosine filters. Output: (id_a, id_b, cos_sim).
     """
-    planes = hyperplane_planes(dim, n_planes, seed)
-    rows = n_planes // bands
+    bands, rows = 4, 4
+    planes = hyperplane_planes(64, bands * rows)
     mask = (1 << rows) - 1
     v = with_norm(
-        vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vv")),
+        vectors.select(F.col("vec_id").alias("id"), F.col("v").alias("vv")),
         "vv",
         "nn",
     ).withColumn("sig", hyperplane_signature("vv", planes))
@@ -214,10 +208,7 @@ def lsh_near_dup_pairs(
 def ivf_centroids(
     vectors: DataFrame,
     n_centroids: int = 16,
-    vec_col: str = "v",
-    id_col: str = "vec_id",
     dim: int | None = None,
-    quant: int = 1_000_000,
 ) -> list[list[float]]:
     """Deterministic IVF centroids: one averaging pass over a hashed
     pre-assignment (a single Lloyd step from a deterministic seed —
@@ -231,11 +222,11 @@ def ivf_centroids(
       decimal string rendering, first 15 hex digits as an integer
       (the same portable base hash the MinHash/SimHash probes use;
       xxhash64 is engine-specific).
-    - mean arithmetic: each component is quantized q = floor(v*quant)
+    - mean arithmetic: each component is quantized q = floor(v*QUANT)
       (both ops IEEE-exact-defined on doubles), summed as exact
       integers (DECIMAL(38,0) — no float summation order anywhere),
       and the centroid component is the correctly-rounded double of
-      the rational S / (n*quant) (Python int/int true division).
+      the rational S / (n*QUANT) (Python int/int true division).
       Exact reproduction in double-only engines requires |S| < 2^53 —
       holds through ~10^9 vectors per cell at |v| <= 1; beyond that
       the twin must divide as DECIMAL.
@@ -245,9 +236,9 @@ def ivf_centroids(
     ``first()`` job to sniff it.
     """
     if dim is None:
-        dim = len(vectors.select(vec_col).first()[0])
+        dim = len(vectors.select("v").first()[0])
     cell = (
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10)
+        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10)
         .cast("long")
         % n_centroids
     ).alias("c")
@@ -260,7 +251,7 @@ def ivf_centroids(
     seeded = vectors.select(
         cell,
         F.posexplode(
-            F.transform(vec_col, lambda x: F.floor(x * quant))
+            F.transform("v", lambda x: F.floor(x * QUANT))
         ).alias("i", "q"),
     )
     sums = seeded.groupBy("c", "i").agg(
@@ -275,7 +266,7 @@ def ivf_centroids(
         else:
             cents.append(
                 [
-                    int(rows[(c, i)]["s"]) / (rows[(c, i)]["n"] * quant)
+                    int(rows[(c, i)]["s"]) / (rows[(c, i)]["n"] * QUANT)
                     for i in range(dim)
                 ]
             )
@@ -301,8 +292,6 @@ def ivf_topk(
     queries: DataFrame,
     cents: list[list[float]],
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
 ) -> DataFrame:
     """IVF-flat ANN: corpus partitioned by nearest centroid; each query
     probes only its own cell (nprobe=1). The inverted-file analog of the
@@ -310,12 +299,12 @@ def ivf_topk(
     is |cell| not |corpus|.
     """
     c = with_norm(
-        corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")),
+        corpus.select(F.col("vec_id").alias("cid"), F.col("v").alias("cv")),
         "cv",
         "cn",
     ).withColumn("cell", _nearest_centroid("cv", cents))
     q = with_norm(
-        queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")),
+        queries.select(F.col("vec_id").alias("qid"), F.col("v").alias("qv")),
         "qv",
         "qn",
     ).withColumn("cell", _nearest_centroid("qv", cents))
@@ -344,9 +333,6 @@ def pq_subcentroids(
     m: int = 8,
     ksub: int = 16,
     dim: int = 64,
-    vec_col: str = "v",
-    id_col: str = "vec_id",
-    quant: int = 1_000_000,
 ) -> list[list[list[float]]]:
     """Deterministic product-quantization codebook: ``m`` sub-spaces of
     ``dim/m`` components, ``ksub`` sub-centroids each, trained exactly
@@ -360,7 +346,7 @@ def pq_subcentroids(
     dsub-float sub-centroid.
     """
     dsub = dim // m
-    q = F.transform(vec_col, lambda x: F.floor(x * quant))
+    q = F.transform("v", lambda x: F.floor(x * QUANT))
     structs = F.array(
         *[
             F.struct(
@@ -370,7 +356,7 @@ def pq_subcentroids(
                         F.substring(
                             F.md5(
                                 F.concat(
-                                    F.col(id_col).cast("string"), F.lit(f":{j}")
+                                    F.col("vec_id").cast("string"), F.lit(f":{j}")
                                 )
                             ),
                             1,
@@ -406,7 +392,7 @@ def pq_subcentroids(
                 sub.append([0.0] * dsub)
             else:
                 sub.append(
-                    [int(r[f"s{t}"]) / (r["n"] * quant) for t in range(dsub)]
+                    [int(r[f"s{t}"]) / (r["n"] * QUANT) for t in range(dsub)]
                 )
         cents.append(sub)
     return cents
@@ -416,7 +402,7 @@ def _cmat_lit(cent_j: list[list[float]]) -> Column:
     return F.array(*[F.array(*[F.lit(x) for x in c]) for c in cent_j])
 
 
-def pq_codes(cents: list[list[list[float]]], vec_col: str = "v") -> Column:
+def pq_codes(cents: list[list[list[float]]]) -> Column:
     """PQ encoding: per sub-space, index of the nearest (squared-L2)
     sub-centroid — first index wins ties, matching list_position-of-min.
     The resulting m-int array is the 32x-compressed representation the
@@ -425,7 +411,7 @@ def pq_codes(cents: list[list[list[float]]], vec_col: str = "v") -> Column:
     dsub = len(cents[0][0])
     codes = []
     for j in range(m):
-        sub = F.slice(vec_col, j * dsub + 1, dsub)
+        sub = F.slice("v", j * dsub + 1, dsub)
         dists = F.transform(_cmat_lit(cents[j]), lambda c: l2sq(sub, c))
         codes.append((F.array_position(dists, F.array_min(dists)) - 1).cast("int"))
     return F.array(*codes)
@@ -436,8 +422,6 @@ def pq_adc_topk(
     queries: DataFrame,
     cents: list[list[list[float]]],
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k: each query precomputes its
     m × ksub table of sub-distances to every sub-centroid, then scores
@@ -452,14 +436,14 @@ def pq_adc_topk(
     m = len(cents)
     dsub = len(cents[0][0])
     enc = corpus.select(
-        F.col(id_col).alias("cid"), pq_codes(cents, vec_col).alias("codes")
+        F.col("vec_id").alias("cid"), pq_codes(cents).alias("codes")
     )
     def _sub_table(j: int) -> Column:
-        sub = F.slice(vec_col, j * dsub + 1, dsub)
+        sub = F.slice("v", j * dsub + 1, dsub)
         return F.transform(_cmat_lit(cents[j]), lambda c: l2sq(sub, c))
 
     qtab = F.array(*[_sub_table(j) for j in range(m)])
-    q = queries.select(F.col(id_col).alias("qid"), qtab.alias("qtab"))
+    q = queries.select(F.col("vec_id").alias("qid"), qtab.alias("qtab"))
     joined = enc.join(F.broadcast(q), F.col("cid") != F.col("qid"))
     approx = F.aggregate(
         F.zip_with("qtab", "codes", lambda t, c: F.element_at(t, c + 1)),
@@ -480,8 +464,6 @@ def ivfpq_topk(
     coarse_cents: list[list[float]],
     pq_cents: list[list[list[float]]],
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
 ) -> DataFrame:
     """The full IVF-PQ structure: the coarse quantizer (ivf_centroids)
     routes each query to one inverted list (nprobe=1) and PQ ADC
@@ -492,18 +474,18 @@ def ivfpq_topk(
     m = len(pq_cents)
     dsub = len(pq_cents[0][0])
     enc = corpus.select(
-        F.col(id_col).alias("cid"),
-        _nearest_centroid(vec_col, coarse_cents).alias("cell"),
-        pq_codes(pq_cents, vec_col).alias("codes"),
+        F.col("vec_id").alias("cid"),
+        _nearest_centroid("v", coarse_cents).alias("cell"),
+        pq_codes(pq_cents).alias("codes"),
     )
 
     def _sub_table(j: int) -> Column:
-        sub = F.slice(vec_col, j * dsub + 1, dsub)
+        sub = F.slice("v", j * dsub + 1, dsub)
         return F.transform(_cmat_lit(pq_cents[j]), lambda c: l2sq(sub, c))
 
     q = queries.select(
-        F.col(id_col).alias("qid"),
-        _nearest_centroid(vec_col, coarse_cents).alias("qcell"),
+        F.col("vec_id").alias("qid"),
+        _nearest_centroid("v", coarse_cents).alias("qcell"),
         F.array(*[_sub_table(j) for j in range(m)]).alias("qtab"),
     )
     joined = enc.join(
@@ -526,8 +508,6 @@ def ivfpq_topk(
 def assign_cells(
     vectors: DataFrame,
     cents: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "v",
 ) -> DataFrame:
     """E-step: cell = argmax centroid dot (first max wins), plus the
     vector norm and the cosine to the assigned centroid.
@@ -539,10 +519,10 @@ def assign_cells(
     cent_arr = F.array(*[F.array(*[F.lit(x) for x in c]) for c in cents])
     cnorms = F.transform(cent_arr, lambda c: F.sqrt(dot(c, c)))
     out = vectors.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.transform(cent_arr, lambda c: dot(vec_col, c)).alias("dots"),
-        F.sqrt(dot(vec_col, vec_col)).alias("nrm"),
+        F.col("vec_id"),
+        F.col("v"),
+        F.transform(cent_arr, lambda c: dot("v", c)).alias("dots"),
+        F.sqrt(dot("v", "v")).alias("nrm"),
     )
     out = out.withColumn(
         "cell", (F.array_position("dots", F.array_max("dots")) - 1).cast("int")
@@ -558,9 +538,6 @@ def kmeans_iterate(
     vectors: DataFrame,
     cents: list[list[float]],
     iters: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-    quant: int = 1_000_000,
 ) -> list[list[float]]:
     """Lloyd refinement: ``iters`` rounds of (nearest-centroid E-step,
     exact-integer M-step). Each M-step uses the same floor-quantized
@@ -576,13 +553,13 @@ def kmeans_iterate(
     dim = len(cents[0])
     n_centroids = len(cents)
     for _ in range(iters):
-        assigned = assign_cells(vectors, cents, id_col, vec_col)
+        assigned = assign_cells(vectors, cents)
         # melted M-step: one agg column over posexplode (see
         # ivf_centroids — the wide dim-column agg is codegen-bound)
         seeded = assigned.select(
             "cell",
             F.posexplode(
-                F.transform(vec_col, lambda x: F.floor(x * quant))
+                F.transform("v", lambda x: F.floor(x * QUANT))
             ).alias("i", "q"),
         )
         sums = seeded.groupBy("cell", "i").agg(
@@ -597,7 +574,7 @@ def kmeans_iterate(
             else:
                 nxt.append(
                     [
-                        int(rows[(c, i)]["s"]) / (rows[(c, i)]["n"] * quant)
+                        int(rows[(c, i)]["s"]) / (rows[(c, i)]["n"] * QUANT)
                         for i in range(dim)
                     ]
                 )
@@ -609,8 +586,6 @@ def semantic_dedup(
     vectors: DataFrame,
     cents: list[list[float]],
     threshold: float = 0.35,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster the corpus, then prune near-duplicate
@@ -636,19 +611,19 @@ def semantic_dedup(
     # expensive part to re-plan/execute — materialize it once, the
     # same "write cluster assignments first" shape production SemDeDup
     # uses (spills to disk at corpus scale)
-    base = assign_cells(vectors, cents, id_col, vec_col).persist(
+    base = assign_cells(vectors, cents).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     a = base.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("va"),
+        F.col("vec_id").alias("id_a"),
+        F.col("v").alias("va"),
         F.col("nrm").alias("na"),
         "cell",
         F.col("cos_cent").alias("ca"),
     )
     b = base.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vb"),
+        F.col("vec_id").alias("id_b"),
+        F.col("v").alias("vb"),
         F.col("nrm").alias("nb"),
         "cell",
         F.col("cos_cent").alias("cb"),
@@ -664,11 +639,11 @@ def semantic_dedup(
         | ((F.col("ca") == F.col("cb")) & (F.col("id_a") < F.col("id_b"))),
         F.col("id_b"),
     ).otherwise(F.col("id_a"))
-    pruned = pairs.select(dominated.alias(id_col)).distinct()
+    pruned = pairs.select(dominated.alias("vec_id")).distinct()
     return base.join(
-        pruned.withColumn("_pruned", F.lit(True)), id_col, "left"
+        pruned.withColumn("_pruned", F.lit(True)), "vec_id", "left"
     ).select(
-        id_col,
+        "vec_id",
         "cell",
         "cos_cent",
         F.col("_pruned").isNull().alias("kept"),

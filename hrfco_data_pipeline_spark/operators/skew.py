@@ -98,7 +98,6 @@ def choose_join_strategy(
     small: DataFrame,
     big_key: str,
     *,
-    broadcast_max_bytes: int = 64 * 1024 * 1024,
     broadcast_max_rows: int | None = None,
     skew_mean_ratio: float = 4.0,
     max_salt: int = 32,
@@ -116,10 +115,10 @@ def choose_join_strategy(
     time, not per batch. The skew profile is exactly what
     lineitem_key_skew_profile reports, reduced to the decision inputs.
 
-    - ``broadcast`` when the small side fits under
-      ``broadcast_max_bytes`` (Catalyst's size estimate when it has
-      one; pass ``broadcast_max_rows`` to decide on row count where
-      byte stats are unavailable or a portable rule is needed).
+    - ``broadcast`` when the small side fits under 64 MiB (Catalyst's
+      size estimate when it has one; pass ``broadcast_max_rows`` to
+      decide on row count where byte stats are unavailable or a
+      portable rule is needed).
     - ``salted`` when broadcast is out AND the hottest key holds
       ``skew_mean_ratio``x the mean rows-per-key; the salt spreads
       the hot key back to ~mean task size: next power of two >=
@@ -154,7 +153,7 @@ def choose_join_strategy(
     if broadcast_max_rows is not None:
         fits = small_rows <= broadcast_max_rows
     else:
-        fits = small_bytes >= 0 and small_bytes <= broadcast_max_bytes
+        fits = 0 <= small_bytes <= 64 * 1024 * 1024
     if fits:
         strategy, salt = "broadcast", 1
     elif mean_ratio >= skew_mean_ratio:
@@ -182,17 +181,14 @@ def apply_join_strategy(
     small_key: str,
     scatter_on: Column,
     decision: JoinStrategy,
-    how: str = "inner",
 ) -> DataFrame:
-    """Execute a ``choose_join_strategy`` decision: broadcast hint,
-    ``salted_join`` with the chosen salt, or the plain equi-join
-    (AQE's problem). All three produce row-identical output."""
+    """Execute a ``choose_join_strategy`` decision as an inner join:
+    broadcast hint, ``salted_join`` with the chosen salt, or the plain
+    equi-join (AQE's problem). All three produce row-identical output."""
     if decision.strategy == "broadcast":
-        return big.join(
-            F.broadcast(small), big[big_key] == small[small_key], how
-        )
+        return big.join(F.broadcast(small), big[big_key] == small[small_key])
     if decision.strategy == "salted":
         return salted_join(
-            big, small, big_key, small_key, scatter_on, decision.salt, how
+            big, small, big_key, small_key, scatter_on, decision.salt
         )
-    return big.join(small, big[big_key] == small[small_key], how)
+    return big.join(small, big[big_key] == small[small_key])

@@ -42,12 +42,8 @@ def _coerce_dynamic(col: str, dtype: str) -> Column:
     return c.cast("string")
 
 
-def dynamic_station_tail(
-    df: DataFrame,
-    key_col: str = "wlobscd",
-    fixed: tuple[str, ...] = THRESHOLD_COLS,
-) -> DataFrame:
-    """key + typed thresholds + ``extra`` map of every other column.
+def dynamic_station_tail(df: DataFrame) -> DataFrame:
+    """``wlobscd`` + typed thresholds + ``extra`` map of every other column.
 
     The map preserves the reference's keep-everything contract: a
     station table with API fields beyond the fixed schema no longer
@@ -55,22 +51,24 @@ def dynamic_station_tail(
     explicit nulls: ``stationDoc.put(key, null)``).
     """
     dtypes = dict(df.dtypes)
-    tail_cols = [c for c in df.columns if c != key_col and c not in fixed]
+    tail_cols = [
+        c for c in df.columns if c != "wlobscd" and c not in THRESHOLD_COLS
+    ]
     entries = list(
         chain.from_iterable(
             (F.lit(c), _coerce_dynamic(c, dtypes[c])) for c in tail_cols
         )
     )
-    keep_fixed = [c for c in fixed if c in df.columns]
-    return df.select(key_col, *keep_fixed, F.create_map(*entries).alias("extra"))
+    keep_fixed = [c for c in THRESHOLD_COLS if c in df.columns]
+    return df.select("wlobscd", *keep_fixed, F.create_map(*entries).alias("extra"))
 
 
-def explode_station_tail(df: DataFrame, key_col: str = "wlobscd") -> DataFrame:
-    """(key, field, value) pairs — the oracle-checkable flat view.
+def explode_station_tail(df: DataFrame) -> DataFrame:
+    """(wlobscd, field, value) pairs — the oracle-checkable flat view.
 
     ``explode_outer`` over the map keeps entries whose value is null
     (a plain ``explode`` would too — it only drops empty/null maps).
     """
     return df.select(
-        key_col, F.explode_outer("extra").alias("field", "value")
+        "wlobscd", F.explode_outer("extra").alias("field", "value")
     )

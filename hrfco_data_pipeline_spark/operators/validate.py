@@ -11,7 +11,8 @@ WaterLevelValidator.java:52-115):
 - F2 does not drop: it computes a boolean. A record is range-valid iff
   (wl is null OR min_wl ≤ wl ≤ max_wl) AND (fw is null OR
   min_fw ≤ fw ≤ max_fw). Bounds are env-overridable in the reference
-  (VALIDATOR_MIN_WATER_LEVEL etc.); here they are keyword arguments.
+  (VALIDATOR_MIN_WATER_LEVEL etc.); here they are keyword arguments of
+  ``range_valid_predicate``.
 
 Both are pure Column expressions → whole-stage codegen, fully pushed
 down by Catalyst when applied right after the scan.
@@ -42,19 +43,13 @@ def required_fields_predicate(
     return _present(code) & _present(time) & (_present(wl_raw) | _present(fw_raw))
 
 
-def required_fields_filter(
-    df: DataFrame,
-    code: str = "wlobscd",
-    time: str = "ymdhm",
-    wl: str = "wl",
-    fw: str = "fw",
-) -> DataFrame:
-    """F1: silently drop records missing required fields."""
+def required_fields_filter(df: DataFrame) -> DataFrame:
+    """F1: silently drop wire records missing required fields."""
     return df.filter(
         cached_exprs(
-            ("required_fields", code, time, wl, fw),
+            "required_fields",
             lambda: required_fields_predicate(
-                F.col(code), F.col(time), F.col(wl), F.col(fw)
+                F.col("wlobscd"), F.col("ymdhm"), F.col("wl"), F.col("fw")
             ),
         )
     )
@@ -78,12 +73,10 @@ def range_valid_predicate(
     return wl_ok & fw_ok
 
 
-def range_valid_flag(
-    df: DataFrame,
-    wl: str = "water_level",
-    fw: str = "flow_rate",
-    out: str = "range_valid",
-    **bounds: float,
-) -> DataFrame:
-    """F2: append the boolean range-validity column (never drops rows)."""
-    return df.withColumn(out, range_valid_predicate(F.col(wl), F.col(fw), **bounds))
+def range_valid_flag(df: DataFrame) -> DataFrame:
+    """F2: append the boolean ``range_valid`` column over ``water_level``
+    and ``flow_rate`` at the default bounds (never drops rows)."""
+    return df.withColumn(
+        "range_valid",
+        range_valid_predicate(F.col("water_level"), F.col("flow_rate")),
+    )

@@ -35,14 +35,11 @@ def curate_corpus(
     spark: SparkSession,
     sf_dir: str,
     out_dir: str,
-    quality_cut: float = 0.7,
-    near_dup_threshold: float = 0.5,
-    n_shards: int = 4,
 ) -> dict[str, int]:
     """Run the full curation DAG and write the training corpus.
 
     Returns the funnel report {stage: surviving_docs}. The output at
-    ``out_dir`` is parquet partitioned by (split, shard) with columns
+    ``out_dir`` is parquet partitioned by (split, shard ∈ 0..3) with columns
     (doc_id, text, lang, source, n_toks, position).
     """
     from hrfco_data_pipeline_spark.operators.dedup import (
@@ -65,7 +62,7 @@ def curate_corpus(
         normalize_text("text").alias("text"),
     ).filter(F.length("text") > 0)
     toks = F.split(F.col("text"), r"\s+")
-    gated = normed.filter(quality_score_expr(toks) >= quality_cut)
+    gated = normed.filter(quality_score_expr(toks) >= 0.7)
     bucket = (
         F.conv(F.substring(F.md5(F.lower(F.col("tok"))), 1, 15), 16, 10)
         .cast("long")
@@ -105,7 +102,7 @@ def curate_corpus(
 
     # 5: near dedup — banded MinHash pairs → components → min-id keeps;
     # every clustered doc also learns its cluster root for stage 7
-    pairs = minhash_dedup(exact, threshold=near_dup_threshold)
+    pairs = minhash_dedup(exact, threshold=0.5)
     comp = connected_components(pairs, "id_a", "id_b", distinct_pairs=True)
     rooted = exact.join(
         comp.select(F.col("id").alias("doc_id"), "component"),
@@ -167,7 +164,7 @@ def curate_corpus(
         "position",
         F.col("rank_in_source") * 20
         + F.regexp_replace("source", "[^0-9]", "").cast("long"),
-    ).withColumn("shard", hash_bucket("doc_id", n_shards))
+    ).withColumn("shard", hash_bucket("doc_id", 4))
 
     # 9: sharded write — readers prune on (split, shard)
     (
@@ -182,12 +179,7 @@ def curate_corpus(
     return report
 
 
-def corpus_diff(
-    old: DataFrame,
-    new: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def corpus_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """Version diff between two corpus snapshots: per-doc status in
     {added, removed, changed, unchanged} from a full-outer join on the
     id with content-hash compare — the release artifact a corpus
@@ -195,12 +187,12 @@ def corpus_diff(
     id; hashes are computed in the same scan, so the cost is two scans
     + one shuffle regardless of how much changed."""
     oh = old.select(
-        F.col(id_col).alias("old_id"),
-        F.md5(F.lower(F.col(text_col))).alias("h_old"),
+        F.col("doc_id").alias("old_id"),
+        F.md5(F.lower(F.col("text"))).alias("h_old"),
     )
     nh = new.select(
-        F.col(id_col).alias("new_id"),
-        F.md5(F.lower(F.col(text_col))).alias("h_new"),
+        F.col("doc_id").alias("new_id"),
+        F.md5(F.lower(F.col("text"))).alias("h_new"),
     )
     j = oh.join(nh, oh["old_id"] == nh["new_id"], "full_outer")
     status = (
@@ -210,6 +202,6 @@ def corpus_diff(
         .otherwise("unchanged")
     )
     return j.select(
-        F.coalesce("old_id", "new_id").alias(id_col),
+        F.coalesce("old_id", "new_id").alias("doc_id"),
         status.alias("status"),
     )

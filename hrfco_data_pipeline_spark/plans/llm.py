@@ -30,8 +30,8 @@ from hrfco_data_pipeline_spark.sources.tables import load_table
 STOPWORDS = ("the", "a", "of", "and", "data")
 
 
-def _tokens(col: str = "text") -> Column:
-    return F.split(F.trim(F.col(col)), r"\s+")
+def _tokens() -> Column:
+    return F.split(F.trim(F.col("text")), r"\s+")
 
 
 def _r4(c: Column) -> Column:
@@ -64,7 +64,6 @@ def dedup_exact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def docs_ngram_jaccard_pairs(
     spark: SparkSession,
     sf_dir: str,
-    max_shingle_df: int = 50,
     materialize: bool = True,
 ) -> DataFrame:
     """Near-dup candidate pairs via 5-token shingle overlap + Jaccard.
@@ -74,7 +73,7 @@ def docs_ngram_jaccard_pairs(
     explode inflates rows ~|tokens| per doc, but the join key (shingle)
     is selective, so the shuffle carries only (shingle, doc_id) pairs.
 
-    Hot-shingle cap: a shingle appearing in > ``max_shingle_df`` docs
+    Hot-shingle cap: a shingle appearing in > 50 docs
     (boilerplate headers, licence blocks) would fan the self-join out
     quadratically in that bucket — the standard document-frequency cap
     drops those shingles from *candidate generation* (the Jaccard
@@ -112,7 +111,7 @@ def docs_ngram_jaccard_pairs(
     hot = (
         cached.groupBy("s")
         .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > max_shingle_df)
+        .filter(F.col("df") > 50)
         .select("s")
     )
     ex = cached.join(F.broadcast(hot), "s", "left_anti")
@@ -465,16 +464,13 @@ def multimodal_blob_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pandas stages have no portable SQL twin)
 # --------------------------------------------------------------------------
 
-def minhash_near_dups(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-) -> DataFrame:
+def minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup pairs (operators/dedup.py) — the bounded-
-    shuffle variant of docs_ngram_jaccard_pairs. ``materialize=False``
-    keeps the plan lazy for audits/schema-only callers."""
+    shuffle variant of docs_ngram_jaccard_pairs."""
     from hrfco_data_pipeline_spark.operators.dedup import minhash_dedup
 
     docs = _docs_parallel(spark, sf_dir)
-    return minhash_dedup(docs, threshold=0.5, materialize=materialize)
+    return minhash_dedup(docs, threshold=0.5)
 
 
 def simhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -886,21 +882,21 @@ def docs_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pack_sequences(toks, "n_tokens", "doc_id", budget=512, stratum="lang")
 
 
-def gram_hashes_expr(toks: Column, gram: int = 4) -> Column:
-    """md5 hex of every ``gram``-token gram of a token array."""
+def gram_hashes_expr(toks: Column) -> Column:
+    """md5 hex of every 4-token gram of a token array."""
     n = F.size(toks)
     return F.when(
-        n >= gram,
+        n >= 4,
         F.transform(
-            F.sequence(F.lit(1), n - (gram - 1)),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, F.lit(gram)))),
+            F.sequence(F.lit(1), n - 3),
+            lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, F.lit(4)))),
         ),
     ).otherwise(F.array().cast("array<string>"))
 
 
-def window_min_fps_expr(h: Column, window: int = 5) -> Column:
+def window_min_fps_expr(h: Column) -> Column:
     """Winnowing selection over a gram-hash array: min of each sliding
-    ``window``, distinct.
+    5-hash window, distinct.
 
     CRITICAL: pass an *attribute* (a materialized column), not an
     inline expression — ``slice(h, i, w)`` in the lambda re-evaluates
@@ -911,26 +907,24 @@ def window_min_fps_expr(h: Column, window: int = 5) -> Column:
     """
     nh = F.size(h)
     return F.when(
-        nh >= window,
+        nh >= 5,
         F.array_distinct(
             F.transform(
-                F.sequence(F.lit(1), nh - (window - 1)),
-                lambda i: F.array_min(F.slice(h, i, F.lit(window))),
+                F.sequence(F.lit(1), nh - 4),
+                lambda i: F.array_min(F.slice(h, i, F.lit(5))),
             )
         ),
     ).otherwise(F.array_distinct(h))
 
 
-def winnow_fingerprints_expr(
-    toks: Column, gram: int = 4, window: int = 5
-) -> Column:
+def winnow_fingerprints_expr(toks: Column) -> Column:
     """Winnowing fingerprint selection (Schleimer et al., MOSS) as a
-    pure column expression over a token array: hash every ``gram``-token
-    gram, slide a ``window``-hash window, keep each window's minimum,
-    distinct the selections.
+    pure column expression over a token array: hash every 4-token
+    gram, slide a 5-hash window, keep each window's minimum, distinct
+    the selections.
 
-    Guarantee: any shared token run of length >= gram + window - 1
-    between two documents yields at least one shared fingerprint — the
+    Guarantee: any shared token run of length >= 8 between two
+    documents yields at least one shared fingerprint — the
     local-similarity primitive exact/MinHash dedup lacks (both are
     whole-document). Hashes are md5 hex strings compared
     lexicographically — uniform order, portable to a DuckDB oracle
@@ -942,7 +936,7 @@ def winnow_fingerprints_expr(
     inline (see window_min_fps_expr); use the two-stage form in
     doc_winnow_fingerprints for real corpora.
     """
-    return window_min_fps_expr(gram_hashes_expr(toks, gram), window)
+    return window_min_fps_expr(gram_hashes_expr(toks))
 
 
 def doc_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1467,15 +1461,10 @@ def docs_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def near_dedup_keep(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = 0.7,
-    materialize: bool = True,
-) -> DataFrame:
+def near_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end near-dedup — the one-call corpus workflow: MinHash
-    signatures → banded LSH candidate pairs → estimated-Jaccard
-    threshold → connected components → keep the min doc_id per cluster.
+    signatures → banded LSH candidate pairs → estimated Jaccard ≥ 0.7
+    → connected components → keep the min doc_id per cluster.
 
     Output: one row per document that belongs to a near-dup cluster,
     with its cluster label and survivor flag; singleton docs (no
@@ -1495,7 +1484,7 @@ def near_dedup_keep(
     )
 
     docs = _docs_parallel(spark, sf_dir)
-    pairs = minhash_dedup(docs, threshold=threshold, materialize=materialize)
+    pairs = minhash_dedup(docs)
     comp = connected_components(pairs, "id_a", "id_b", distinct_pairs=True)
     w = Window.partitionBy("component")
     return (
@@ -1782,19 +1771,20 @@ def docs_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def cms_cells(text_col: str = "text", w_cells: int = 1024, d_rows: int = 3):
-    """(token, j, pos) occurrences for the CMS counter build — shared by
+def cms_cells():
+    """(token, j, pos) occurrences of ``text`` for the CMS counter build
+    (3 rows of 1024 cells) — shared by
     the batch query and the streaming twin (same expressions, so the
     incremental streaming aggregation provably equals the batch
     counters; pinned in tests/test_streaming_curation.py)."""
-    tok = F.explode(_tokens(text_col)).alias("t")
+    tok = F.explode(_tokens()).alias("t")
     h1 = F.conv(F.substring(F.md5("t"), 1, 15), 16, 10).cast("long")
     h2 = F.conv(F.substring(F.md5("t"), 17, 15), 16, 10).cast("long")
-    cells = F.array(*[(h1 + F.lit(j) * h2) % w_cells for j in range(d_rows)])
+    cells = F.array(*[(h1 + F.lit(j) * h2) % 1024 for j in range(3)])
     return tok, cells
 
 
-def cms_counters(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def cms_counters(docs: DataFrame) -> DataFrame:
     """CMS counter matrix as a (j, pos, c) DataFrame — works unchanged
     over a batch DataFrame or a streaming one (groupBy count is an
     incremental-merge aggregation; the fixed 3x1024 key space keeps
@@ -1816,7 +1806,7 @@ def cms_counters(docs: DataFrame, text_col: str = "text") -> DataFrame:
     global-watermark correctness check rejects in a streaming query.
     Same counters either way — the two forms differ only in where the
     per-term partial sums happen."""
-    tok, cells = cms_cells(text_col)
+    tok, cells = cms_cells()
     if docs.isStreaming:
         occ = docs.select(tok).select(F.posexplode(cells).alias("j", "pos"))
         return occ.groupBy("j", "pos").agg(F.count("*").alias("c"))
@@ -4133,8 +4123,8 @@ def _bm25_fold(cand: DataFrame) -> DataFrame:
     )
 
 
-def docs_bm25_topk(spark: SparkSession, sf_dir: str, topk: int = 10) -> DataFrame:
-    """BM25 lexical retrieval top-k over the document corpus — the
+def docs_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BM25 lexical retrieval top-10 over the document corpus — the
     classic sparse-retrieval face that pairs with the dense ANN family
     (brute/LSH/IVF/PQ) for hybrid query-document relevance mining:
     per (query, doc), sum over query terms of
@@ -4163,17 +4153,17 @@ def docs_bm25_topk(spark: SparkSession, sf_dir: str, topk: int = 10) -> DataFram
     values, so a single row_number window over candidates would put
     each query's whole candidate set in one task at 100 TB — instead
     candidates first rank within (query, pmod(xxhash64(doc_id), 64))
-    salt buckets (deterministic, AQE-safe), survivors <= 64*topk per
+    salt buckets (deterministic, AQE-safe), survivors <= 64*10 per
     query, then the exact global window runs over that bounded set.
     """
     docs = load_table(spark, sf_dir, "documents")
     qterms = spark.createDataFrame(BM25_QUERIES, "query_id long, term string")
     scored = _bm25_fold(_bm25_candidates(docs, qterms))
-    return bm25_rank_topk(scored, topk)
+    return bm25_rank_topk(scored)
 
 
-def bm25_rank_topk(scored: DataFrame, topk: int = 10) -> DataFrame:
-    """The two-phase top-k tail (salt-bucket local rank, then the
+def bm25_rank_topk(scored: DataFrame) -> DataFrame:
+    """The two-phase top-10 tail (salt-bucket local rank, then the
     exact global window over the bounded survivor set — see
     docs_bm25_topk's scale note). Shared by the batch face and the
     stored-index face."""
@@ -4182,13 +4172,13 @@ def bm25_rank_topk(scored: DataFrame, topk: int = 10) -> DataFrame:
     ).orderBy(F.desc("score"), F.asc("doc_id"))
     survivors = (
         scored.withColumn("_lr", F.row_number().over(local_w))
-        .filter(F.col("_lr") <= topk)
+        .filter(F.col("_lr") <= 10)
         .drop("_lr")
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         survivors.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= topk)
+        .filter(F.col("rank") <= 10)
         .select("query_id", "rank", "doc_id", "score", "n_terms")
     )
 
@@ -4196,13 +4186,13 @@ def bm25_rank_topk(scored: DataFrame, topk: int = 10) -> DataFrame:
 RAKE_STOPWORDS = ("a", "the")
 
 
-def docs_rake_keyphrases(spark: SparkSession, sf_dir: str, topn: int = 3) -> DataFrame:
+def docs_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAKE keyphrase extraction (Rose et al. 2010) per document:
     candidate phrases are the maximal token runs between stopwords,
     each word scores deg(w)/freq(w) over the CORPUS-wide phrase
     co-occurrence graph (deg = sum of lengths of phrases containing
     w, freq = occurrence count), a phrase scores the sum of its word
-    scores, and each doc keeps its topn phrases — the unsupervised
+    scores, and each doc keeps its top-3 phrases — the unsupervised
     keyword face of the text-analysis family (tfidf = distinctive
     single terms; RAKE = multi-word phrases).
 
@@ -4215,7 +4205,7 @@ def docs_rake_keyphrases(spark: SparkSession, sf_dir: str, topn: int = 3) -> Dat
     Scale shape: posexplode + one per-doc running-sum window (state
     bounded by doc length) segments phrases; word stats are one
     map-side-combined word-key groupBy; scores join back on the word
-    key; the topn window partitions by doc_id. No driver actions, no
+    key; the top-3 window partitions by doc_id. No driver actions, no
     UDFs, nothing denser than the (word) and (doc, phrase) keys.
     """
     docs = load_table(spark, sf_dir, "documents")
@@ -4268,7 +4258,7 @@ def docs_rake_keyphrases(spark: SparkSession, sf_dir: str, topn: int = 3) -> Dat
     w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("phrase"))
     return (
         uniq.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= topn)
+        .filter(F.col("rank") <= 3)
         .select("doc_id", "rank", "phrase", "n_words", "n_occurrences", "score")
     )
 
@@ -4408,7 +4398,7 @@ def multimodal_image_patches(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def embedding_mutual_knn(
-    spark: SparkSession, sf_dir: str, k: int = 3, max_block: int = 64
+    spark: SparkSession, sf_dir: str, k: int = 3
 ) -> DataFrame:
     """Mutual k-NN graph over the embedding corpus: each vector's top-k
     cosine neighbours within its label block, plus the MUTUAL flag
@@ -4426,7 +4416,7 @@ def embedding_mutual_knn(
 
     Scale shape: candidate pairs come from the same sub-sharded
     pair-block scheme as embedding_block_near_dups (labels over
-    ``max_block`` rows split so no task exceeds ~max_block² pairs;
+    64 rows split so no task exceeds ~64² pairs;
     replication linear in skew). Each unordered pair's cosine is
     computed ONCE and exploded to both orientations (elementwise
     products commute, so the directed values are bit-identical), then
@@ -4445,7 +4435,7 @@ def embedding_mutual_knn(
         .withColumn(
             "kk",
             F.greatest(
-                F.lit(1), F.ceil(F.col("n_lbl") / F.lit(max_block))
+                F.lit(1), F.ceil(F.col("n_lbl") / F.lit(64))
             ).cast("int"),
         )
         .withColumn("s", F.pmod(F.xxhash64("vec_id"), F.col("kk")).cast("int"))
@@ -4520,9 +4510,6 @@ def embedding_mutual_knn(
 def docs_pmi_top_pairs(
     spark: SparkSession,
     sf_dir: str,
-    vocab_size: int = 100,
-    min_co_docs: int = 5,
-    topk: int = 50,
 ) -> DataFrame:
     """Top co-occurring token pairs by PMI lift over the document
     corpus: lift(x,y) = N·df(x,y) / (df(x)·df(y)) — the association
@@ -4534,11 +4521,11 @@ def docs_pmi_top_pairs(
     ranking power.
 
     Scale shape: the pair explosion is bounded by construction — the
-    corpus-wide top-``vocab_size`` vocabulary (doc-frequency, ties on
+    corpus-wide top-100 vocabulary (doc-frequency, ties on
     the token) is a TakeOrderedAndProject broadcast, per-doc distinct
     tokens are filtered to it BEFORE pairing, so a doc contributes
-    <= vocab_size²/2 pairs regardless of its length and the candidate
-    space is <= vocab_size² rows total: the final ranking window runs
+    <= 100²/2 pairs regardless of its length and the candidate
+    space is <= 100² rows total: the final ranking window runs
     over a bounded frame, never the corpus.
     """
     docs = load_table(spark, sf_dir, "documents")
@@ -4549,7 +4536,7 @@ def docs_pmi_top_pairs(
         ).alias("tok"),
     )
     df_counts = toks.groupBy("tok").agg(F.count("*").alias("c"))
-    vocab = df_counts.orderBy(F.desc("c"), F.asc("tok")).limit(vocab_size)
+    vocab = df_counts.orderBy(F.desc("c"), F.asc("tok")).limit(100)
     tv = toks.join(F.broadcast(vocab), "tok")
     n_docs = docs.agg(F.count("*").alias("n_docs"))
     a = tv.select(
@@ -4571,7 +4558,7 @@ def docs_pmi_top_pairs(
             F.min("c_a").alias("c_a"),
             F.min("c_b").alias("c_b"),
         )
-        .filter(F.col("c_xy") >= min_co_docs)
+        .filter(F.col("c_xy") >= 5)
         .crossJoin(F.broadcast(n_docs))
         .select(
             "tok_a",
@@ -4596,7 +4583,7 @@ def docs_pmi_top_pairs(
             "lift",
             F.row_number().over(w).cast("int").alias("rank"),
         )
-        .filter(F.col("rank") <= topk)
+        .filter(F.col("rank") <= 50)
     )
 
 
@@ -4662,7 +4649,7 @@ POISSON1_T = [
 
 
 def docs_quality_bootstrap_ci(
-    spark: SparkSession, sf_dir: str, n_resamples: int = 200
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Per-source 95% bootstrap confidence interval for mean document
     quality — the error bar a curation report should put next to every
@@ -4700,8 +4687,8 @@ def docs_quality_bootstrap_ci(
     )
     scored = docs.select("doc_id", "source", q10.alias("q10"))
     M = F.lit(2_147_483_648)
-    b = F.explode(F.sequence(F.lit(0), F.lit(n_resamples - 1))).alias("b")
-    h = ((F.col("doc_id") * n_resamples + F.col("b")) % M * 2654435761) % M
+    b = F.explode(F.sequence(F.lit(0), F.lit(199))).alias("b")
+    h = ((F.col("doc_id") * 200 + F.col("b")) % M * 2654435761) % M
     w = sum(
         (h >= F.lit(t)).cast("long") for t in POISSON1_T
     )  # 0..7 Poisson(1) weight, integer comparisons only
@@ -4758,9 +4745,7 @@ def docs_quality_bootstrap_ci(
     )
 
 
-def docs_source_halves_drift(
-    spark: SparkSession, sf_dir: str, n_buckets: int = 256
-) -> DataFrame:
+def docs_source_halves_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-source snapshot drift: per source, the total-variation
     distance between the token-bucket distributions of its two
     interleaved doc_id halves (even vs odd — the deterministic
@@ -4781,7 +4766,7 @@ def docs_source_halves_drift(
 
     Scale shape: one map-side-combined (source, half, bucket) count
     over the token stream, then everything runs on the bounded
-    |sources|·2·n_buckets grid — dense-grid left joins and the final
+    |sources|·2·256 grid — dense-grid left joins and the final
     per-source rollup are broadcast-sized by construction.
     """
     docs = load_table(spark, sf_dir, "documents")
@@ -4792,10 +4777,10 @@ def docs_source_halves_drift(
     )
     bucket = (
         F.conv(F.substring(F.md5(F.lower("tok")), 1, 15), 16, 10).cast("long")
-        % n_buckets
+        % 256
     ).alias("b")
 
-    # the bounded |sources|·2·n_buckets count grid MATERIALIZES so its
+    # the bounded |sources|·2·256 count grid MATERIALIZES so its
     # two consumers (bucket pivot, per-source totals) tokenize the
     # corpus once, not twice (the r14 plan-census rule)
     counts = materialized(
@@ -4845,9 +4830,7 @@ def docs_source_halves_drift(
     )
 
 
-def docs_source_tv_distance(
-    spark: SparkSession, sf_dir: str, n_buckets: int = 256
-) -> DataFrame:
+def docs_source_tv_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise distribution drift between sources as TOTAL-VARIATION
     distance over hashed token buckets: TV = ½·Σ_b |p_b − q_b| — the
     drift metric that, unlike KL/JS divergence, needs NO logarithm
@@ -4864,12 +4847,12 @@ def docs_source_tv_distance(
 
     Scale shape: one map-side-combined (source, bucket) count over the
     token stream, then everything runs on the BOUNDED
-    |sources|·n_buckets aggregate — the dense-grid left join, the
+    |sources|·256 aggregate — the dense-grid left join, the
     pair join, and the rollup are broadcast-sized by construction.
     """
     docs = load_table(spark, sf_dir, "documents")
-    counts = source_bucket_counts(docs, n_buckets)
-    return tv_from_counts(counts, n_buckets)
+    counts = source_bucket_counts(docs, 256)
+    return tv_from_counts(counts, 256)
 
 
 def source_bucket_counts(docs: DataFrame, n_buckets: int = 256) -> DataFrame:
@@ -4996,9 +4979,7 @@ def docs_length_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ann_prefix_dim_recall(
-    spark: SparkSession, sf_dir: str, topk: int = 10
-) -> DataFrame:
+def ann_prefix_dim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka-style dimension-truncation QA: for the bounded query
     set (vec_id % 50 == 0), recall@10 of the HALF-dimension cosine
     ranking against the full-dimension ranking — the measurement that
@@ -5055,8 +5036,8 @@ def ann_prefix_dim_recall(
         F.row_number().over(wf).alias("rf"),
         F.row_number().over(wh).alias("rh"),
     )
-    full10 = ranked.filter(F.col("rf") <= topk)
-    half10 = ranked.filter(F.col("rh") <= topk).select(
+    full10 = ranked.filter(F.col("rf") <= 10)
+    half10 = ranked.filter(F.col("rh") <= 10).select(
         "query_id", "neighbor_id", F.lit(1).alias("hit")
     )
     return (
@@ -5066,18 +5047,16 @@ def ann_prefix_dim_recall(
         .select(
             "query_id",
             F.col("n_overlap").cast("long").alias("n_overlap"),
-            (F.col("n_overlap").cast("double") / F.lit(float(topk))).alias(
+            (F.col("n_overlap").cast("double") / F.lit(10.0)).alias(
                 "recall_at_10"
             ),
         )
     )
 
 
-def docs_oov_rate(
-    spark: SparkSession, sf_dir: str, vocab_size: int = 1000
-) -> DataFrame:
+def docs_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Out-of-vocabulary rate per (lang, source) against the corpus's
-    own top-``vocab_size`` token vocabulary — the tokenizer-coverage
+    own top-1000 token vocabulary — the tokenizer-coverage
     audit run before freezing a vocab for training: a segment whose
     OOV share is an outlier either needs vocab budget or is noise
     (the CCNet/Gopher sibling on the LEXICAL axis instead of the
@@ -5104,7 +5083,7 @@ def docs_oov_rate(
         toks.groupBy("tok")
         .agg(F.count("*").alias("c"))
         .orderBy(F.desc("c"), F.asc("tok"))
-        .limit(vocab_size)
+        .limit(1000)
         .select("tok", F.lit(1).alias("in_vocab"))
     )
     return (
@@ -5129,13 +5108,11 @@ def docs_oov_rate(
     )
 
 
-def docs_sqrt_temperature_mix(
-    spark: SparkSession, sf_dir: str, budget: int = 100_000
-) -> DataFrame:
+def docs_sqrt_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-sampled language-mix allocation at alpha = 0.5: the
     multilingual-pretraining standard (mBERT / XLM-R exponent-smoothed
     sampling) that upweights low-resource languages by sampling
-    proportional to n^alpha instead of n. Allocates a fixed token
+    proportional to n^alpha instead of n. Allocates a fixed 100,000-token
     budget across languages by sqrt(n_tokens) weights using
     LARGEST-REMAINDER (Hamilton) apportionment, so the allocations are
     integers that sum EXACTLY to the budget — the property a
@@ -5172,7 +5149,7 @@ def docs_sqrt_temperature_mix(
         "lang",
         "n_tokens",
         "w",
-        (F.lit(float(budget)) * F.col("w") / F.col("tw")).alias("q"),
+        (F.lit(100_000.0) * F.col("w") / F.col("tw")).alias("q"),
     )
     based = q.select(
         "lang",
@@ -5190,7 +5167,7 @@ def docs_sqrt_temperature_mix(
             "n_tokens",
             "w",
             "base",
-            (F.lit(budget) - F.col("base_sum")).alias("leftover"),
+            (F.lit(100_000) - F.col("base_sum")).alias("leftover"),
             F.row_number().over(wr).alias("rk"),
         )
         .select(
@@ -7736,9 +7713,7 @@ def dedup_survivor_source_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def embedding_shard_cell_drift(
-    spark: SparkSession, sf_dir: str, n_shards: int = 4
-) -> DataFrame:
+def embedding_shard_cell_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF cell-occupancy drift across shards (VERDICT r13 'Next
     round' #3): per shard, the total-variation distance between that
     shard's cell-occupancy distribution and the whole-corpus one —
@@ -7775,7 +7750,7 @@ def embedding_shard_cell_drift(
     vecs = emb.select("vec_id", as_double_vec("embedding", "v"))
     cents = ivf_centroids(vecs, n_centroids=16, dim=64)
     cells = assign_cells(vecs, cents).select(
-        F.pmod(F.col("vec_id"), F.lit(n_shards)).alias("shard"), "cell"
+        F.pmod(F.col("vec_id"), F.lit(4)).alias("shard"), "cell"
     )
     cs = materialized(
         cells.groupBy("shard", "cell").agg(F.count("*").alias("s"))

@@ -29,8 +29,8 @@ def _r4(c):
     return F.round(c, 4)
 
 
-def _dec(c, prec: int = 12) -> F.Column:
-    """Portable per-row double→DECIMAL(prec,2) for 2-decimal-valued data.
+def _dec(c) -> F.Column:
+    """Portable per-row double→DECIMAL(12,2) for 2-decimal-valued data.
 
     Goes through ``%.2f`` string formatting: for data that is genuinely
     2-decimal (money columns here), the format is identity on both
@@ -44,7 +44,7 @@ def _dec(c, prec: int = 12) -> F.Column:
     """
     if isinstance(c, str):
         c = F.col(c)
-    return F.format_string("%.2f", c).cast(f"decimal({prec},2)")
+    return F.format_string("%.2f", c).cast("decimal(12,2)")
 
 
 # --------------------------------------------------------------------------
@@ -1751,11 +1751,9 @@ def lineitem_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def layout_pruning_report(
-    spark: SparkSession, sf_dir: str, n_shards: int = 64
-) -> DataFrame:
+def layout_pruning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-skipping scorecard: Morton vs Hilbert under EQUAL-ROW
-    sharding — sort lineitem along each curve, cut into ``n_shards``
+    sharding — sort lineitem along each curve, cut into 64
     equal-row files (how real writers size files), record each file's
     (partkey, suppkey) bounding box, and count how many files a
     min/max-pruning scan must open for a fixed probe rectangle
@@ -1783,6 +1781,7 @@ def layout_pruning_report(
     from hrfco_data_pipeline_spark.operators.ranking import int_ntile
 
     pk_lo, pk_hi, sk_lo, sk_hi = 500, 700, 20, 40
+    n_shards = 64
     li = load_table(spark, sf_dir, "lineitem").select(
         (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("uid"),
         F.col("l_partkey").cast("long").alias("pk"),
@@ -3699,9 +3698,7 @@ def events_median_bisect(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("event_type", "n", _r4(F.col("med")).alias("med"))
 
 
-def copurchase_label_propagation(
-    spark: SparkSession, sf_dir: str, rounds: int = 3
-) -> DataFrame:
+def copurchase_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community detection by synchronous label propagation on the
     part co-purchase graph (edges = pairs co-ordered ≥2 times): each
     round every node adopts its neighbours' MOST FREQUENT label,
@@ -3726,7 +3723,7 @@ def copurchase_label_propagation(
     pick = Window.partitionBy("node").orderBy(
         F.col("cnt").desc(), F.col("label").asc()
     )
-    for _ in range(rounds):
+    for _ in range(3):
         nbr = (
             adj.join(labels, adj["v"] == labels["node"])
             .select(F.col("u").alias("node"), "label")
@@ -4160,9 +4157,7 @@ def events_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def copurchase_bfs_levels(
-    spark: SparkSession, sf_dir: str, max_depth: int = 6
-) -> DataFrame:
+def copurchase_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Breadth-first reachability levels on the part co-purchase graph
     (edges = pairs co-ordered >= 2 times, the copurchase_triangles /
     label-propagation edge set) from the smallest part key: per level,
@@ -4204,7 +4199,7 @@ def copurchase_bfs_levels(
         )
     )
     visited = frontier
-    for depth in range(1, max_depth + 1):
+    for depth in range(1, 7):
         nxt = materialized(
             frontier.select(F.col("node").alias("u"))
             .join(adj, "u")
@@ -4782,7 +4777,6 @@ def copurchase_kcore(
     sf_dir: str,
     k: int = 3,
     rounds: int = 8,
-    materialize: bool = True,
 ) -> DataFrame:
     """k-core decomposition of the part co-purchase graph (same
     support-2 edges as the rest of the family): iteratively peel
@@ -4808,15 +4802,15 @@ def copurchase_kcore(
     sym = half.unionByName(
         half.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-    alive = materialized(sym) if materialize else sym
+    alive = materialized(sym)
     for _ in range(rounds):
         deg = alive.groupBy("u").agg(F.count("*").alias("deg"))
         keep = deg.filter(F.col("deg") >= k).select("u")
-        alive = alive.join(keep, "u", "left_semi").join(
-            keep.select(F.col("u").alias("v")), "v", "left_semi"
+        alive = materialized(
+            alive.join(keep, "u", "left_semi").join(
+                keep.select(F.col("u").alias("v")), "v", "left_semi"
+            )
         )
-        if materialize:
-            alive = materialized(alive)
     return (
         alive.groupBy("u")
         .agg(F.count("*").alias("core_degree"))
@@ -5163,6 +5157,9 @@ def events_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+KMV_K = 64  # bottom-k sketch size of the KMV family
+
+
 def kmv_hash(user_col: F.Column) -> F.Column:
     """Engine-neutral 31-bit Knuth multiplicative hash (the portable
     sampling hash): bijective on ids < 2^31, bit-identical in DuckDB."""
@@ -5170,10 +5167,10 @@ def kmv_hash(user_col: F.Column) -> F.Column:
     return ((user_col % M) * 2654435761) % M
 
 
-def kmv_kmin(du: DataFrame, k: int = 64) -> DataFrame:
-    """Exact bottom-k of ``h`` per ``event_type`` over a distinct
-    (event_type, h) frame, two-phase so no task ever sorts more than
-    ~distinct/32 rows: row_number inside 32 hash buckets, then a
+def kmv_kmin(du: DataFrame) -> DataFrame:
+    """Exact bottom-k (k = KMV_K) of ``h`` per ``event_type`` over a
+    distinct (event_type, h) frame, two-phase so no task ever sorts
+    more than ~distinct/32 rows: row_number inside 32 hash buckets, then a
     second pass over the <= 32·k survivors per type. Idempotent —
     applying it to a union of per-batch bottom-k partials yields the
     global bottom-k (any global k-min hash is a k-min of its own
@@ -5187,24 +5184,23 @@ def kmv_kmin(du: DataFrame, k: int = 64) -> DataFrame:
     return (
         du.withColumn("b", F.pmod("h", F.lit(32)))
         .withColumn("rn", F.row_number().over(wb))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= KMV_K)
         .withColumn("rn2", F.row_number().over(wt))
-        .filter(F.col("rn2") <= k)
+        .filter(F.col("rn2") <= KMV_K)
         .select("event_type", "h")
     )
 
 
-def kmv_bottomk_from_raw(
-    raw: DataFrame, k: int = 64, prefilter_c: int = 8
-) -> DataFrame:
-    """Bottom-k per ``event_type`` of a RAW (pre-distinct, duplicated)
-    (event_type, h) frame — the production shape for the 100 TB path.
+def kmv_bottomk_from_raw(raw: DataFrame) -> DataFrame:
+    """Bottom-k (k = KMV_K) per ``event_type`` of a RAW (pre-distinct,
+    duplicated) (event_type, h) frame — the production shape for the
+    100 TB path.
 
     The naive pipeline (distinct then window) shuffles the ENTIRE
     distinct user set just to keep 64 hashes per type. Instead: one
     map-side HLL pass estimates the per-type NDV n (approx_count_
     distinct — no wide shuffle, one row per type), a broadcast
-    threshold thr = min(2^31, c·k·2^31/n + 1) prunes BELOW the
+    threshold thr = min(2^31, c·k·2^31/n + 1), c = 8, prunes BELOW the
     distinct, and the distinct + two-phase windows then run over
     ~c·k·dup rows per type instead of the full set. At scale every
     post-scan exchange is sketch-sized (measured A/B: SCALE.md §r8
@@ -5216,17 +5212,13 @@ def kmv_bottomk_from_raw(
     < exp(-k(c-1-ln c)) ≈ e^-300 (Chernoff at k=64), and the HLL
     estimate (rsd 5%) would need an ~8× overestimate of n to tighten
     thr past the true k-th — both zero in any non-adversarial
-    universe. Ids crafted against the Knuth hash would need
-    prefilter_c raised; prefilter_c=None disables the prune and falls
-    back to the exact distinct-then-window pipeline.
+    universe. Ids crafted against the Knuth hash would need c raised.
     """
-    if prefilter_c is None:
-        return kmv_kmin(raw.distinct(), k)
     M = 2_147_483_648  # 2^31
     ndv = raw.groupBy("event_type").agg(F.approx_count_distinct("h").alias("ndv"))
     thr = F.least(
         F.lit(M),
-        (F.lit(float(prefilter_c * k) * M) / F.col("ndv")).cast("long") + 1,
+        (F.lit(float(8 * KMV_K) * M) / F.col("ndv")).cast("long") + 1,
     )
     survivors = (
         raw.join(
@@ -5237,10 +5229,10 @@ def kmv_bottomk_from_raw(
         .select("event_type", "h")
         .distinct()
     )
-    return kmv_kmin(survivors, k)
+    return kmv_kmin(survivors)
 
 
-def kmv_pair_estimates(kmin: DataFrame, k: int = 64) -> DataFrame:
+def kmv_pair_estimates(kmin: DataFrame) -> DataFrame:
     """Distinct-count estimates per event-type pair from bottom-k
     sketches: per-type estimate (k-1)·2^31/kth, union sketch = k
     smallest of the merged k-mins, intersection by inclusion-exclusion.
@@ -5262,9 +5254,9 @@ def kmv_pair_estimates(kmin: DataFrame, k: int = 64) -> DataFrame:
     M = 2_147_483_648  # 2^31
 
     def est(kth, sk_n):
-        # exact when the sketch holds the whole set (sk_n < k)
-        return F.when(sk_n < k, sk_n.cast("double")).otherwise(
-            F.lit(float((k - 1) * M)) / kth
+        # exact when the sketch holds the whole set (sk_n < KMV_K)
+        return F.when(sk_n < KMV_K, sk_n.cast("double")).otherwise(
+            F.lit(float((KMV_K - 1) * M)) / kth
         )
 
     sk = kmin.groupBy("event_type").agg(
@@ -5289,7 +5281,7 @@ def kmv_pair_estimates(kmin: DataFrame, k: int = 64) -> DataFrame:
         .select("type_a", "type_b", "h")
         .distinct()
         .withColumn("rn", F.row_number().over(wu))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= KMV_K)
         .groupBy("type_a", "type_b")
         .agg(F.max("h").alias("kth_u"), F.count("*").alias("sk_n_u"))
     )
@@ -5474,13 +5466,11 @@ def scd2_regimes(o: DataFrame) -> DataFrame:
     )
 
 
-def customer_scd2_asof_snapshot(
-    spark: SparkSession, sf_dir: str, asof: str = "1995-06-15"
-) -> DataFrame:
+def customer_scd2_asof_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-time (time-travel) read of the SCD Type-2 dimension:
-    reconstruct each customer's active priority regime AS OF a given
-    date — the query every warehouse runs against its history table
-    ("what did the dimension look like last quarter?") and the natural
+    reconstruct each customer's active priority regime AS OF
+    1995-06-15 — the query every warehouse runs against its history
+    table ("what did the dimension look like last quarter?") and the natural
     consumer of customer_scd2_history's [valid_from, valid_to) ranges:
     active regime = valid_from <= asof < coalesce(valid_to, +inf).
     Customers whose first regime starts after the as-of date are
@@ -5493,7 +5483,7 @@ def customer_scd2_asof_snapshot(
     valid_from month so the as-of filter prunes partitions.
     """
     hist = customer_scd2_history(spark, sf_dir)
-    d = F.lit(asof).cast("date")
+    d = F.lit("1995-06-15").cast("date")
     return hist.filter(
         (F.col("valid_from") <= d)
         & (F.col("valid_to").isNull() | (F.col("valid_to") > d))
@@ -5789,7 +5779,6 @@ def events_watermark_lateness_audit(
     spark: SparkSession,
     sf_dir: str,
     bucket_rows: int = 4096,
-    late_us: int = 600_000_000,
 ) -> DataFrame:
     """Watermark-sizing audit: how late does event time run behind the
     high-water mark in ARRIVAL order (event_id — the ingest sequence)?
@@ -5826,7 +5815,7 @@ def events_watermark_lateness_audit(
     )
     extra = lat.groupBy("event_type").agg(
         F.max("lateness_us").alias("max_lateness_us"),
-        F.sum((F.col("lateness_us") > late_us).cast("long")).alias(
+        F.sum((F.col("lateness_us") > 600_000_000).cast("long")).alias(
             "n_late_10m"
         ),
     )
@@ -5962,23 +5951,21 @@ def events_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def copurchase_weighted_sssp(
     spark: SparkSession,
     sf_dir: str,
-    rounds: int = 6,
-    materialize: bool = True,
 ) -> DataFrame:
     """Single-source shortest paths over the WEIGHTED co-purchase
     graph (edge cost = 1000 div support — strong co-purchase ties are
-    cheap to traverse), Bellman-Ford style: ``rounds`` relaxation
-    sweeps from the lowest part id, emitting every part reachable
-    within ``rounds`` edges and its minimal path cost. The weighted
+    cheap to traverse), Bellman-Ford style: 6 relaxation sweeps from
+    the lowest part id, emitting every part reachable within 6 edges
+    and its minimal path cost. The weighted
     upgrade of copurchase_bfs_levels — the "how strongly connected is
     this product to the catalog core" signal hop counts can't express.
 
     Exactness: integer edge weights (integer division on both
     engines), integer distance sums, min-relaxation — nothing float.
     Fixed rounds keep both engines bit-comparable without a
-    convergence action (the copurchase_kcore pattern); rounds bounds
-    the PATH LENGTH in edges, so the output is exactly "cheapest cost
-    among paths of <= rounds edges", a well-defined semantics at any
+    convergence action (the copurchase_kcore pattern); the round
+    count bounds the PATH LENGTH in edges, so the output is exactly
+    "cheapest cost among paths of <= 6 edges", a well-defined semantics at any
     scale (full convergence needs diameter sweeps — at toy scale the
     graph converges within 6).
 
@@ -6010,7 +5997,7 @@ def copurchase_weighted_sssp(
             F.col("v").alias("u"), F.col("u").alias("v"), F.col("w")
         )
     )
-    sym = materialized(sym) if materialize else sym
+    sym = materialized(sym)
     src = sym.agg(F.min("u").alias("vertex")).select(
         "vertex", F.lit(0).cast("long").alias("dist")
     )
@@ -6023,18 +6010,16 @@ def copurchase_weighted_sssp(
         F.col("w").alias("e_w"),
     )
     dist = src
-    for _ in range(rounds):
+    for _ in range(6):
         cand = dist.join(e, F.col("vertex") == F.col("e_u")).select(
             F.col("e_v").alias("vertex"),
             (F.col("dist") + F.col("e_w")).alias("dist"),
         )
-        dist = (
+        dist = materialized(
             dist.unionByName(cand)
             .groupBy("vertex")
             .agg(F.min("dist").alias("dist"))
         )
-        if materialize:
-            dist = materialized(dist)
     return dist.select(
         F.col("vertex").alias("part"), F.col("dist").cast("long").alias("dist")
     )

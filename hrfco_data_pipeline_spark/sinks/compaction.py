@@ -1,7 +1,7 @@
-"""Small-file compaction for partitioned append sinks.
+"""Small-file compaction for partitioned parquet append sinks.
 
 Micro-batch appends (streaming/pipeline.py writes one file set per
-trigger per partition) fragment the archive/fact tables into thousands
+trigger per partition) fragment the fact table into thousands
 of tiny files — the classic 100 TB operational tax: NameNode/listing
 pressure, per-file open cost, undersized scan tasks. Compaction
 rewrites each partition's fragments into ~target-size files.
@@ -29,11 +29,9 @@ def compact_partitions(
     spark: SparkSession,
     path: str,
     partition_cols: list[str],
-    fmt: str = "parquet",
-    max_records_per_file: int = 1_000_000,
-    files_per_partition: int = 1,
 ) -> dict[str, int]:
-    """Rewrite a partitioned dataset into few large files per partition.
+    """Rewrite a parquet dataset into few large files per partition
+    (at most 1,000,000 rows per file; one file when unpartitioned).
 
     Returns {"files_before": n, "files_after": m, "rows": r}. The
     rewrite replaces the table through ``writers.swap_in`` (marker
@@ -44,7 +42,7 @@ def compact_partitions(
     stats: dict[str, int] = {}
 
     def _write(staging: str) -> None:
-        df = spark.read.format(fmt).load(path)
+        df = spark.read.parquet(path)
         stats["rows"] = df.count()
         stats["files_before"] = _count_data_files(path)
         # repartition on the partition columns: each output task holds
@@ -53,17 +51,15 @@ def compact_partitions(
         if partition_cols:
             compacted = df.repartition(*[F.col(c) for c in partition_cols])
         else:
-            compacted = df.repartition(max(files_per_partition, 1))
-        writer = (
-            compacted.write.format(fmt)
-            .mode("overwrite")
-            .option("maxRecordsPerFile", max_records_per_file)
+            compacted = df.repartition(1)
+        writer = compacted.write.mode("overwrite").option(
+            "maxRecordsPerFile", 1_000_000
         )
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
-        writer.save(staging)
+        writer.parquet(staging)
         # verify before swapping — never replace good data with a bad rewrite
-        recount = spark.read.format(fmt).load(staging).count()
+        recount = spark.read.parquet(staging).count()
         if recount != stats["rows"]:
             shutil.rmtree(staging, ignore_errors=True)
             raise RuntimeError(
@@ -134,13 +130,13 @@ def backfill_partitions(
     df: DataFrame,
     path: str,
     partition_cols: list[str],
-    fmt: str = "parquet",
 ) -> None:
-    """Idempotent backfill: re-write exactly the partitions present in
-    ``df`` and leave every other partition untouched — Spark's DYNAMIC
-    partition-overwrite mode, the correct re-run semantics for "this
-    day's data was wrong, replay it" (a plain ``overwrite`` would drop
-    the whole table; ``append`` would double-count).
+    """Idempotent parquet backfill: re-write exactly the partitions
+    present in ``df`` and leave every other partition untouched —
+    Spark's DYNAMIC partition-overwrite mode, the correct re-run
+    semantics for "this day's data was wrong, replay it" (a plain
+    ``overwrite`` would drop the whole table; ``append`` would
+    double-count).
 
     The conf is set per-write via ``partitionOverwriteMode`` so the
     session default stays static for other writers. At 100 TB a
@@ -149,9 +145,8 @@ def backfill_partitions(
     partition directory, by the committer's rename).
     """
     (
-        df.write.format(fmt)
-        .partitionBy(*partition_cols)
+        df.write.partitionBy(*partition_cols)
         .mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .save(path)
+        .parquet(path)
     )

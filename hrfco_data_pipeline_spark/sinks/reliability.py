@@ -96,14 +96,13 @@ class SinkCircuitBreaker:
 def retry_call(
     fn: Callable[[], None],
     attempts: int = 3,
-    initial_delay: float = 0.5,
-    backoff: float = 2.0,
     sleep: Callable[[float], None] = time.sleep,
 ) -> None:
-    """RetryUtil.java:22-70 semantics: N attempts, exponential backoff,
-    re-raises the last failure. Use for sink I/O inside foreachBatch
-    only — Spark task retries cover everything inside the plan."""
-    delay = initial_delay
+    """RetryUtil.java:22-70 semantics: N attempts, exponential backoff
+    from 0.5 s, x2 per retry, re-raises the last failure. Use for sink
+    I/O inside foreachBatch only — Spark task retries cover everything
+    inside the plan."""
+    delay = 0.5
     for attempt in range(attempts):
         try:
             fn()
@@ -112,4 +111,4 @@ def retry_call(
             if attempt == attempts - 1:
                 raise
             sleep(delay)
-            delay *= backoff
+            delay *= 2

@@ -24,6 +24,12 @@ relies on the micro-batch bound of the source (the file source's
 ``maxFilesPerTrigger``, the Kafka source's ``maxOffsetsPerTrigger``).
 ``write_fact`` and ``write_dlq`` stamp from the batch clock, the ``now``
 column the stream passes them.
+
+Every appender first runs ``recover_swap(path, "_committed")``: a
+directory a compaction was swapping when the process died must be
+healed before an append recreates its live path, or the next swap
+would take the appended rows for the whole table and delete the
+committed rewrite.
 """
 
 from __future__ import annotations
@@ -41,6 +47,7 @@ def write_archive(classified: DataFrame, path: str) -> None:
     kind = F.when(F.col("is_anomaly"), "anomalies").otherwise("normal")
     date = F.substring("obs_time_str", 1, 10)
     out = classified.withColumn("kind", kind).withColumn("obs_date", date)
+    recover_swap(path, "_committed")
     out.write.partitionBy("kind", "obs_date").mode("append").json(path)
 
 
@@ -63,6 +70,7 @@ def write_fact(classified: DataFrame, path: str, now: str) -> None:
         F.col("flood_warning_level"),
         F.col(now).alias("created_at"),
     ).withColumn("obs_date", F.to_date("observation_time"))
+    recover_swap(path, "_committed")
     fact.write.partitionBy("obs_date").mode("append").parquet(path)
 
 
@@ -70,6 +78,7 @@ def write_dlq(dlq: DataFrame, path: str, now: str) -> None:
     """W8: append failure envelopes, adding the publish ``timestamp``
     (epoch ms) from the timestamp column ``now`` of ``dlq``, which is
     not written."""
+    recover_swap(path, "_committed")
     (
         dlq.select(*[c for c in dlq.columns if c != now], F.unix_millis(now).alias("timestamp"))
         .write.mode("append")
@@ -77,7 +86,7 @@ def write_dlq(dlq: DataFrame, path: str, now: str) -> None:
     )
 
 
-def recover_swap(table_path: str, marker: str = "_SUCCESS") -> str | None:
+def recover_swap(table_path: str, marker: str) -> str | None:
     """Complete or roll back an interrupted ``swap_in`` of
     ``table_path`` (its ``<table>__staging__`` / ``<table>__old__``
     dirs).
@@ -168,9 +177,10 @@ def swap_in(
 
 
 def merge_stations(
-    spark: SparkSession, table_path: str, updates: DataFrame, key: str = "wlobscd"
+    spark: SparkSession, table_path: str, updates: DataFrame
 ) -> None:
-    """W2: upsert station metadata by key (PutMongo Upsert=true analog).
+    """W2: upsert station metadata by ``wlobscd`` (PutMongo Upsert=true
+    analog).
 
     Merge-by-rewrite: existing rows not in `updates` are kept, matched
     keys are replaced, new keys inserted. The stations dim is tiny, so
@@ -187,7 +197,7 @@ def merge_stations(
         except Exception:
             merged = updates
         else:
-            merged = current.join(updates, on=key, how="left_anti").unionByName(
+            merged = current.join(updates, on="wlobscd", how="left_anti").unionByName(
                 updates, allowMissingColumns=True
             )
         merged.write.mode("overwrite").parquet(staging)

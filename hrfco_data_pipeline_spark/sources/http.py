@@ -228,16 +228,3 @@ def java_double_str(d: float) -> str:
     frac = digits[1:] or "0"
     return f"{sign}{digits[0]}.{frac}E{pointpos - 1}"
 
-
-def ingest_observations(
-    spark: SparkSession, url: str, timeout: float = 10.0
-) -> DataFrame:
-    """Fetch + flatten in one call (the per-trigger poll body)."""
-    return observations_from_json(spark, fetch_hrfco(url, timeout))
-
-
-def ingest_stations(
-    spark: SparkSession, url: str, timeout: float = 10.0
-) -> DataFrame:
-    """Fetch + flatten + coerce in one call (the dim refresh body)."""
-    return stations_from_json(spark, fetch_hrfco(url, timeout))

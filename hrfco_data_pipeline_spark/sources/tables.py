@@ -94,8 +94,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for the SQL surface."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -148,12 +148,10 @@ def station_delta_stream(parsed_stream: DataFrame) -> DataFrame:
 def alerts_with_flow_context(
     alerts: DataFrame,
     flows: DataFrame,
-    watermark: str = "2 hours",
-    lookback_minutes: int = 10,
 ) -> DataFrame:
     """Stream-stream interval join: enrich each water-level alert with
-    flow-rate readings from the same station observed in the
-    ``lookback_minutes`` before the alert.
+    flow-rate readings from the same station observed in the 10
+    minutes before the alert (2-hour watermark on each streaming side).
 
     Both sides carry a watermark and the join condition bounds event
     time on both sides (equi-key + interval), which is exactly what
@@ -179,12 +177,12 @@ def alerts_with_flow_context(
         "flow_rate",
     )
     if alerts.isStreaming:
-        a = a.withWatermark("alert_ts", watermark)
+        a = a.withWatermark("alert_ts", "2 hours")
     if flows.isStreaming:
-        fl = fl.withWatermark("flow_ts", watermark)
+        fl = fl.withWatermark("flow_ts", "2 hours")
     cond = (
         (F.col("a_station") == F.col("f_station"))
-        & (F.col("flow_ts") >= F.col("alert_ts") - F.expr(f"INTERVAL {lookback_minutes} MINUTES"))
+        & (F.col("flow_ts") >= F.col("alert_ts") - F.expr("INTERVAL 10 MINUTES"))
         & (F.col("flow_ts") <= F.col("alert_ts"))
     )
     return a.join(fl, cond, "inner").select(
@@ -198,18 +196,19 @@ def alerts_with_flow_context(
 
 
 def session_windowed_counts(
-    classified: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
+    classified: DataFrame, gap: str = "30 minutes"
 ) -> DataFrame:
     """Native session windows (``F.session_window``): per-station event
     bursts separated by >= ``gap`` of inactivity — the engine-managed
     form of plans/relational.events_sessionize's manual lag+cumsum
-    sessionization. On a stream the watermark closes sessions whose gap
-    has definitively elapsed (state per open session, not per event);
+    sessionization. On a stream the 2-hour watermark closes sessions
+    whose gap has definitively elapsed (state per open session, not per
+    event);
     identical semantics on batch frames (the tests' cross-check).
     """
     with_ts = with_event_time(classified).filter(F.col("event_ts").isNotNull())
     if classified.isStreaming:
-        with_ts = with_ts.withWatermark("event_ts", watermark)
+        with_ts = with_ts.withWatermark("event_ts", "2 hours")
     return (
         with_ts.groupBy(
             F.session_window("event_ts", gap).alias("sw"), F.col("wlobscd")
@@ -422,9 +421,7 @@ def rise_forecast_stream(classified_stream: DataFrame) -> DataFrame:
     )
 
 
-def histogram_rollup_stream(
-    events_stream: DataFrame, watermark: str = "1 day"
-) -> DataFrame:
+def histogram_rollup_stream(events_stream: DataFrame) -> DataFrame:
     """Streaming face of the mergeable histogram quantile rollup
     (plans/relational.events_histogram_quantiles): maintain the
     per (event_type, day, bucket) integer bin counts as a watermarked
@@ -432,7 +429,7 @@ def histogram_rollup_stream(
     (append mode) — exactly the stored-rollup rows the batch face
     merges and interpolates, so the stream keeps the rollup current
     and batch answers quantiles without rescanning raw events. State
-    is bounded by types × open-days × 512 bins, evicted at the
+    is bounded by types × open-days × 512 bins, evicted at the 1-day
     watermark.
 
     Watermarks require an LTZ event time, so eviction runs on the
@@ -450,7 +447,7 @@ def histogram_rollup_stream(
             F.col("value").isNotNull() & (F.col("value") >= 0)
         )
         .withColumn("ts_ltz", F.col("ts").cast("timestamp"))
-        .withWatermark("ts_ltz", watermark)
+        .withWatermark("ts_ltz", "1 day")
         .groupBy(
             "event_type",
             F.window("ts_ltz", "1 day").alias("w"),

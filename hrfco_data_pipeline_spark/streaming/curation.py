@@ -23,32 +23,26 @@ from hrfco_data_pipeline_spark.operators.textnorm import normalize_text, redact_
 from hrfco_data_pipeline_spark.plans.llm import _tokens, quality_score_expr
 
 
-def curate_documents(
-    docs: DataFrame,
-    min_quality: float = 0.7,
-    dedup: bool = True,
-    watermark: str = "10 minutes",
-    model_gate: bool = False,
-) -> DataFrame:
-    """Normalize, redact, quality-gate, and dedup a documents frame.
+def curate_documents(docs: DataFrame, model_gate: bool = False) -> DataFrame:
+    """Normalize, redact, quality-gate (quality >= 0.7), and dedup a
+    documents frame on its content hash.
 
     Works on batch and streaming inputs; `df.isStreaming` picks the
-    dedup form (bounded-state WithinWatermark vs plain dropDuplicates).
+    dedup form (bounded-state WithinWatermark over a 10-minute
+    watermark vs plain dropDuplicates).
     Output: doc_id, lang, source, text (cleaned), quality, text_hash.
     """
     clean = docs.withColumn("text", redact_pii(normalize_text("text")))
     scored = clean.withColumn("quality", quality_score_expr(_tokens()))
-    kept = scored.filter(F.col("quality") >= min_quality)
+    kept = scored.filter(F.col("quality") >= 0.7)
     if model_gate:
         kept = kept.filter(model_quality_z(_tokens()) >= 0)
     kept = kept.withColumn("text_hash", F.md5(F.lower(F.trim("text"))))
     cols = ["doc_id", "lang", "source", "text", "quality", "text_hash"]
-    if not dedup:
-        return kept.select(*cols)
     if kept.isStreaming:
         deduped = (
             kept.withColumn("ingest_ts", F.current_timestamp())
-            .withWatermark("ingest_ts", watermark)
+            .withWatermark("ingest_ts", "10 minutes")
             .dropDuplicatesWithinWatermark(["text_hash"])
         )
     else:
@@ -83,17 +77,17 @@ def model_quality_z(toks) -> F.Column:
     ) / F.size(toks)
 
 
-def dsir_log_ratios(docs: DataFrame, n_buckets: int = 256) -> list[float]:
+def dsir_log_ratios(docs: DataFrame) -> list[float]:
     """Offline half of online DSIR scoring: the per-bucket
     ln((tgt+1)/(raw+1)) table from a BATCH corpus — bounded at
-    ``n_buckets`` rows by construction, so collecting it is the
+    256 rows by construction, so collecting it is the
     standard train-offline/serve-online handoff (at scale this table
     is written by the nightly batch job and loaded by the stream)."""
     toks = docs.select("lang", F.explode(
         F.split(F.trim(F.col("text")), r"\s+")).alias("tok"))
     bucket = (
         F.conv(F.substring(F.md5(F.lower("tok")), 1, 15), 16, 10)
-        .cast("long") % n_buckets
+        .cast("long") % 256
     ).alias("b")
     counts = toks.select("lang", bucket).groupBy("b").agg(
         F.count("*").alias("raw_c"),
@@ -106,7 +100,7 @@ def dsir_log_ratios(docs: DataFrame, n_buckets: int = 256) -> list[float]:
         math.log((rows[b]["tgt_c"] + 1) / (rows[b]["raw_c"] + 1))
         if b in rows
         else 0.0
-        for b in range(n_buckets)
+        for b in range(256)
     ]
 
 
@@ -447,7 +441,7 @@ def bm25_index_stream(docs_stream: DataFrame, table_path: str):
     return docs_stream.writeStream.foreachBatch(_merge)
 
 
-def bm25_topk_from_index(spark, table_path: str, topk: int = 10) -> DataFrame:
+def bm25_topk_from_index(spark, table_path: str) -> DataFrame:
     """Serve the registered BM25 query set from the stored postings
     index — row-for-row equal to the batch face docs_bm25_topk when
     the index has absorbed the same corpus (pinned by
@@ -461,9 +455,7 @@ def bm25_topk_from_index(spark, table_path: str, topk: int = 10) -> DataFrame:
 
     tf = read_appended(spark, table_path)
     qterms = spark.createDataFrame(BM25_QUERIES, "query_id long, term string")
-    return bm25_rank_topk(
-        _bm25_fold(bm25_candidates_from_postings(tf, qterms)), topk
-    )
+    return bm25_rank_topk(_bm25_fold(bm25_candidates_from_postings(tf, qterms)))
 
 
 # ---------------------------------------------------------------------------
@@ -472,9 +464,9 @@ def bm25_topk_from_index(spark, table_path: str, topk: int = 10) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def kmv_batch_partials(batch_df: DataFrame, batch_id: int, k: int = 64) -> DataFrame:
+def kmv_batch_partials(batch_df: DataFrame, batch_id: int) -> DataFrame:
     """Bottom-k partial for one events micro-batch: per event type, the
-    k smallest Knuth hashes of the batch's distinct users. At most
+    k = KMV_K smallest Knuth hashes of the batch's distinct users. At most
     k·|types| rows per batch regardless of batch size — the whole point
     of a mergeable sketch: the stored state grows with batches·k, never
     with users."""
@@ -485,12 +477,12 @@ def kmv_batch_partials(batch_df: DataFrame, batch_id: int, k: int = 64) -> DataF
         .distinct()
         .select("event_type", kmv_hash(F.col("user_id")).alias("h"))
     )
-    return kmv_kmin(du, k).select(
+    return kmv_kmin(du).select(
         F.lit(batch_id).cast("long").alias("batch"), "event_type", "h"
     )
 
 
-def kmv_sketch_stream(events_stream: DataFrame, table_path: str, k: int = 64):
+def kmv_sketch_stream(events_stream: DataFrame, table_path: str):
     """Keep per-type KMV sketches current as events stream in: per
     micro-batch, ONE bottom-k partial (bounded rows, no state store)
     appended exactly-once into ``table_path``. Merging bottom-k
@@ -506,14 +498,14 @@ def kmv_sketch_stream(events_stream: DataFrame, table_path: str, k: int = 64):
         _append_merge(
             batch_df.sparkSession,
             table_path,
-            kmv_batch_partials(batch_df, batch_id, k),
+            kmv_batch_partials(batch_df, batch_id),
             batch_id,
         )
 
     return events_stream.writeStream.foreachBatch(_merge)
 
 
-def kmv_setops_from_partials(spark, table_path: str, k: int = 64) -> DataFrame:
+def kmv_setops_from_partials(spark, table_path: str) -> DataFrame:
     """Per-type-pair distinct/union/intersection estimates from the
     accumulated bottom-k partials — equal to the sketch columns of the
     batch face plans/relational.events_kmv_setops over the same events
@@ -526,7 +518,7 @@ def kmv_setops_from_partials(spark, table_path: str, k: int = 64) -> DataFrame:
     )
 
     part = read_appended(spark, table_path).select("event_type", "h").distinct()
-    return kmv_pair_estimates(kmv_kmin(part, k), k).orderBy("type_a", "type_b")
+    return kmv_pair_estimates(kmv_kmin(part)).orderBy("type_a", "type_b")
 
 
 # ---------------------------------------------------------------------------
@@ -1103,12 +1095,12 @@ def _bind_and_await(spark, frame_schema, src: str, bind, base: str,
 
 
 def run_parity_stream_ordered(
-    spark, frame, order_col: str, bind, prefix: str, k: int = 4
+    spark, frame, order_col: str, bind, prefix: str
 ) -> str:
     """Ordered variant of ``run_parity_stream`` for ORDER-DEPENDENT
     maintainers (the lateness monitor: per-batch lateness is computed
     against the high-water mark of everything that ARRIVED before, so
-    micro-batch order must replay arrival order). Writes ``k``
+    micro-batch order must replay arrival order). Writes k = 4
     contiguous ``order_col`` ranges as single-file parquet dirs with
     strictly increasing mtimes; availableNow + maxFilesPerTrigger=1
     then consumes them oldest-first (the proven
@@ -1136,6 +1128,7 @@ def run_parity_stream_ordered(
     import shutil
     import time
 
+    k = 4
     base = parity_workdir(prefix)
     src = f"{base}/src"
     os.makedirs(src)

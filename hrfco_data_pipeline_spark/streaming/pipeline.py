@@ -52,6 +52,7 @@ from hrfco_data_pipeline_spark.operators.classify import (
     process_observations,
 )
 from hrfco_data_pipeline_spark.sinks.writers import (
+    recover_swap,
     write_archive,
     write_dlq,
     write_fact,
@@ -165,6 +166,7 @@ def run_stream(
             ).persist()
 
             def write_alerts() -> None:
+                recover_swap(f"{out_dir}/alerts", "_committed")
                 build_alerts(classified, extra_cols=(BATCH_TS,)).withColumn(
                     "timestamp", F.unix_millis(BATCH_TS)
                 ).drop(BATCH_TS).write.mode("append").parquet(f"{out_dir}/alerts")

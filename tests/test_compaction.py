@@ -107,6 +107,56 @@ def test_compaction_recovers_from_kill_between_renames(
     assert os.listdir(tmp_path) == ["tbl"]
 
 
+def _classified(spark, first: int, n: int):
+    """``n`` classified observations in the shape ``write_fact`` reads."""
+    return spark.range(first, first + n).select(
+        F.format_string("S%04d", "id").alias("wlobscd"),
+        F.format_string("2024-01-%02d 09:00", (F.col("id") % 3 + 1).cast("int"))
+        .alias("obs_time_str"),
+        (F.col("id") * 0.5).alias("water_level"),
+        F.lit(None).cast("double").alias("flow_rate"),
+        F.lit(False).alias("is_anomaly"),
+        F.lit(None).cast("string").alias("flood_warning_level"),
+        F.current_timestamp().alias("now"),
+    )
+
+
+def test_append_after_killed_compaction_keeps_committed_rewrite(
+    spark, tmp_path, monkeypatch
+):
+    """A kill between compaction's renames leaves the committed rewrite
+    in ``<table>__staging__`` and no live table. The next append must
+    roll it forward before it recreates the live path; otherwise the
+    table holds only the appended rows and the next swap deletes the
+    rewrite as stale."""
+    import os
+
+    from hrfco_data_pipeline_spark.sinks.writers import write_fact
+
+    path = str(tmp_path / "fact")
+    write_fact(_classified(spark, 0, 100), path, now="now")
+    real_rename = os.rename
+
+    class Killed(BaseException):
+        pass
+
+    def killing_rename(src, dst):
+        if dst == path:
+            raise Killed()
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", killing_rename)
+    with pytest.raises(Killed):
+        compact_partitions(spark, path, ["obs_date"])
+    monkeypatch.undo()
+
+    write_fact(_classified(spark, 100, 5), path, now="now")
+    assert spark.read.parquet(path).count() == 105
+    assert os.listdir(tmp_path) == ["fact"]
+    compact_partitions(spark, path, ["obs_date"])
+    assert spark.read.parquet(path).count() == 105
+
+
 def test_prune_partitions_drops_only_older(spark, tmp_path):
     from hrfco_data_pipeline_spark.sinks.compaction import prune_partitions
 

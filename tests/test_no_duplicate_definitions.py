@@ -163,3 +163,113 @@ def test_staged_swap_names_only_in_writers():
             and ("__staging__" in node.value or "__old__" in node.value)
         ]
     assert not found, f"staged-swap dir names outside sinks/writers.py: {found}"
+
+
+# The only defaulted parameters no call in the repo has to set: settings
+# a deployment picks, not constants of the pipeline.
+DEPLOYMENT_SETTINGS = {
+    "run_stream(trigger_seconds)": (
+        "poll cadence; a deployment runs the 10-minute processing-time "
+        "trigger of docs/MIGRATION.md, tests drain with availableNow"
+    ),
+    "observations_kafka_stream(starting_offsets)": (
+        "where a deployment's first start reads the topic from"
+    ),
+    "attach_broadcast(available_now)": (
+        "a deployed alert fan-out runs continuously, tests drain once"
+    ),
+    "SinkCircuitBreaker(failure_rate_threshold)": (
+        "breaker policy of a deployment's storage backends"
+    ),
+    "fetch_hrfco(timeout)": "HTTP timeout of a deployment's API poll",
+}
+
+
+def _call_sites() -> tuple[dict, dict]:
+    """Per called name, the keywords and the largest positional count
+    of its calls across the package, tools/, bench.py, perfbench/ and
+    tests/. A call through ``from m import f as g`` counts for ``f``;
+    ``*args`` / ``**kwargs`` count as setting every parameter."""
+    root = PKG.parent
+    files = [
+        *PKG.rglob("*.py"),
+        *(root / "tools").rglob("*.py"),
+        *(root / "perfbench").rglob("*.py"),
+        *(root / "tests").rglob("*.py"),
+        root / "bench.py",
+    ]
+    keywords: dict[str, set] = {}
+    positional: dict[str, int] = {}
+    for path in files:
+        tree = ast.parse(path.read_text())
+        aliases = {
+            a.asname: a.name
+            for node in ast.walk(tree)
+            if isinstance(node, ast.ImportFrom)
+            for a in node.names
+            if a.asname
+        }
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            func = node.func
+            if isinstance(func, ast.Name):
+                name = aliases.get(func.id, func.id)
+            elif isinstance(func, ast.Attribute):
+                name = func.attr
+            else:
+                continue
+            starred = any(isinstance(a, ast.Starred) for a in node.args)
+            positional[name] = max(
+                positional.get(name, 0),
+                float("inf") if starred else len(node.args),
+            )
+            keywords.setdefault(name, set()).update(
+                k.arg or "**" for k in node.keywords
+            )
+    return keywords, positional
+
+
+def test_every_default_is_set_by_some_caller():
+    """A defaulted parameter that no call sets is a constant with extra
+    code around it, and on a registered query one that no check can
+    reach (the registry calls ``(spark, sf_dir)``). Each must be set,
+    by keyword or position, by some call in the repo, or be a named
+    deployment setting. oracles.py, the reference SQL, is exempt."""
+    assert len(DEPLOYMENT_SETTINGS) <= 5
+    keywords, positional = _call_sites()
+    unset = []
+    for rel, tree in _package_trees(PKG / "oracles.py"):
+        owner = {
+            id(fn): cls.name
+            for cls in ast.walk(tree)
+            if isinstance(cls, ast.ClassDef)
+            for fn in cls.body
+        }
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            name = owner[id(fn)] if fn.name == "__init__" else fn.name
+            args = fn.args.posonlyargs + fn.args.args
+            bound = 1 if args and args[0].arg in ("self", "cls") else 0
+            defaulted = [
+                (a.arg, i - bound)
+                for i, a in enumerate(args)
+                if i >= len(args) - len(fn.args.defaults)
+            ] + [
+                (a.arg, None)
+                for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
+                if d is not None
+            ]
+            kws = keywords.get(name, set())
+            for arg, pos in defaulted:
+                label = f"{name}({arg})"
+                if label in DEPLOYMENT_SETTINGS or arg in kws or "**" in kws:
+                    continue
+                if pos is not None and positional.get(name, 0) > pos:
+                    continue
+                unset.append(f"{rel}:{fn.lineno} {label}")
+    assert not unset, (
+        f"{len(unset)} defaulted parameters no caller sets — make each a "
+        f"constant: {unset}"
+    )
