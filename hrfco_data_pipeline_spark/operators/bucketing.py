@@ -46,8 +46,8 @@ def bucketed_join(
     return left.join(spark.table(right_table), on)
 
 
-def morton_interleave(qx, qy, bits: int = 8):
-    """Morton (Z-order) code of two pre-quantized columns: bit i of
+def morton_interleave(qx, qy):
+    """Morton (Z-order) code of two 8-bit quantized columns: bit i of
     ``qx`` lands at position 2i, bit i of ``qy`` at 2i+1. Pure shift/
     mask arithmetic — stays inside whole-stage codegen and is exactly
     reproducible in any engine with integer bit ops.
@@ -61,7 +61,7 @@ def morton_interleave(qx, qy, bits: int = 8):
     from pyspark.sql import functions as F
 
     z = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(8):
         z = (
             z
             + F.shiftleft(F.shiftright(qx, i).bitwiseAND(F.lit(1)), 2 * i)
@@ -115,14 +115,9 @@ def hilbert_index(x, y, bits: int = 8):
     return F.aggregate(levels, init, step, lambda acc: acc["d"])
 
 
-def write_zorder(
-    df: DataFrame,
-    path: str,
-    zorder_col,
-    n_files: int = 16,
-) -> None:
+def write_zorder(df: DataFrame, path: str, zorder_col) -> None:
     """Write ``df`` laid out by a Z-order key: range-exchange into
-    ``n_files`` Morton-key ranges (sampled boundaries, no global sort)
+    16 Morton-key ranges (sampled boundaries, no global sort)
     with a within-partition sort, one file per range. Each output file
     then covers a contiguous Morton range = a small set of rectangles
     in the interleaved key space, so per-file min/max column stats
@@ -131,7 +126,7 @@ def write_zorder(
     """
     (
         df.withColumn("__z", zorder_col)
-        .repartitionByRange(n_files, "__z")
+        .repartitionByRange(16, "__z")
         .sortWithinPartitions("__z")
         .drop("__z")
         .write.mode("overwrite")

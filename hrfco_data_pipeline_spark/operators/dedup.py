@@ -450,8 +450,8 @@ def connected_components(
     return labels
 
 
-def prefix_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
-    """Exact-threshold Jaccard set-similarity self-join via prefix
+def prefix_jaccard_pairs(docs: DataFrame) -> DataFrame:
+    """Exact Jaccard ≥ t = 0.5 set-similarity self-join via prefix
     filtering (the All-Pairs / PPJoin candidate scheme, re-expressed as
     DataFrame ops in the Vernica-et-al. distributed formulation).
 
@@ -509,7 +509,7 @@ def prefix_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     ex = sh.select("doc_id", "n_sh", F.explode("sh").alias("h"))
     df_tbl = ex.groupBy("h").agg(F.count("*").alias("df"))
     w = Window.partitionBy("doc_id").orderBy(F.asc("df"), F.asc("h"))
-    prefix_len = F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
+    prefix_len = F.col("n_sh") - F.ceil(F.lit(0.5) * F.col("n_sh")) + 1
     prefix = (
         ex.join(df_tbl, "h")
         .withColumn("rk", F.row_number().over(w))
@@ -524,7 +524,7 @@ def prefix_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
             & (F.col("a.doc_id") < F.col("b.doc_id"))
             & (
                 F.least("a.n_sh", "b.n_sh")
-                >= F.lit(threshold) * F.greatest("a.n_sh", "b.n_sh")
+                >= F.lit(0.5) * F.greatest("a.n_sh", "b.n_sh")
             ),
         )
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
@@ -546,6 +546,6 @@ def prefix_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
             F.col("common").cast("double")
             / (F.col("na") + F.col("nb") - F.col("common")),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= 0.5)
         .select("doc_a", "doc_b", "common", "jaccard")
     )

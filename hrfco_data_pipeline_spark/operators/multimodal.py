@@ -116,17 +116,14 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def sample_frames(
-    mm: DataFrame, frame_bytes: int = 64, every_k: int = 4
-) -> DataFrame:
+def sample_frames(mm: DataFrame) -> DataFrame:
     """Frame-sampling plumbing for video-like payloads via mapInPandas:
-    the payload is treated as a sequence of fixed-size frames
-    (``frame_bytes`` each; a real deployment plugs a container parser
-    here) and every ``every_k``-th frame is emitted as its own row —
-    the fan-out shape (one blob row → n frame rows) that feeds
-    per-frame feature extraction. Deterministic chunking keeps the
-    whole path oracle-checkable: frame i covers bytes
-    [i*frame_bytes, (i+1)*frame_bytes).
+    the payload is treated as a sequence of 64-byte frames (a real
+    deployment plugs a container parser here) and every 4th frame is
+    emitted as its own row — the fan-out shape (one blob row → n frame
+    rows) that feeds per-frame feature extraction. Deterministic
+    chunking keeps the whole path oracle-checkable: frame i covers
+    bytes [i*64, (i+1)*64).
     """
 
     def batches(it: Iterator) -> Iterator:
@@ -137,14 +134,14 @@ def sample_frames(
             for doc_id, modality, content in zip(
                 pdf["doc_id"], pdf["modality"], pdf["content"]
             ):
-                n_frames = (len(content) + frame_bytes - 1) // frame_bytes
-                for i in range(0, n_frames, every_k):
+                n_frames = (len(content) + 63) // 64
+                for i in range(0, n_frames, 4):
                     rows.append(
                         (
                             doc_id,
                             modality,
                             i,
-                            content[i * frame_bytes : (i + 1) * frame_bytes],
+                            content[i * 64 : (i + 1) * 64],
                         )
                     )
             yield pd.DataFrame(
@@ -164,13 +161,11 @@ WINDOW_SCHEMA = StructType(
 )
 
 
-def frame_windows(
-    mm: DataFrame, frame_bytes: int = 64, hop_bytes: int = 32
-) -> DataFrame:
+def frame_windows(mm: DataFrame, frame_bytes: int = 64) -> DataFrame:
     """Overlapping windowed framing for audio-like payloads via
     mapInPandas — the STFT-shaped sibling of ``sample_frames`` (which
     chunks WITHOUT overlap): window w covers bytes
-    [w*hop, w*hop + frame), only FULL windows are emitted, and each
+    [w*32, w*32 + frame_bytes), only FULL windows are emitted, and each
     carries its integer byte-sum "energy" (a real deployment plugs a
     PCM decoder + spectral kernel here; the integer stand-in keeps the
     fan-out shape and the whole path oracle-checkable).
@@ -179,8 +174,8 @@ def frame_windows(
     Arrow batch — no shuffle, no per-row Python; downstream per-window
     feature extraction inherits the blob partitioning.
     """
-    if frame_bytes < 1 or hop_bytes < 1:
-        raise ValueError("frame_bytes and hop_bytes must be >= 1")
+    if frame_bytes < 1:
+        raise ValueError("frame_bytes must be >= 1")
 
     def batches(it: Iterator) -> Iterator:
         import pandas as pd
@@ -192,8 +187,8 @@ def frame_windows(
             ):
                 n = len(content)
                 w = 0
-                while w * hop_bytes + frame_bytes <= n:
-                    start = w * hop_bytes
+                while w * 32 + frame_bytes <= n:
+                    start = w * 32
                     rows["doc_id"].append(doc_id)
                     rows["modality"].append(modality)
                     rows["win_idx"].append(w)

@@ -25,41 +25,36 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def range_join_banded(
-    points: DataFrame,
-    intervals: DataFrame,
-    ts_col: str = "ts",
-    unit: str = "hour",
-) -> DataFrame:
+def range_join_banded(points: DataFrame, intervals: DataFrame) -> DataFrame:
     """Join point rows to every interval containing them
-    (``start <= ts < end``, half-open) via a banded equi-join.
+    (``w_start <= ts < w_end``, half-open) via a banded equi-join.
 
-    ``unit`` is the band width as a ``date_trunc`` unit; pick it near
-    the typical interval length so the per-interval fan-out stays
-    small (a 2 h window on 1 h bands explodes to 2-3 rows).
-    Column names must not collide between the two inputs.
+    The bands are one hour wide, near the typical interval length, so
+    the per-interval fan-out stays small (a 2 h window on 1 h bands
+    explodes to 2-3 rows). Column names must not collide between the
+    two inputs.
     """
     bands = intervals.withColumn(
         "_band",
         F.explode(
             F.sequence(
-                F.date_trunc(unit, F.col("w_start")),
+                F.date_trunc("hour", F.col("w_start")),
                 # end is exclusive: an interval ending exactly on a
                 # band boundary contributes nothing to that band, but
                 # the spurious band row is harmless — the refine
                 # predicate drops it; keeping the sequence inclusive
                 # avoids an empty-sequence corner for tiny intervals.
-                F.date_trunc(unit, F.col("w_end")),
-                F.expr(f"INTERVAL 1 {unit}"),
+                F.date_trunc("hour", F.col("w_end")),
+                F.expr("INTERVAL 1 hour"),
             )
         ),
     )
-    pts = points.withColumn("_band", F.date_trunc(unit, F.col(ts_col)))
+    pts = points.withColumn("_band", F.date_trunc("hour", F.col("ts")))
     return (
         pts.join(bands, "_band")
         .filter(
-            (F.col(ts_col) >= F.col("w_start"))
-            & (F.col(ts_col) < F.col("w_end"))
+            (F.col("ts") >= F.col("w_start"))
+            & (F.col("ts") < F.col("w_end"))
         )
         .drop("_band")
     )

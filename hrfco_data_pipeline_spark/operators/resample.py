@@ -24,9 +24,11 @@ from pyspark.sql import DataFrame
 RESAMPLED_SCHEMA = (
     "wlobscd string, grid_ts timestamp, water_level double, interpolated boolean"
 )
+# the grid step both forms snap to
+FREQ_MINUTES = 10
 
 
-def _resample_fn(freq_minutes: int):
+def _resample_fn():
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("obs_ts").dropna(subset=["obs_ts"])
         if pdf.empty:
@@ -37,7 +39,7 @@ def _resample_fn(freq_minutes: int):
         s = pdf.set_index("obs_ts")["water_level"]
         # bucket mean snaps in-bucket readings to the grid; empty
         # buckets become NaN holes for the interpolator
-        g = s.resample(f"{freq_minutes}min").mean()
+        g = s.resample(f"{FREQ_MINUTES}min").mean()
         filled = g.interpolate(method="linear", limit_area="inside")
         out = pd.DataFrame(
             {
@@ -53,18 +55,18 @@ def _resample_fn(freq_minutes: int):
     return fn
 
 
-def resample_stations(df: DataFrame, freq_minutes: int = 10) -> DataFrame:
-    """Regularize (wlobscd, obs_ts, water_level) to a ``freq_minutes``
+def resample_stations(df: DataFrame) -> DataFrame:
+    """Regularize (wlobscd, obs_ts, water_level) to a ``FREQ_MINUTES``
     grid per station; interior holes linearly interpolated, edges never
     extrapolated. Input needs exactly those three columns."""
     return (
         df.select("wlobscd", "obs_ts", "water_level")
         .groupBy("wlobscd")
-        .applyInPandas(_resample_fn(freq_minutes), RESAMPLED_SCHEMA)
+        .applyInPandas(_resample_fn(), RESAMPLED_SCHEMA)
     )
 
 
-def resample_stations_sql(df: DataFrame, freq_minutes: int = 10) -> DataFrame:
+def resample_stations_sql(df: DataFrame) -> DataFrame:
     """JVM-side twin of :func:`resample_stations`: the same
     (wlobscd, grid_ts, water_level, interpolated) contract, but the
     whole grid-snap + linear interpolation runs in codegen'd built-ins
@@ -102,7 +104,7 @@ def resample_stations_sql(df: DataFrame, freq_minutes: int = 10) -> DataFrame:
     )
     steps = (
         F.timestamp_diff("MINUTE", F.col("obs_ts"), F.col("nts"))
-        / F.lit(freq_minutes)
+        / F.lit(FREQ_MINUTES)
     ).cast("bigint")
     own = F.array(
         F.struct(
@@ -116,7 +118,7 @@ def resample_stations_sql(df: DataFrame, freq_minutes: int = 10) -> DataFrame:
         lambda k: F.struct(
             (
                 F.col("obs_ts")
-                + F.make_interval(mins=(k * freq_minutes).cast("int"))
+                + F.make_interval(mins=(k * FREQ_MINUTES).cast("int"))
             ).alias("t"),
             (
                 (F.col("nwl") - F.col("water_level"))

@@ -14,9 +14,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def time_bucket(col: Column | str, width: str = "hour") -> Column:
-    """Truncate an (NTZ) timestamp column to the bucket boundary."""
-    return F.date_trunc(width, col)
+def time_bucket(col: Column | str) -> Column:
+    """Truncate an (NTZ) timestamp column to the hour."""
+    return F.date_trunc("hour", col)
 
 
 def rollup_by_bucket(
@@ -24,9 +24,6 @@ def rollup_by_bucket(
     time_col: str,
     keys: list[str],
     aggs: list[Column],
-    width: str = "hour",
 ) -> DataFrame:
-    """Generic rollup: group by (time bucket, keys) and aggregate."""
-    return df.groupBy(
-        time_bucket(time_col, width).alias("bucket"), *keys
-    ).agg(*aggs)
+    """Generic rollup: group by (hour bucket, keys) and aggregate."""
+    return df.groupBy(time_bucket(time_col).alias("bucket"), *keys).agg(*aggs)

@@ -52,7 +52,7 @@ def hash_bucket(key: Column | str, buckets: int = BUCKETS) -> Column:
 def sample_exact(df: DataFrame, key: str, rate: float) -> DataFrame:
     """Keep rows whose hash bucket < rate·BUCKETS — an exact,
     engine-portable Bernoulli sample at resolution 1/BUCKETS."""
-    return df.filter(hash_bucket(key, BUCKETS) < int(rate * BUCKETS))
+    return df.filter(hash_bucket(key) < int(rate * BUCKETS))
 
 
 def stratified_sample(
@@ -141,12 +141,13 @@ def pack_sequences(
 FFD_SCHEMA = "doc_id long, n_tokens long, pack_id long"
 
 
-def pack_sequences_ffd(df: DataFrame, budget: int = 2048) -> DataFrame:
-    """First-fit-decreasing packing of ``(doc_id, n_tokens)`` rows: sort
-    items by (tokens desc, id asc) and place each into the first open
-    pack with room — the classic bin-packing heuristic (≤ 11/9·OPT + 1
-    bins), tighter than the streaming running-sum pack at the cost of
-    holding the open-pack table in memory.
+def pack_sequences_ffd(df: DataFrame) -> DataFrame:
+    """First-fit-decreasing packing of ``(doc_id, n_tokens)`` rows into
+    2048-token packs: sort items by (tokens desc, id asc) and place
+    each into the first open pack with room — the classic bin-packing
+    heuristic (≤ 11/9·OPT + 1 bins), tighter than the streaming
+    running-sum pack at the cost of holding the open-pack table in
+    memory.
 
     Spark shape: one ``applyInPandas`` group — the packing itself is
     inherently sequential. Deterministic: the sort key is total and
@@ -163,7 +164,7 @@ def pack_sequences_ffd(df: DataFrame, budget: int = 2048) -> DataFrame:
             toks = int(row.n_tokens)
             placed = None
             for i, load in enumerate(loads):
-                if load + toks <= budget:
+                if load + toks <= 2048:
                     placed = i
                     break
             if placed is None:

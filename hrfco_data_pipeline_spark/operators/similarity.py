@@ -22,6 +22,9 @@ from pyspark.sql import functions as F
 # Fixed-point scale of the exact-integer centroid means (ivf_centroids,
 # pq_subcentroids, kmeans_iterate): components sum as floor(v * QUANT).
 QUANT = 1_000_000
+# neighbours kept per query by the approximate top-k searches
+# (hyperplane_lsh_topk, ivf_topk, pq_adc_topk, ivfpq_topk)
+TOPK = 5
 
 
 def dot(a: Column | str, b: Column | str) -> Column:
@@ -31,8 +34,8 @@ def dot(a: Column | str, b: Column | str) -> Column:
     )
 
 
-def as_double_vec(col: str, out: str = "v") -> Column:
-    return F.transform(col, lambda x: x.cast("double")).alias(out)
+def as_double_vec(col: str) -> Column:
+    return F.transform(col, lambda x: x.cast("double")).alias("v")
 
 
 def with_norm(df: DataFrame, vec: str = "v", out: str = "nrm") -> DataFrame:
@@ -85,22 +88,16 @@ def hyperplane_signature(
     return out
 
 
-def hyperplane_lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    dim: int = 64,
-    n_planes: int = 16,
-    bands: int = 4,
-) -> DataFrame:
+def hyperplane_lsh_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """Approximate cosine top-k: candidates share ≥1 signature band.
 
-    Bands of n_planes/bands bits each; join key = (band, band_bits).
-    Recall rises with bands; cost with bucket size. Same output schema
-    as ``brute_force_topk`` (qid, cid, cos_sim, rank) for easy A/B.
+    64-dim vectors, 16 sign planes in 4 bands of 4 bits; join key =
+    (band, band_bits). Recall rises with bands; cost with bucket size.
+    Same output schema as ``brute_force_topk`` (qid, cid, cos_sim,
+    rank) for easy A/B.
     """
-    planes = hyperplane_planes(dim, n_planes)
-    rows = n_planes // bands
+    bands, rows = 4, 4
+    planes = hyperplane_planes(64, bands * rows)
     mask = (1 << rows) - 1
 
     def banded(df: DataFrame, idn: str, vecn: str, nrm: str) -> DataFrame:
@@ -140,7 +137,7 @@ def hyperplane_lsh_topk(
     return (
         cand.select("qid", "cid", cos.alias("cos_sim"))
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK)
     )
 
 
@@ -291,7 +288,6 @@ def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     cents: list[list[float]],
-    k: int = 5,
 ) -> DataFrame:
     """IVF-flat ANN: corpus partitioned by nearest centroid; each query
     probes only its own cell (nprobe=1). The inverted-file analog of the
@@ -314,7 +310,7 @@ def ivf_topk(
     return (
         joined.select("qid", "cid", cos.alias("cos_sim"))
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK)
     )
 
 
@@ -421,7 +417,6 @@ def pq_adc_topk(
     corpus: DataFrame,
     queries: DataFrame,
     cents: list[list[list[float]]],
-    k: int = 5,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k: each query precomputes its
     m × ksub table of sub-distances to every sub-centroid, then scores
@@ -454,7 +449,7 @@ def pq_adc_topk(
     return (
         joined.select("qid", "cid", approx.alias("approx_dist"))
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK)
     )
 
 
@@ -463,7 +458,6 @@ def ivfpq_topk(
     queries: DataFrame,
     coarse_cents: list[list[float]],
     pq_cents: list[list[list[float]]],
-    k: int = 5,
 ) -> DataFrame:
     """The full IVF-PQ structure: the coarse quantizer (ivf_centroids)
     routes each query to one inverted list (nprobe=1) and PQ ADC
@@ -501,7 +495,7 @@ def ivfpq_topk(
     return (
         joined.select("qid", "cid", approx.alias("approx_dist"))
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK)
     )
 
 

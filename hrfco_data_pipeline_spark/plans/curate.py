@@ -103,7 +103,7 @@ def curate_corpus(
     # 5: near dedup — banded MinHash pairs → components → min-id keeps;
     # every clustered doc also learns its cluster root for stage 7
     pairs = minhash_dedup(exact, threshold=0.5)
-    comp = connected_components(pairs, "id_a", "id_b", distinct_pairs=True)
+    comp = connected_components(pairs, distinct_pairs=True)
     rooted = exact.join(
         comp.select(F.col("id").alias("doc_id"), "component"),
         "doc_id",

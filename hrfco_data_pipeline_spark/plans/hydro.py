@@ -180,7 +180,6 @@ def fact_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.sum("wl_dec").cast("double") / F.count("water_level")).alias("avg_wl"),
             F.max("water_level").alias("max_wl"),
         ],
-        width="hour",
     )
     return rolled.select(
         F.date_format("bucket", "yyyy-MM-dd HH:mm").alias("bucket"),
@@ -295,7 +294,7 @@ def resample_10min(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "water_level",
     )
-    r = resample_stations_sql(bm, freq_minutes=10)
+    r = resample_stations_sql(bm)
     return (
         r.groupBy("wlobscd")
         .agg(

@@ -478,7 +478,7 @@ def simhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hrfco_data_pipeline_spark.operators.dedup import simhash_pairs
 
     docs = _docs_parallel(spark, sf_dir)
-    return simhash_pairs(docs, max_hamming=3)
+    return simhash_pairs(docs)
 
 
 def lsh_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -494,9 +494,9 @@ def lsh_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", as_double_vec("embedding", "v"))
+    vecs = emb.select("vec_id", as_double_vec("embedding"))
     queries = vecs.filter(F.col("vec_id") % 50 == 0)
-    topk = hyperplane_lsh_topk(vecs, queries, k=5, dim=64, n_planes=16, bands=4)
+    topk = hyperplane_lsh_topk(vecs, queries)
     return topk.select(
         F.col("qid").alias("query_id"),
         F.col("cid").alias("neighbor_id"),
@@ -521,10 +521,10 @@ def ivf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", as_double_vec("embedding", "v"))
-    cents = ivf_centroids(vecs, n_centroids=16, dim=64)
+    vecs = emb.select("vec_id", as_double_vec("embedding"))
+    cents = ivf_centroids(vecs, dim=64)
     queries = vecs.filter(F.col("vec_id") % 50 == 0)
-    topk = ivf_topk(vecs, queries, cents, k=5)
+    topk = ivf_topk(vecs, queries, cents)
     return topk.select(
         F.col("qid").alias("query_id"),
         F.col("cid").alias("neighbor_id"),
@@ -542,7 +542,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    feats = extract_features(to_multimodal(docs), fake=True, n_bins=16)
+    feats = extract_features(to_multimodal(docs), fake=True)
     return feats.select(
         "doc_id",
         "n_bytes",
@@ -577,7 +577,7 @@ def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", as_double_vec("embedding", "v"))
+    vecs = emb.select("vec_id", as_double_vec("embedding"))
     # the synthetic embeddings top out near cos~0.45; 0.35 captures the
     # genuine tail while keeping the candidate set sparse
     pairs = lsh_near_dup_pairs(vecs, threshold=0.35)
@@ -1485,7 +1485,7 @@ def near_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs_parallel(spark, sf_dir)
     pairs = minhash_dedup(docs)
-    comp = connected_components(pairs, "id_a", "id_b", distinct_pairs=True)
+    comp = connected_components(pairs, distinct_pairs=True)
     w = Window.partitionBy("component")
     return (
         comp.withColumn("keep_doc_id", F.min("id").over(w))
@@ -1516,7 +1516,7 @@ def minhash_sig_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signatures_portable(docs, k=2)
+    sigs = minhash_signatures_portable(docs)
     return sigs.select(
         F.col("id").alias("doc_id"),
         F.element_at("sig", 1).alias("m0"),
@@ -1564,8 +1564,8 @@ def lsh_sig_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", as_double_vec("embedding", "v"))
-    planes = hyperplane_planes(dim=64, n_planes=16, seed=42)
+    vecs = emb.select("vec_id", as_double_vec("embedding"))
+    planes = hyperplane_planes(dim=64)
     return vecs.select(
         "vec_id", hyperplane_signature("v", planes).alias("sig")
     )
@@ -1615,7 +1615,7 @@ def near_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = lsh_candidate_pairs(sigs, bands=4, k=8).filter(
         F.col("est_jaccard") >= 0.7
     )
-    comp = connected_components(pairs, "id_a", "id_b", distinct_pairs=True)
+    comp = connected_components(pairs, distinct_pairs=True)
     w = Window.partitionBy("component")
     return (
         comp.withColumn("keep_doc_id", F.min("id").over(w))
@@ -1651,7 +1651,7 @@ def simhash_pairs_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("id"),
         simhash_64_from_token_hashes(base).alias("sh"),
     )
-    return simhash_pairs_from(hashed, max_hamming=3)
+    return simhash_pairs_from(hashed)
 
 
 def docs_simjoin_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1668,7 +1668,7 @@ def docs_simjoin_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hrfco_data_pipeline_spark.operators.dedup import prefix_jaccard_pairs
 
     docs = _docs_parallel(spark, sf_dir)
-    return prefix_jaccard_pairs(docs, threshold=0.5)
+    return prefix_jaccard_pairs(docs)
 
 
 def docs_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1968,10 +1968,10 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", as_double_vec("embedding", "v"))
-    cents = pq_subcentroids(vecs, m=8, ksub=16, dim=64)
+    vecs = emb.select("vec_id", as_double_vec("embedding"))
+    cents = pq_subcentroids(vecs)
     queries = vecs.filter(F.col("vec_id") % 50 == 0)
-    topk = _pq_topk(vecs, queries, cents, k=5)
+    topk = _pq_topk(vecs, queries, cents)
     return topk.select(
         F.col("qid").alias("query_id"),
         F.col("cid").alias("neighbor_id"),
@@ -2049,11 +2049,11 @@ def ivfpq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", as_double_vec("embedding", "v"))
-    coarse = ivf_centroids(vecs, n_centroids=16, dim=64)
-    pq = pq_subcentroids(vecs, m=8, ksub=16, dim=64)
+    vecs = emb.select("vec_id", as_double_vec("embedding"))
+    coarse = ivf_centroids(vecs, dim=64)
+    pq = pq_subcentroids(vecs)
     queries = vecs.filter(F.col("vec_id") % 50 == 0)
-    topk = ivfpq_topk(vecs, queries, coarse, pq, k=5)
+    topk = ivfpq_topk(vecs, queries, coarse, pq)
     return topk.select(
         F.col("qid").alias("query_id"),
         F.col("cid").alias("neighbor_id"),
@@ -2154,7 +2154,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    frames = sample_frames(to_multimodal(docs), frame_bytes=64, every_k=4)
+    frames = sample_frames(to_multimodal(docs))
     return frames.select(
         "doc_id",
         "frame_idx",
@@ -2178,9 +2178,9 @@ def semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", as_double_vec("embedding", "v"))
-    cents = ivf_centroids(vecs, n_centroids=16, dim=64)
-    out = semantic_dedup(vecs, cents, threshold=0.35)
+    vecs = emb.select("vec_id", as_double_vec("embedding"))
+    cents = ivf_centroids(vecs, dim=64)
+    out = semantic_dedup(vecs, cents)
     return out.select(
         "vec_id", "cell", _r4(F.col("cos_cent")).alias("cos_cent"), "kept"
     )
@@ -2202,8 +2202,8 @@ def kmeans_refine_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     quant = 1_000_000
     emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", as_double_vec("embedding", "v"))
-    cents = ivf_centroids(vecs, n_centroids=16, dim=64)
+    vecs = emb.select("vec_id", as_double_vec("embedding"))
+    cents = ivf_centroids(vecs, dim=64)
     assigned = assign_cells(vecs, cents)
     seeded = assigned.select(
         "cell", F.transform("v", lambda x: F.floor(x * quant)).alias("q")
@@ -2396,7 +2396,7 @@ def ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     vecs = emb.select(
-        "vec_id", "label", as_double_vec("embedding", "v")
+        "vec_id", "label", as_double_vec("embedding")
     ).withColumn("nrm", F.sqrt(_dot("v", "v")))
     q = vecs.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"),
@@ -2601,7 +2601,7 @@ def minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = minhash_signatures_portable(docs, k=8)
     pairs = lsh_candidate_pairs(sigs, bands=4, k=8)
     sh = docs.select(
-        "doc_id", shingle_array(F.col("text"), 5).alias("sh")
+        "doc_id", shingle_array(F.col("text")).alias("sh")
     ).withColumn("n", F.size("sh"))
     a = sh.select(
         F.col("doc_id").alias("id_a"),
@@ -2786,7 +2786,7 @@ def docs_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_parallel(spark, sf_dir)
     sh = docs.select(
         "doc_id",
-        F.explode(shingle_array(F.col("text"), 5)).alias("s"),
+        F.explode(shingle_array(F.col("text"))).alias("s"),
     ).select("doc_id", F.xxhash64("s").alias("h"))
     owner = sh.groupBy("h").agg(F.min("doc_id").alias("first_doc"))
     return (
@@ -2849,7 +2849,7 @@ def embedding_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", as_double_vec("embedding", "v")).select(
+    vecs = emb.select("vec_id", as_double_vec("embedding")).select(
         "vec_id", F.sqrt(dot("v", "v")).alias("nrm")
     )
     med = vecs.agg(F.median("nrm").alias("med"))
@@ -2964,7 +2964,7 @@ def minhash_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _docs_parallel(spark, sf_dir)
-    truth = prefix_jaccard_pairs(docs, threshold=0.5).select(
+    truth = prefix_jaccard_pairs(docs).select(
         F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")
     )
     sigs = minhash_signatures_portable(docs, k=8)
@@ -3319,7 +3319,7 @@ def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hrfco_data_pipeline_spark.operators.similarity import as_double_vec
 
     emb = load_table(spark, sf_dir, "embeddings")
-    v = emb.select("vec_id", as_double_vec("embedding", "v"))
+    v = emb.select("vec_id", as_double_vec("embedding"))
     return v.select(
         "vec_id",
         *[_achlioptas_component("v", j).alias(f"p{j}") for j in range(8)],
@@ -3537,7 +3537,6 @@ def docs_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         -F.col("c").cast("double"),
         [F.desc("c"), F.asc("w")],
         sample_key=F.col("w"),
-        rank_name="rank",
     ).filter(F.col("rank") <= 1000)
     pts = ranked.select(
         "rank",
@@ -3595,7 +3594,7 @@ def pq_distortion_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     m, ksub, dim = 8, 16, 64
     dsub = dim // m
     emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", as_double_vec("embedding", "v"))
+    vecs = emb.select("vec_id", as_double_vec("embedding"))
     cents = pq_subcentroids(vecs, m=m, ksub=ksub, dim=dim)
     qcols = []
     for j in range(m):
@@ -3894,7 +3893,7 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
 
     dim = 64
     emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", as_double_vec("embedding", "v"))
+    vecs = emb.select("vec_id", as_double_vec("embedding"))
 
     def dot_with(v_lits: list[float]) -> Column:
         # left fold FROM 0.0, matching the oracle's list_reduce seed
@@ -3956,9 +3955,7 @@ def multimodal_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    wins = frame_windows(
-        to_multimodal(docs, modality="audio-blob"), frame_bytes=64, hop_bytes=32
-    )
+    wins = frame_windows(to_multimodal(docs, modality="audio-blob"))
     agg = wins.groupBy("doc_id").agg(
         F.count("*").alias("n_windows"),
         F.sum("energy").alias("total_energy"),
@@ -4370,9 +4367,7 @@ def multimodal_image_patches(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    pat = image_patches(
-        to_multimodal(docs, modality="image-blob"), width=32, patch=8
-    )
+    pat = image_patches(to_multimodal(docs, modality="image-blob"))
     agg = pat.groupBy("doc_id").agg(
         F.count("*").alias("n_patches"),
         F.sum("energy").alias("total_energy"),
@@ -4397,10 +4392,8 @@ def multimodal_image_patches(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def embedding_mutual_knn(
-    spark: SparkSession, sf_dir: str, k: int = 3
-) -> DataFrame:
-    """Mutual k-NN graph over the embedding corpus: each vector's top-k
+def embedding_mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mutual 3-NN graph over the embedding corpus: each vector's top-3
     cosine neighbours within its label block, plus the MUTUAL flag
     (neighbour lists that contain each other) — the graph primitive
     semantic-clustering and reciprocal-nearest-neighbour dedup build
@@ -4487,7 +4480,7 @@ def embedding_mutual_knn(
     w = Window.partitionBy("src").orderBy(F.desc("cos"), F.asc("nbr"))
     knn = directed.select(
         "src", "nbr", "cos", F.row_number().over(w).alias("rank")
-    ).filter(F.col("rank") <= k)
+    ).filter(F.col("rank") <= 3)
     rev = knn.select(
         F.col("src").alias("r_src"), F.col("nbr").alias("r_nbr")
     )
@@ -4745,6 +4738,11 @@ def docs_quality_bootstrap_ci(
     )
 
 
+# hashed token buckets of the TV drift reports; the batch queries and
+# the streaming face (streaming/curation.tv_drift_stream) share it
+TV_BUCKETS = 256
+
+
 def docs_source_halves_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-source snapshot drift: per source, the total-variation
     distance between the token-bucket distributions of its two
@@ -4777,7 +4775,7 @@ def docs_source_halves_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bucket = (
         F.conv(F.substring(F.md5(F.lower("tok")), 1, 15), 16, 10).cast("long")
-        % 256
+        % TV_BUCKETS
     ).alias("b")
 
     # the bounded |sources|·2·256 count grid MATERIALIZES so its
@@ -4851,11 +4849,10 @@ def docs_source_tv_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair join, and the rollup are broadcast-sized by construction.
     """
     docs = load_table(spark, sf_dir, "documents")
-    counts = source_bucket_counts(docs, 256)
-    return tv_from_counts(counts, 256)
+    return tv_from_counts(source_bucket_counts(docs))
 
 
-def source_bucket_counts(docs: DataFrame, n_buckets: int = 256) -> DataFrame:
+def source_bucket_counts(docs: DataFrame) -> DataFrame:
     """(source, bucket, c) token counts — the mergeable substrate of
     the TV drift report (counts merge by plain addition, so per-batch
     partials union into the corpus counts: the streaming face
@@ -4863,14 +4860,14 @@ def source_bucket_counts(docs: DataFrame, n_buckets: int = 256) -> DataFrame:
     toks = docs.select("source", F.explode(_tokens()).alias("tok"))
     bucket = (
         F.conv(F.substring(F.md5(F.lower("tok")), 1, 15), 16, 10).cast("long")
-        % n_buckets
+        % TV_BUCKETS
     ).alias("b")
     return toks.select("source", bucket).groupBy("source", "b").agg(
         F.count("*").alias("c")
     )
 
 
-def tv_from_counts(counts: DataFrame, n_buckets: int = 256) -> DataFrame:
+def tv_from_counts(counts: DataFrame) -> DataFrame:
     """Pairwise TV distances from a (source, b, c) counts frame — the
     shared tail of the batch query and the streaming serve face (the
     stored per-batch partials sum to the same counts, so the two faces
@@ -4880,7 +4877,7 @@ def tv_from_counts(counts: DataFrame, n_buckets: int = 256) -> DataFrame:
     grid = totals.select(
         "source",
         "n",
-        F.explode(F.sequence(F.lit(0), F.lit(n_buckets - 1))).alias("b"),
+        F.explode(F.sequence(F.lit(0), F.lit(TV_BUCKETS - 1))).alias("b"),
     )
     dense = grid.join(counts, ["source", "b"], "left").select(
         "source", "n", "b", F.coalesce(F.col("c"), F.lit(0)).alias("c")
@@ -5622,8 +5619,8 @@ def ann_centroid_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", as_double_vec("embedding", "v"))
-    cents = ivf_centroids(vecs, n_centroids=16, dim=64)
+    vecs = emb.select("vec_id", as_double_vec("embedding"))
+    cents = ivf_centroids(vecs, dim=64)
     cells = assign_cells(vecs, cents).select("vec_id", "cell")
     sizes = cells.groupBy("cell").agg(F.count("*").alias("s"))
     tot = sizes.agg(
@@ -5731,7 +5728,7 @@ def embedding_pca_explained_variance(spark: SparkSession, sf_dir: str) -> DataFr
     dim = 64
     q = 1000000000.0
     emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", as_double_vec("embedding", "v"))
+    vecs = emb.select("vec_id", as_double_vec("embedding"))
 
     def dot_with(v_lits: list[float]) -> Column:
         expr: Column = F.lit(0.0)
@@ -7086,13 +7083,13 @@ def ann_recall_by_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # run at full parallelism instead of in the single scan task (REST
     # stage profile: serial 0.2–0.8 s stages); no-ops at real scale.
     vecs = parallelize_small_scan(
-        emb.select("vec_id", as_double_vec("embedding", "v"))
+        emb.select("vec_id", as_double_vec("embedding"))
     )
-    cents = ivf_centroids(vecs, n_centroids=16, dim=64)
+    cents = ivf_centroids(vecs, dim=64)
     cells = assign_cells(vecs, cents).select("vec_id", "cell")
     sizes = cells.groupBy("cell").agg(F.count("*").alias("n_vecs"))
     queries = vecs.filter(F.col("vec_id") % 50 == 0)
-    ivf = ivf_topk(vecs, queries, cents, k=5).select("qid", "cid")
+    ivf = ivf_topk(vecs, queries, cents).select("qid", "cid")
     brute = ann_cosine_topk(spark, sf_dir).select(
         F.col("query_id").alias("qid"), F.col("neighbor_id").alias("cid")
     )
@@ -7747,8 +7744,8 @@ def embedding_shard_cell_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", as_double_vec("embedding", "v"))
-    cents = ivf_centroids(vecs, n_centroids=16, dim=64)
+    vecs = emb.select("vec_id", as_double_vec("embedding"))
+    cents = ivf_centroids(vecs, dim=64)
     cells = assign_cells(vecs, cents).select(
         F.pmod(F.col("vec_id"), F.lit(4)).alias("shard"), "cell"
     )
@@ -7893,7 +7890,7 @@ def ann_pq_code_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     m, ksub, dim = 8, 16, 64
     emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", as_double_vec("embedding", "v"))
+    vecs = emb.select("vec_id", as_double_vec("embedding"))
     cents = pq_subcentroids(vecs, m=m, ksub=ksub, dim=dim)
     stacked = vecs.select(
         F.posexplode(pq_codes(cents)).alias("subspace", "code")
@@ -7971,7 +7968,7 @@ def ann_ivf_pq_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # downstream per-row kernel runs at full parallelism; no-ops at
     # real scale.
     vecs = parallelize_small_scan(
-        emb.select("vec_id", as_double_vec("embedding", "v"))
+        emb.select("vec_id", as_double_vec("embedding"))
     )
     cents = ivf_centroids(vecs, n_centroids=n_cells, dim=dim)
     pq_cents = pq_subcentroids(vecs, m=m, ksub=ksub, dim=dim)
@@ -8047,9 +8044,7 @@ def multimodal_patch_energy_profile(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    pat = image_patches(
-        to_multimodal(docs, modality="image-blob"), width=32, patch=8
-    )
+    pat = image_patches(to_multimodal(docs, modality="image-blob"))
     agg = pat.groupBy("doc_id").agg(
         F.count("*").alias("n_patches"),
         F.sum("energy").alias("e_tot"),

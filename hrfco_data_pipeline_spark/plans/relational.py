@@ -907,9 +907,7 @@ def events_peak_window_traffic(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("h") + F.expr("INTERVAL 90 MINUTES")).alias("w_end"),
         )
     )
-    joined = range_join_banded(
-        ev.select("ts"), windows, ts_col="ts", unit="hour"
-    )
+    joined = range_join_banded(ev.select("ts"), windows)
     return (
         joined.groupBy("win_type", "w_start")
         .agg(F.count("*").alias("n_in_window"))
@@ -1688,7 +1686,7 @@ def lineitem_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchange LOST the interleaved A/B 3× (0.47 s -> 1.4 s warm at
     # sf0.1). Its Hilbert sibling keeps the spread: that kernel's deep
     # bit-twiddling chain is ~6× heavier per row and wins 1.9×.
-    z = morton_interleave(F.col("qx"), F.col("qy"), bits=8)
+    z = morton_interleave(F.col("qx"), F.col("qy"))
     return (
         q.withColumn("shard", F.shiftright(z, 8))
         .groupBy("shard")
@@ -1737,7 +1735,7 @@ def lineitem_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Same under-split mitigation as lineitem_zorder_layout (r16):
     # the Hilbert kernel is even heavier per row than Morton's.
     q = parallelize_small_scan(q)
-    h = hilbert_index(F.col("qx"), F.col("qy"), bits=8)
+    h = hilbert_index(F.col("qx"), F.col("qy"))
     return (
         q.withColumn("shard", F.shiftright(h, 8))
         .groupBy("shard")
@@ -1810,8 +1808,8 @@ def layout_pruning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "uid",
             "pk",
             "sk",
-            morton_interleave(F.col("qx"), F.col("qy"), bits=8).alias("mz"),
-            hilbert_index(F.col("qx"), F.col("qy"), bits=8).alias("hz"),
+            morton_interleave(F.col("qx"), F.col("qy")).alias("mz"),
+            hilbert_index(F.col("qx"), F.col("qy")).alias("hz"),
         )
     )
     total = codes.agg(F.count("*").alias("n"))
@@ -5059,7 +5057,6 @@ def sessions_error_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s_end_us",
         "e_start_us",
         "e_end_us",
-        bucket_us=3_600_000_000,
     )
     return pairs.select(
         "user_id",

@@ -22,7 +22,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hrfco_data_pipeline_spark.sinks.writers import swap_in
+from hrfco_data_pipeline_spark.sinks.writers import COMMITTED, swap_in
 
 
 def compact_partitions(
@@ -66,7 +66,7 @@ def compact_partitions(
                 f"compaction row mismatch: {stats['rows']} -> {recount}"
             )
 
-    swap_in(path, _write, "_committed", "1")
+    swap_in(path, _write, COMMITTED, "1")
     return {**stats, "files_after": _count_data_files(path)}
 
 

@@ -95,20 +95,19 @@ class SinkCircuitBreaker:
 
 def retry_call(
     fn: Callable[[], None],
-    attempts: int = 3,
     sleep: Callable[[float], None] = time.sleep,
 ) -> None:
-    """RetryUtil.java:22-70 semantics: N attempts, exponential backoff
+    """RetryUtil.java:22-70 semantics: 3 attempts, exponential backoff
     from 0.5 s, x2 per retry, re-raises the last failure. Use for sink
     I/O inside foreachBatch only — Spark task retries cover everything
     inside the plan."""
     delay = 0.5
-    for attempt in range(attempts):
+    for attempt in range(3):
         try:
             fn()
             return
         except Exception:
-            if attempt == attempts - 1:
+            if attempt == 2:
                 raise
             sleep(delay)
             delay *= 2

@@ -14,6 +14,8 @@ Reference semantics → Spark-idiomatic form:
   this is one ``MERGE INTO`` on Delta/Iceberg.
 - W8 DLQ (DeadLetterQueueProducer.java:49-86): append-only envelope
   dataset.
+- W7 alert publish (AlertPublisher.java:43-82): append-only alert rows
+  (the Kafka topic's file-sink stand-in).
 
 All writers take already-classified DataFrames; the fan-out (W6) is
 ``coalesce(1) → persist() → four writes → unpersist()`` in
@@ -22,14 +24,14 @@ partition, one cache and one batch clock per micro-batch, so each write
 is one task and one file per partition directory. The single partition
 relies on the micro-batch bound of the source (the file source's
 ``maxFilesPerTrigger``, the Kafka source's ``maxOffsetsPerTrigger``).
-``write_fact`` and ``write_dlq`` stamp from the batch clock, the ``now``
-column the stream passes them.
+``write_fact``, ``write_dlq`` and ``write_alerts`` stamp from the batch
+clock, the ``now`` column the stream passes them.
 
-Every appender first runs ``recover_swap(path, "_committed")``: a
-directory a compaction was swapping when the process died must be
-healed before an append recreates its live path, or the next swap
-would take the appended rows for the whole table and delete the
-committed rewrite.
+Every appender goes through ``_append``, which first runs
+``recover_swap(path, COMMITTED)``: a directory a compaction was
+swapping when the process died must be healed before an append
+recreates its live path, or the next swap would take the appended rows
+for the whole table and delete the committed rewrite.
 """
 
 from __future__ import annotations
@@ -41,14 +43,27 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# the commit marker of the whole-table swaps (compaction, merge_stations,
+# snapshot_sink); the appenders heal an interrupted swap with it
+COMMITTED = "_committed"
+
+
+def _append(out: DataFrame, path: str, fmt: str, *partition_by: str) -> None:
+    """Append ``out`` to the ``fmt`` dataset at ``path``, after healing
+    a swap of ``path`` that a crash left half done."""
+    recover_swap(path, COMMITTED)
+    writer = out.write.mode("append")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.format(fmt).save(path)
+
 
 def write_archive(classified: DataFrame, path: str) -> None:
     """W3: kind/event-date-partitioned JSON archive."""
     kind = F.when(F.col("is_anomaly"), "anomalies").otherwise("normal")
     date = F.substring("obs_time_str", 1, 10)
     out = classified.withColumn("kind", kind).withColumn("obs_date", date)
-    recover_swap(path, "_committed")
-    out.write.partitionBy("kind", "obs_date").mode("append").json(path)
+    _append(out, path, "json", "kind", "obs_date")
 
 
 def write_fact(classified: DataFrame, path: str, now: str) -> None:
@@ -70,19 +85,28 @@ def write_fact(classified: DataFrame, path: str, now: str) -> None:
         F.col("flood_warning_level"),
         F.col(now).alias("created_at"),
     ).withColumn("obs_date", F.to_date("observation_time"))
-    recover_swap(path, "_committed")
-    fact.write.partitionBy("obs_date").mode("append").parquet(path)
+    _append(fact, path, "parquet", "obs_date")
 
 
 def write_dlq(dlq: DataFrame, path: str, now: str) -> None:
     """W8: append failure envelopes, adding the publish ``timestamp``
     (epoch ms) from the timestamp column ``now`` of ``dlq``, which is
     not written."""
-    recover_swap(path, "_committed")
-    (
-        dlq.select(*[c for c in dlq.columns if c != now], F.unix_millis(now).alias("timestamp"))
-        .write.mode("append")
-        .parquet(path)
+    _append(
+        dlq.select(*[c for c in dlq.columns if c != now], F.unix_millis(now).alias("timestamp")),
+        path,
+        "parquet",
+    )
+
+
+def write_alerts(alerts: DataFrame, path: str, now: str) -> None:
+    """W7: append alert rows, adding the publish ``timestamp`` (epoch
+    ms) from the timestamp column ``now`` of ``alerts``, which is not
+    written."""
+    _append(
+        alerts.withColumn("timestamp", F.unix_millis(now)).drop(now),
+        path,
+        "parquet",
     )
 
 
@@ -202,7 +226,7 @@ def merge_stations(
             )
         merged.write.mode("overwrite").parquet(staging)
 
-    swap_in(table_path, _write, "_committed", "1")
+    swap_in(table_path, _write, COMMITTED, "1")
 
 
 def write_range_sharded(
@@ -241,7 +265,7 @@ def snapshot_sink(out_dir: str):
         swap_in(
             out_dir,
             batch_df.write.mode("overwrite").parquet,
-            "_committed",
+            COMMITTED,
             str(batch_id),
         )
 

@@ -53,10 +53,10 @@ def with_event_time(parsed: DataFrame) -> DataFrame:
 
 def windowed_alert_counts(
     classified: DataFrame,
-    window_minutes: int = 60,
     watermark: str = "2 hours",
 ) -> DataFrame:
-    """A1 as an event-time window: counts per (window, warning level).
+    """A1 as an event-time window: counts per (hour window, warning
+    level).
 
     Works over batch or stream; on a stream the watermark lets Spark
     finalize + evict window state.
@@ -67,7 +67,7 @@ def windowed_alert_counts(
         stream_side = stream_side.withWatermark("event_ts", watermark)
     return (
         stream_side.groupBy(
-            F.window("event_ts", f"{window_minutes} minutes").alias("win"),
+            F.window("event_ts", "60 minutes").alias("win"),
             F.col("flood_warning_level").alias("level"),
         )
         .agg(F.count("*").alias("n"))
@@ -195,11 +195,9 @@ def alerts_with_flow_context(
     )
 
 
-def session_windowed_counts(
-    classified: DataFrame, gap: str = "30 minutes"
-) -> DataFrame:
+def session_windowed_counts(classified: DataFrame) -> DataFrame:
     """Native session windows (``F.session_window``): per-station event
-    bursts separated by >= ``gap`` of inactivity — the engine-managed
+    bursts separated by >= 30 minutes of inactivity — the engine-managed
     form of plans/relational.events_sessionize's manual lag+cumsum
     sessionization. On a stream the 2-hour watermark closes sessions
     whose gap has definitively elapsed (state per open session, not per
@@ -211,7 +209,7 @@ def session_windowed_counts(
         with_ts = with_ts.withWatermark("event_ts", "2 hours")
     return (
         with_ts.groupBy(
-            F.session_window("event_ts", gap).alias("sw"), F.col("wlobscd")
+            F.session_window("event_ts", "30 minutes").alias("sw"), F.col("wlobscd")
         )
         .agg(F.count("*").alias("n"))
         .select(

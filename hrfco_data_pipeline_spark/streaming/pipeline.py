@@ -52,7 +52,7 @@ from hrfco_data_pipeline_spark.operators.classify import (
     process_observations,
 )
 from hrfco_data_pipeline_spark.sinks.writers import (
-    recover_swap,
+    write_alerts,
     write_archive,
     write_dlq,
     write_fact,
@@ -165,19 +165,20 @@ def run_stream(
                 good.drop("value", "_corrupt"), stations
             ).persist()
 
-            def write_alerts() -> None:
-                recover_swap(f"{out_dir}/alerts", "_committed")
-                build_alerts(classified, extra_cols=(BATCH_TS,)).withColumn(
-                    "timestamp", F.unix_millis(BATCH_TS)
-                ).drop(BATCH_TS).write.mode("append").parquet(f"{out_dir}/alerts")
-
             sinks = (
                 (
                     "archive",
                     lambda: write_archive(classified.drop(BATCH_TS), f"{out_dir}/archive"),
                 ),
                 ("fact", lambda: write_fact(classified, f"{out_dir}/fact", now=BATCH_TS)),
-                ("alerts", write_alerts),
+                (
+                    "alerts",
+                    lambda: write_alerts(
+                        build_alerts(classified, extra_cols=(BATCH_TS,)),
+                        f"{out_dir}/alerts",
+                        now=BATCH_TS,
+                    ),
+                ),
             )
             # W6 fan-out: independent writes over one cached batch
             storage_failures: list[tuple[str, str]] = []

@@ -109,8 +109,7 @@ def test_zorder_write_yields_prunable_files(spark, tmp_path):
     write_zorder(
         q.select("pk", "sk", "qx", "qy"),
         out,
-        morton_interleave(F.col("qx"), F.col("qy"), bits=8),
-        n_files=16,
+        morton_interleave(F.col("qx"), F.col("qy")),
     )
     per_file = (
         spark.read.parquet(out)

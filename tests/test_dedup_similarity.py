@@ -62,14 +62,14 @@ def test_simhash_hamming(spark):
 
 def _vectors(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    return emb.select("vec_id", as_double_vec("embedding", "v"))
+    return emb.select("vec_id", as_double_vec("embedding"))
 
 
 def test_lsh_topk_approximates_brute_force(spark):
     vecs = _vectors(spark)
     queries = vecs.filter(F.col("vec_id") % 25 == 0)
     exact = brute_force_topk(vecs, queries, k=5)
-    approx = hyperplane_lsh_topk(vecs, queries, k=5, dim=64, n_planes=16, bands=4)
+    approx = hyperplane_lsh_topk(vecs, queries)
     exact_top1 = {r.qid: r.cid for r in exact.filter("rank = 1").collect()}
     approx_rows = approx.collect()
     approx_by_q = {}
@@ -114,7 +114,7 @@ def test_range_join_banded_matches_naive(spark):
     )
     got = {
         (r.pid, r.wid)
-        for r in range_join_banded(pts, ivs, ts_col="ts").collect()
+        for r in range_join_banded(pts, ivs).collect()
     }
     naive = {
         (r.pid, r.wid)
@@ -124,7 +124,7 @@ def test_range_join_banded_matches_naive(spark):
     }
     assert got == naive and got
     # the plan is an equi-join on the band key, not a nested loop
-    plan = range_join_banded(pts, ivs, ts_col="ts")._jdf.queryExecution().executedPlan().toString()
+    plan = range_join_banded(pts, ivs)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
 
 
@@ -163,7 +163,7 @@ def test_ivf_topk(spark):
     cents = ivf_centroids(vecs, n_centroids=8)
     assert len(cents) == 8 and len(cents[0]) == 64
     queries = vecs.filter(F.col("vec_id") % 25 == 0)
-    approx = ivf_topk(vecs, queries, cents, k=5)
+    approx = ivf_topk(vecs, queries, cents)
     rows = approx.collect()
     assert len(rows) > 0
     # each query's candidates come from one cell → fewer than the corpus
@@ -469,7 +469,7 @@ def test_prefix_jaccard_join_is_lossless(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         (r.doc_a, r.doc_b): (r.common, round(r.jaccard, 10))
-        for r in prefix_jaccard_pairs(docs, threshold=0.5).collect()
+        for r in prefix_jaccard_pairs(docs).collect()
     }
 
     sh = docs.select("doc_id", shingle_array(F.col("text")).alias("sh"))

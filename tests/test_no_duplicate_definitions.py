@@ -166,7 +166,8 @@ def test_staged_swap_names_only_in_writers():
 
 
 # The only defaulted parameters no call in the repo has to set: settings
-# a deployment picks, not constants of the pipeline.
+# a deployment picks, not constants of the pipeline. An entry may name
+# several parameters of one function that together make one setting.
 DEPLOYMENT_SETTINGS = {
     "run_stream(trigger_seconds)": (
         "poll cadence; a deployment runs the 10-minute processing-time "
@@ -178,18 +179,20 @@ DEPLOYMENT_SETTINGS = {
     "attach_broadcast(available_now)": (
         "a deployed alert fan-out runs continuously, tests drain once"
     ),
-    "SinkCircuitBreaker(failure_rate_threshold)": (
-        "breaker policy of a deployment's storage backends"
+    "SinkCircuitBreaker(failure_rate_threshold, sliding_window, min_calls, "
+    "open_seconds)": (
+        "breaker policy of a deployment's storage backends, one setting "
+        "of four values as in the reference's breaker registry"
     ),
     "fetch_hrfco(timeout)": "HTTP timeout of a deployment's API poll",
 }
 
 
-def _call_sites() -> tuple[dict, dict]:
-    """Per called name, the keywords and the largest positional count
-    of its calls across the package, tools/, bench.py, perfbench/ and
-    tests/. A call through ``from m import f as g`` counts for ``f``;
-    ``*args`` / ``**kwargs`` count as setting every parameter."""
+def _call_sites() -> dict[str, list]:
+    """Per called name, the (keyword or position, value) pairs its calls
+    pass across the package, tools/, bench.py, perfbench/ and tests/. A
+    call through ``from m import f as g`` counts for ``f``; ``*args`` /
+    ``**kwargs`` count as setting every parameter (value ``None``)."""
     root = PKG.parent
     files = [
         *PKG.rglob("*.py"),
@@ -198,8 +201,7 @@ def _call_sites() -> tuple[dict, dict]:
         *(root / "tests").rglob("*.py"),
         root / "bench.py",
     ]
-    keywords: dict[str, set] = {}
-    positional: dict[str, int] = {}
+    sites: dict[str, list] = {}
     for path in files:
         tree = ast.parse(path.read_text())
         aliases = {
@@ -219,25 +221,39 @@ def _call_sites() -> tuple[dict, dict]:
                 name = func.attr
             else:
                 continue
-            starred = any(isinstance(a, ast.Starred) for a in node.args)
-            positional[name] = max(
-                positional.get(name, 0),
-                float("inf") if starred else len(node.args),
-            )
-            keywords.setdefault(name, set()).update(
-                k.arg or "**" for k in node.keywords
-            )
-    return keywords, positional
+            passed = sites.setdefault(name, [])
+            for i, a in enumerate(node.args):
+                passed.append(("*", None) if isinstance(a, ast.Starred) else (i, a))
+            passed += [(k.arg or "**", k.value) for k in node.keywords]
+    return sites
+
+
+def _same_value(passed: ast.expr, default: ast.expr) -> bool:
+    """True when a call passes the default itself: the same expression,
+    or a literal of equal value (``256`` for ``BUCKETS = 256`` is not
+    caught; a literal default is)."""
+    if ast.dump(passed) == ast.dump(default):
+        return True
+    try:
+        return ast.literal_eval(passed) == ast.literal_eval(default)
+    except ValueError:
+        return False
 
 
 def test_every_default_is_set_by_some_caller():
     """A defaulted parameter that no call sets is a constant with extra
     code around it, and on a registered query one that no check can
     reach (the registry calls ``(spark, sf_dir)``). Each must be set,
-    by keyword or position, by some call in the repo, or be a named
-    deployment setting. oracles.py, the reference SQL, is exempt."""
+    by keyword or position, to a value other than its default by some
+    call in the repo, or be a named deployment setting. oracles.py, the
+    reference SQL, is exempt."""
     assert len(DEPLOYMENT_SETTINGS) <= 5
-    keywords, positional = _call_sites()
+    allowed = {
+        f"{entry.split('(')[0]}({arg.strip()})"
+        for entry in DEPLOYMENT_SETTINGS
+        for arg in entry[entry.index("(") + 1 : -1].split(",")
+    }
+    sites = _call_sites()
     unset = []
     for rel, tree in _package_trees(PKG / "oracles.py"):
         owner = {
@@ -252,24 +268,26 @@ def test_every_default_is_set_by_some_caller():
             name = owner[id(fn)] if fn.name == "__init__" else fn.name
             args = fn.args.posonlyargs + fn.args.args
             bound = 1 if args and args[0].arg in ("self", "cls") else 0
+            first = len(args) - len(fn.args.defaults)
             defaulted = [
-                (a.arg, i - bound)
-                for i, a in enumerate(args)
-                if i >= len(args) - len(fn.args.defaults)
+                (a.arg, i - bound, d)
+                for i, (a, d) in enumerate(zip(args[first:], fn.args.defaults), first)
             ] + [
-                (a.arg, None)
+                (a.arg, None, d)
                 for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
                 if d is not None
             ]
-            kws = keywords.get(name, set())
-            for arg, pos in defaulted:
+            passed = sites.get(name, [])
+            for arg, pos, default in defaulted:
                 label = f"{name}({arg})"
-                if label in DEPLOYMENT_SETTINGS or arg in kws or "**" in kws:
-                    continue
-                if pos is not None and positional.get(name, 0) > pos:
+                if label in allowed or any(
+                    key in ("*", "**")
+                    or (key in (arg, pos) and not _same_value(value, default))
+                    for key, value in passed
+                ):
                     continue
                 unset.append(f"{rel}:{fn.lineno} {label}")
     assert not unset, (
-        f"{len(unset)} defaulted parameters no caller sets — make each a "
-        f"constant: {unset}"
+        f"{len(unset)} defaulted parameters no caller sets to another "
+        f"value — make each a constant: {unset}"
     )

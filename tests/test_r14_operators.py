@@ -318,7 +318,7 @@ def test_shard_cell_drift_python_recompute(spark):
     from hrfco_data_pipeline_spark.sources.tables import load_table
 
     emb = load_table(spark, SF, "embeddings")
-    vecs = emb.select("vec_id", as_double_vec("embedding", "v"))
+    vecs = emb.select("vec_id", as_double_vec("embedding"))
     cents = ivf_centroids(vecs, n_centroids=16, dim=64)
     rows = assign_cells(vecs, cents).select("vec_id", "cell").collect()
     cs, ns, gl = {}, {}, {}

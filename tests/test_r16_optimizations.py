@@ -57,7 +57,7 @@ def test_layout_two_level_ntile_cut_matches_row_level_window(spark):
         "uid",
         "pk",
         "sk",
-        morton_interleave(F.col("qx"), F.col("qy"), bits=8).alias("mz"),
+        morton_interleave(F.col("qx"), F.col("qy")).alias("mz"),
         hilbert_index(F.col("qx"), F.col("qy"), bits=8).alias("hz"),
     )
 

@@ -25,7 +25,7 @@ def test_frame_windows_matches_slow_python(spark):
     got = {
         (r.doc_id, r.win_idx): r.energy
         for r in frame_windows(
-            to_multimodal(docs), frame_bytes=64, hop_bytes=32
+            to_multimodal(docs), frame_bytes=64
         ).collect()
     }
     want = {}

@@ -48,7 +48,7 @@ def test_mutual_knn_graph_properties(spark):
     marks a mutual); every edge stays within one label block."""
     from hrfco_data_pipeline_spark.plans.llm import embedding_mutual_knn
 
-    edges = embedding_mutual_knn(spark, SF001, k=3).collect()
+    edges = embedding_mutual_knn(spark, SF001).collect()
     assert edges
     by_src: dict[int, list] = {}
     for e in edges:

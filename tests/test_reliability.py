@@ -78,12 +78,12 @@ def test_retry_call_backoff_and_exhaustion():
         if calls["n"] < 3:
             raise IOError("transient")
 
-    retry_call(flaky, attempts=3, sleep=sleeps.append)
+    retry_call(flaky, sleep=sleeps.append)
     assert calls["n"] == 3
     assert sleeps == [0.5, 1.0]
 
     with pytest.raises(IOError):
-        retry_call(_boom, attempts=3, sleep=sleeps.append)
+        retry_call(_boom, sleep=sleeps.append)
     assert sleeps == [0.5, 1.0, 0.5, 1.0]
 
 

@@ -20,7 +20,7 @@ def test_linear_interpolation_exact(spark):
     )
     got = {
         (r.wlobscd, r.grid_ts.minute): (r.water_level, r.interpolated)
-        for r in resample_stations(df, freq_minutes=10).collect()
+        for r in resample_stations(df).collect()
     }
     assert got[("A", 0)] == (1.0, False)
     assert got[("A", 10)] == (2.0, True)
@@ -40,7 +40,7 @@ def test_no_edge_extrapolation_and_bucket_mean(spark):
     df = spark.createDataFrame(
         rows, "wlobscd string, obs_ts timestamp, water_level double"
     )
-    out = resample_stations(df, freq_minutes=10).collect()
+    out = resample_stations(df).collect()
     by_min = {r.grid_ts.minute: r for r in out}
     assert by_min[0].water_level == 3.0 and not by_min[0].interpolated
     assert by_min[10].water_level == 6.0 and by_min[10].interpolated
@@ -108,10 +108,10 @@ def test_sql_twin_bit_parity_with_pandas_form(spark):
     key = lambda r: (r.wlobscd, r.grid_ts)  # noqa: E731
     got = {
         key(r): (r.water_level, r.interpolated)
-        for r in resample_stations_sql(df, freq_minutes=10).collect()
+        for r in resample_stations_sql(df).collect()
     }
     want = {
         key(r): (r.water_level, r.interpolated)
-        for r in resample_stations(df, freq_minutes=10).collect()
+        for r in resample_stations(df).collect()
     }
     assert got == want  # exact float equality: same IEEE term order

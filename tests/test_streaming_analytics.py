@@ -34,7 +34,7 @@ def test_windowed_alert_counts_stream(spark, tmp_path):
     ).drop("value", "_corrupt")
     classified = process_observations(stream, synthetic_stations(spark))
     q = (
-        windowed_alert_counts(classified, window_minutes=60)
+        windowed_alert_counts(classified)
         .writeStream.format("memory")
         .queryName("win_counts")
         .outputMode("append")
@@ -180,7 +180,7 @@ def test_native_session_windows_stream_equals_batch(spark, tmp_path):
     ).drop("value", "_corrupt")
     s_cls = process_observations(stream, synthetic_stations(spark))
     q = (
-        session_windowed_counts(s_cls, gap="30 minutes")
+        session_windowed_counts(s_cls)
         .writeStream.format("memory")
         .queryName("sw_counts")
         .outputMode("complete")
@@ -301,7 +301,7 @@ def test_windowed_counts_rocksdb_state_store(spark, tmp_path):
             ).drop("value", "_corrupt")
             classified = process_observations(stream, synthetic_stations(spark))
             q = (
-                windowed_alert_counts(classified, window_minutes=60)
+                windowed_alert_counts(classified)
                 .writeStream.format("memory")
                 .queryName(out_name)
                 .outputMode("append")

@@ -244,7 +244,7 @@ def test_ffd_packing_tighter_than_running_sum(spark):
         [1500, 900, 800, 700, 600, 500, 400, 300, 200, 100] * 3
     )]
     df = spark.createDataFrame(rows, "doc_id long, n_tokens long")
-    ffd = pack_sequences_ffd(df, budget=2048).collect()
+    ffd = pack_sequences_ffd(df).collect()
     # every pack respects the budget STRICTLY (unlike the streaming
     # pack's one-doc overflow)
     loads = {}
@@ -258,7 +258,7 @@ def test_ffd_packing_tighter_than_running_sum(spark):
     n_rs = rs.select(F.countDistinct("pack_id")).first()[0]
     assert len(loads) <= n_rs
     # determinism
-    again = pack_sequences_ffd(df, budget=2048).collect()
+    again = pack_sequences_ffd(df).collect()
     assert {(r.doc_id, r.pack_id) for r in again} == {
         (r.doc_id, r.pack_id) for r in ffd
     }
