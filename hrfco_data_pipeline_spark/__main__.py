@@ -8,7 +8,8 @@
 A user of the reference pipeline gets the same surface as a runnable
 CLI: `run` executes a query against the parquet tables in --sf-dir and
 prints the result (tabular or JSON lines), `explain` prints the
-formatted physical plan Catalyst chose.
+formatted physical plan Catalyst chose, and to stderr how many Spark
+jobs building it ran, if any.
 """
 
 from __future__ import annotations
@@ -66,34 +67,16 @@ def main(argv: list[str] | None = None) -> int:
         print(f"unknown query {args.query!r}{hint}", file=sys.stderr)
         return 2
 
-    # documented eager exceptions: these run Spark jobs at plan-build
-    # time, so `explain` would execute that work first
-    EAGER = {
-        "events_median_bisect",
-        "docs_train_linear_gate",
-        "embedding_pca_power_iteration",
-        "orders_join_strategy_report",
-        # routed joins: choose_join_strategy profiles (two bounded
-        # 1-row aggregates) at plan-build time since r9
-        "orders_salted_revenue",
-        "events_segment_enrichment",
-        # materialize intermediates (functions/hints.materialized checkpoints) while
-        # the plan is built
-        "docs_select_token_budget",
-        "docs_nb_lang_classifier",
-        "docs_nb_holdout_eval",
-        "docs_learning_curve",
-    }
-    if args.cmd == "explain" and args.query in EAGER:
-        print(
-            f"note: {args.query} runs Spark jobs at call time; "
-            "building the plan below runs them (see docs/QUERIES.md)",
-            file=sys.stderr,
-        )
-
     spark = _spark(f"cli-{args.cmd}-{args.query}")
+    # a query may run Spark jobs while its plan is built (collected
+    # metadata, materialized intermediates); count them by job group
+    sc = spark.sparkContext
+    sc.setJobGroup("plan-build", f"build {args.query}")
     df = queries[args.query](spark, args.sf_dir)
     if args.cmd == "explain":
+        jobs = len(sc.statusTracker().getJobIdsForGroup("plan-build"))
+        if jobs:
+            print(f"note: building the plan of {args.query} ran {jobs} Spark jobs", file=sys.stderr)
         mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
         )

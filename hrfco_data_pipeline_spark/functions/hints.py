@@ -61,14 +61,17 @@ def parallelize_small_scan(df: DataFrame) -> DataFrame:
     the base table is ~50 MB, so the extra exchange is noise). At real
     scale a 100 TB corpus arrives as thousands of splits and this
     helper NO-OPS: it repartitions only when the scan's split count is
-    below half of defaultParallelism. Only the heavy text
-    operators opt in — a blanket post-scan repartition was tried and
-    reverted (it taxes every window/agg query with a second exchange,
-    see sources/tables.load_table's note).
+    below ``max(2, defaultParallelism // 2)`` and below
+    defaultParallelism itself, so never to a target at or below the
+    split count (no 1-way exchange on local[1]). Only the heavy text
+    operators and the synthetic wire source opt in — a blanket
+    post-scan repartition was tried and reverted (it taxes every
+    window/agg query with a second exchange, see
+    sources/tables.load_table's note).
     """
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= max(2, target // 2):
+    if df.rdd.getNumPartitions() >= min(target, max(2, target // 2)):
         return df
     return df.repartition(target)
 

@@ -22,7 +22,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hrfco_data_pipeline_spark.sinks.writers import COMMITTED, swap_in
+from hrfco_data_pipeline_spark.sinks.writers import committed_batch, recover_swap, swap_in
 
 
 def compact_partitions(
@@ -34,11 +34,13 @@ def compact_partitions(
     (at most 1,000,000 rows per file; one file when unpartitioned).
 
     Returns {"files_before": n, "files_after": m, "rows": r}. The
-    rewrite replaces the table through ``writers.swap_in`` (marker
-    ``_committed``) only after its row count matches the original, so
-    a crash or a bad rewrite never loses the table, and a crash of an
-    earlier compaction is healed on entry.
+    rewrite replaces the table through ``writers.swap_in`` only after
+    its row count matches the original, so a crash or a bad rewrite
+    never loses the table, and a crash of an earlier compaction or
+    append is healed on entry. The swap carries the table's marker, the
+    highest micro-batch id it holds, so a replayed batch stays skipped.
     """
+    recover_swap(path)
     stats: dict[str, int] = {}
 
     def _write(staging: str) -> None:
@@ -66,7 +68,7 @@ def compact_partitions(
                 f"compaction row mismatch: {stats['rows']} -> {recount}"
             )
 
-    swap_in(path, _write, COMMITTED, "1")
+    swap_in(path, _write, str(committed_batch(path)))
     return {**stats, "files_after": _count_data_files(path)}
 
 

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hrfco_data_pipeline_spark.functions.exprcache import cached_exprs
+from hrfco_data_pipeline_spark.functions.hints import parallelize_small_scan
 from hrfco_data_pipeline_spark.sources.tables import load_table
 
 
@@ -46,26 +47,23 @@ def synthetic_observations(spark: SparkSession, sf_dir: str) -> DataFrame:
       hash of event_id) which sweeps the full threshold ladder;
     - fw: null/blank/out-of-range ``60000.0``, else 0.00-39999.99.
     """
-    ev = load_table(spark, sf_dir, "events")
     # The classify/wire pipelines downstream are compute-bound string
     # work with NO shuffle of their own; a single-row-group events file
     # scans as one task and would serialize them on one core. Spreading
     # the tiny input here is safe exactly because nothing below needs a
     # particular partitioning (the window/aggregation queries read
     # events directly and are NOT affected — see load_table's note).
-    cores = spark.sparkContext.defaultParallelism
-    if cores > 1 and ev.rdd.getNumPartitions() < cores:
-        # NOTE (r17): this spread only helps if downstream filters on
-        # DERIVED (parse/classify) columns are shielded with
-        # functions/hints.no_pushdown — PushDownPredicates otherwise
-        # re-inlines the whole derivation tree below this exchange,
-        # into the single scan task (hydro_station_crosscorr profiled
-        # 1.7 s of classify work under the round-robin Exchange before
-        # the r17 no_pushdown sweep). A checkpoint barrier here was
-        # tried and reverted: it fixed those sites but taxed every
-        # other classify consumer ~0.3-0.6 s per run (classify_alerts
-        # 0.92→1.04, resample_10min 3.42→3.98 warm medians).
-        ev = ev.repartition(cores)
+    # NOTE (r17): this spread only helps if downstream filters on
+    # DERIVED (parse/classify) columns are shielded with
+    # functions/hints.no_pushdown — PushDownPredicates otherwise
+    # re-inlines the whole derivation tree below this exchange, into the
+    # single scan task (hydro_station_crosscorr profiled 1.7 s of
+    # classify work under the round-robin Exchange before the r17
+    # no_pushdown sweep). A checkpoint barrier here was tried and
+    # reverted: it fixed those sites but taxed every other classify
+    # consumer ~0.3-0.6 s per run (classify_alerts 0.92→1.04,
+    # resample_10min 3.42→3.98 warm medians).
+    ev = parallelize_small_scan(load_table(spark, sf_dir, "events"))
 
     # constant unresolved expression trees, built once per JVM
     # (functions/exprcache — the derivation is ~1,000 py4j calls)

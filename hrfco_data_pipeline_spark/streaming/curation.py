@@ -150,23 +150,21 @@ def bigram_counts(docs: DataFrame) -> DataFrame:
 def merge_lm_counts(spark, table_path: str, new_counts: DataFrame, batch_id: int) -> None:
     """Merge a micro-batch's bigram counts into the stored count table
     through ``sinks/writers.swap_in``, plus EXACTLY-ONCE replay
-    protection: the applied batch id is the swap's ``_batch_id``
-    marker, so it commits atomically with the data — a replayed
-    micro-batch (foreachBatch is at-least-once) sees its own id already
-    recorded and no-ops instead of double-counting. ``recover_swap``
-    runs before that check, so a marker left in a committed staging dir
-    by a crash between the renames is seen."""
-    import os
+    protection: the swap's marker holds the applied batch id, so it
+    commits atomically with the data — a replayed micro-batch
+    (foreachBatch is at-least-once) sees its own id already recorded
+    and no-ops instead of double-counting. ``recover_swap`` runs before
+    that check, so a marker left in a committed staging dir by a crash
+    between the renames is seen."""
+    from hrfco_data_pipeline_spark.sinks.writers import (
+        committed_batch,
+        recover_swap,
+        swap_in,
+    )
 
-    from hrfco_data_pipeline_spark.sinks.writers import recover_swap, swap_in
-
-    recover_swap(table_path, marker="_batch_id")
-    try:
-        with open(os.path.join(table_path, "_batch_id")) as fh:
-            if batch_id <= int(fh.read().strip()):
-                return
-    except OSError:
-        pass
+    recover_swap(table_path)
+    if batch_id <= committed_batch(table_path):
+        return
 
     def _write(staging: str) -> None:
         try:
@@ -181,7 +179,7 @@ def merge_lm_counts(spark, table_path: str, new_counts: DataFrame, batch_id: int
             )
         merged.write.mode("overwrite").parquet(staging)
 
-    swap_in(table_path, _write, "_batch_id", str(batch_id))
+    swap_in(table_path, _write, str(batch_id))
 
 
 def lm_stats_stream(docs_stream: DataFrame, table_path: str):
@@ -236,44 +234,6 @@ def wire_presence_counts(parsed_batch: DataFrame, batch_id: int) -> DataFrame:
     )
 
 
-def _applied_batch_id(table_path: str) -> int:
-    """Last batch id recorded in the table's ``_batch_id`` marker
-    (-1 when the table or marker does not exist yet)."""
-    import os
-
-    try:
-        with open(os.path.join(table_path, "_batch_id")) as fh:
-            return int(fh.read().strip())
-    except (OSError, ValueError):
-        return -1
-
-
-def _write_marker(table_path: str, batch_id: int) -> None:
-    """Atomically bump the ``_batch_id`` marker (write-then-replace,
-    so a crash never leaves a torn marker)."""
-    import os
-
-    tmp = os.path.join(table_path, "._batch_id.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(str(batch_id))
-    os.replace(tmp, os.path.join(table_path, "_batch_id"))
-
-
-def _batch_dirs(table_path: str) -> list[str]:
-    """Committed per-batch subdirectories (``b<id>``), sorted."""
-    import os
-
-    try:
-        return sorted(
-            d
-            for d in os.listdir(table_path)
-            if d.startswith("b")
-            and os.path.isdir(os.path.join(table_path, d))
-        )
-    except OSError:
-        return []
-
-
 def _append_merge(
     spark,
     table_path: str,
@@ -282,83 +242,52 @@ def _append_merge(
     compact_every: int = 32,
 ) -> None:
     """Exactly-once append of a micro-batch's rows with O(batch)
-    per-batch I/O: each batch lands in its own ``b<id>`` parquet
-    subdirectory via a hidden-tmp write + atomic rename, instead of
+    per-batch I/O: ``sinks/writers.append_batch`` lands each batch as
+    its own ``b<id>-…`` files and skips a replayed batch id, instead of
     rewriting the whole accumulated table every micro-batch (the
     pre-r9 staged-swap form — whose cumulative I/O grew quadratically
     with stream length, at odds with the maintainers' "no corpus
-    rescan" point). Readers go through ``read_appended`` (recursive
-    file lookup; Spark's listing skips the dot-prefixed tmp dirs and
-    the underscore marker).
+    rescan" point).
 
-    Exactly-once: a replayed micro-batch (foreachBatch is
-    at-least-once) sees its own ``b<id>`` dir — committed atomically
-    by the rename — or a ``_batch_id`` marker at/above its id (after
-    compaction folds the dirs away) and no-ops. Crash windows: mid
-    tmp-write → the hidden dir is swept on the next call; between
-    rename and marker bump → the dir-existence check no-ops the replay
-    and repairs the marker.
-
-    Every ``compact_every`` committed batches the table is folded flat
-    by ``compact_appended`` (the lineitem_compaction_plan pattern:
+    Once ``compact_every`` batches are appended the table is folded
+    flat by ``compact_appended`` (the lineitem_compaction_plan pattern:
     many small files → one right-sized table, amortized 1/K of the
     old per-batch rewrite), so listing cost and file counts stay
     bounded on long streams. The re-aggregating sibling is
     merge_lm_counts, whose stored rollup stays small by construction.
     """
     import os
-    import shutil
 
-    from hrfco_data_pipeline_spark.sinks.writers import recover_swap
+    from hrfco_data_pipeline_spark.sinks.writers import append_batch
 
-    recover_swap(table_path, marker="_batch_id")  # heal a compaction crash
-    os.makedirs(table_path, exist_ok=True)
-    for d in os.listdir(table_path):
-        if d.startswith(".tmp-"):
-            shutil.rmtree(os.path.join(table_path, d), ignore_errors=True)
-
-    bdir = os.path.join(table_path, f"b{batch_id:012d}")
-    applied = _applied_batch_id(table_path)
-    if batch_id <= applied or os.path.isdir(bdir):
-        if batch_id > applied:
-            _write_marker(table_path, batch_id)
-        return
-
-    tmp = os.path.join(table_path, f".tmp-b{batch_id:012d}")
-    rows.write.mode("overwrite").parquet(tmp)
-    os.rename(tmp, bdir)
-    _write_marker(table_path, max(applied, batch_id))
-    if compact_every and len(_batch_dirs(table_path)) >= compact_every:
+    append_batch(rows, table_path, batch_id, "parquet")
+    batches = {n.split("-", 1)[0] for n in os.listdir(table_path) if n.startswith("b")}
+    if compact_every and len(batches) >= compact_every:
         compact_appended(spark, table_path)
 
 
 def read_appended(spark, table_path: str) -> DataFrame:
-    """Read a table maintained by ``_append_merge`` (per-batch
-    ``b<id>`` subdirs plus any compacted root files). A plain
-    ``spark.read.parquet(table_path)`` would silently skip the batch
-    subdirectories — always read through this."""
-    return spark.read.option("recursiveFileLookup", "true").parquet(table_path)
+    """Read a table maintained by ``_append_merge`` (per-batch files
+    plus any compacted ones; the staging dir and marker are skipped)."""
+    return spark.read.parquet(table_path)
 
 
 def compact_appended(spark, table_path: str) -> None:
-    """Fold all committed batch subdirectories (plus previously
-    compacted root files) into one flat parquet table through
-    ``sinks/writers.swap_in``. Its ``_batch_id`` marker carries the max
-    of the old marker and the folded dir ids, which keeps replay
-    protection across the fold, when the per-batch dirs no longer
-    exist to check."""
-    from hrfco_data_pipeline_spark.sinks.writers import recover_swap, swap_in
-
-    recover_swap(table_path, marker="_batch_id")
-    applied = max(
-        [_applied_batch_id(table_path)]
-        + [int(d[1:]) for d in _batch_dirs(table_path)]
+    """Fold every appended batch (plus previously compacted files) into
+    one flat parquet table through ``sinks/writers.swap_in``. The swap
+    carries the table's marker, the highest batch id folded, which keeps
+    replay protection when the per-batch files no longer exist."""
+    from hrfco_data_pipeline_spark.sinks.writers import (
+        committed_batch,
+        recover_swap,
+        swap_in,
     )
+
+    recover_swap(table_path)
     swap_in(
         table_path,
         read_appended(spark, table_path).write.mode("overwrite").parquet,
-        "_batch_id",
-        str(applied),
+        str(committed_batch(table_path)),
     )
 
 

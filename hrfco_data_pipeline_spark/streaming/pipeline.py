@@ -28,11 +28,16 @@ Every timestamp the sinks stamp — fact ``created_at``, alert and DLQ
 generated code repeats from batch to batch and a replayed batch rewrites
 the same values.
 
-Delivery: at-least-once. A batch that fails or crashes before the
-checkpoint commits is replayed in full, and its rows are appended again
-(duplicates, not losses); the replayed rows equal the first write's,
-batch clock included. The DLQ carries parse failures and, with
-``breakers``, sink failures (the reference's acks=all + DLQ contract,
+Delivery: the file sinks are exactly-once per micro-batch id, while
+the checkpoint and the output directory stay paired. A batch that fails
+or crashes before the checkpoint commits is replayed in full under the
+same id; each sink appends through ``sinks/writers.append_batch``,
+which skips a batch its marker already holds and undoes a commit a
+crash left midway, so the replay writes each sink's rows once. A fresh
+checkpoint restarts the ids at 0 and needs a fresh output directory.
+The batch clock makes a replay write the same rows as the first try.
+A Kafka alert sink stays at-least-once. The DLQ carries parse failures
+and, with ``breakers``, sink failures (the reference's DLQ contract,
 SURVEY §4 note). The stations dim is re-read every micro-batch by the
 stream-static join, which subsumes the reference's threshold cache
 refresh (J1).
@@ -43,7 +48,7 @@ earliest); tests use the file source for hermeticity.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -68,6 +73,25 @@ OBS_WIRE_SCHEMA = (
 )
 
 
+def _parse_wire(raw: DataFrame, value: str | Column) -> DataFrame:
+    """(value, wlobscd, ymdhm, wl, fw, _corrupt) from ``value``, the
+    JSON text of a wire record, named ``value``; an unparseable line
+    keeps its text in ``_corrupt`` (T3)."""
+    rec = F.from_json(
+        value,
+        OBS_WIRE_SCHEMA,
+        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
+    )
+    return raw.select(value, rec.alias("rec")).select(
+        "value",
+        F.col("rec.wlobscd").alias("wlobscd"),
+        F.col("rec.ymdhm").alias("ymdhm"),
+        F.col("rec.wl").alias("wl"),
+        F.col("rec.fw").alias("fw"),
+        F.col("rec._corrupt").alias("_corrupt"),
+    )
+
+
 def observations_file_stream(spark: SparkSession, source_dir: str) -> DataFrame:
     """JSON-lines file source (test stand-in for the Kafka source S4).
 
@@ -79,19 +103,7 @@ def observations_file_stream(spark: SparkSession, source_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 4)
         .load(source_dir)
     )
-    rec = F.from_json(
-        "value",
-        OBS_WIRE_SCHEMA,
-        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
-    )
-    return raw.select("value", rec.alias("rec")).select(
-        "value",
-        F.col("rec.wlobscd").alias("wlobscd"),
-        F.col("rec.ymdhm").alias("ymdhm"),
-        F.col("rec.wl").alias("wl"),
-        F.col("rec.fw").alias("fw"),
-        F.col("rec._corrupt").alias("_corrupt"),
-    )
+    return _parse_wire(raw, "value")
 
 
 def observations_kafka_stream(
@@ -110,19 +122,7 @@ def observations_kafka_stream(
         .option("maxOffsetsPerTrigger", MAX_OFFSETS_PER_TRIGGER)
         .load()
     )
-    rec = F.from_json(
-        F.col("value").cast("string"),
-        OBS_WIRE_SCHEMA,
-        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
-    )
-    return raw.select(F.col("value").cast("string").alias("value"), rec.alias("rec")).select(
-        "value",
-        F.col("rec.wlobscd").alias("wlobscd"),
-        F.col("rec.ymdhm").alias("ymdhm"),
-        F.col("rec.wl").alias("wl"),
-        F.col("rec.fw").alias("fw"),
-        F.col("rec._corrupt").alias("_corrupt"),
-    )
+    return _parse_wire(raw, F.col("value").cast("string").alias("value"))
 
 
 def run_stream(
@@ -168,14 +168,15 @@ def run_stream(
             sinks = (
                 (
                     "archive",
-                    lambda: write_archive(classified.drop(BATCH_TS), f"{out_dir}/archive"),
+                    lambda: write_archive(classified.drop(BATCH_TS), f"{out_dir}/archive", batch_id),
                 ),
-                ("fact", lambda: write_fact(classified, f"{out_dir}/fact", now=BATCH_TS)),
+                ("fact", lambda: write_fact(classified, f"{out_dir}/fact", batch_id, now=BATCH_TS)),
                 (
                     "alerts",
                     lambda: write_alerts(
                         build_alerts(classified, extra_cols=(BATCH_TS,)),
                         f"{out_dir}/alerts",
+                        batch_id,
                         now=BATCH_TS,
                     ),
                 ),
@@ -206,7 +207,7 @@ def run_stream(
                     "original_key string, original_value string, error_reason string",
                 ).crossJoin(clock)
                 dlq = dlq.unionByName(env).coalesce(1)
-            write_dlq(dlq, f"{out_dir}/dlq", now=BATCH_TS)
+            write_dlq(dlq, f"{out_dir}/dlq", batch_id, now=BATCH_TS)
             classified.unpersist()
         finally:
             batch.unpersist()

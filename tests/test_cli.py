@@ -29,3 +29,13 @@ def test_run_json(spark, capsys):
     assert rc == 0
     out = capsys.readouterr().out
     assert out.strip().startswith("{")
+
+
+def test_explain_reports_build_time_jobs(spark, capsys):
+    """``explain`` counts the Spark jobs a query runs while its plan is
+    built; the median bisection collects its candidate bounds then."""
+    rc = main(["explain", "events_median_bisect", "--sf-dir", "/root/testdata/sf0.001"])
+    assert rc == 0
+    err = capsys.readouterr().err
+    assert "note: building the plan of events_median_bisect ran" in err
+    assert int(err.split(" ran ")[1].split()[0]) > 0

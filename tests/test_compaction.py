@@ -134,7 +134,7 @@ def test_append_after_killed_compaction_keeps_committed_rewrite(
     from hrfco_data_pipeline_spark.sinks.writers import write_fact
 
     path = str(tmp_path / "fact")
-    write_fact(_classified(spark, 0, 100), path, now="now")
+    write_fact(_classified(spark, 0, 100), path, 0, now="now")
     real_rename = os.rename
 
     class Killed(BaseException):
@@ -150,7 +150,7 @@ def test_append_after_killed_compaction_keeps_committed_rewrite(
         compact_partitions(spark, path, ["obs_date"])
     monkeypatch.undo()
 
-    write_fact(_classified(spark, 100, 5), path, now="now")
+    write_fact(_classified(spark, 100, 5), path, 1, now="now")
     assert spark.read.parquet(path).count() == 105
     assert os.listdir(tmp_path) == ["fact"]
     compact_partitions(spark, path, ["obs_date"])

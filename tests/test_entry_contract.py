@@ -281,6 +281,23 @@ def test_evidence_ledger_is_fresh():
     )
 
 
+def test_query_catalog_is_fresh():
+    """docs/QUERIES.md is generated from the registry (order, oracle
+    coverage, implementation and docstring of every query); a registry
+    or docstring change without regenerating it leaves the catalog
+    wrong. Regenerate in memory and compare."""
+    import importlib
+    import pathlib
+    import sys
+
+    sys.path.insert(0, ".")
+    gen = importlib.import_module("tools.gen_query_docs")
+    fresh = gen.query_catalog(entry.queries(), entry.oracle_sql())
+    assert fresh == pathlib.Path("docs", "QUERIES.md").read_text(), (
+        "docs/QUERIES.md is stale — run: python tools/gen_query_docs.py"
+    )
+
+
 def test_freshness_guard_tolerates_boundary_correctness_drop(tmp_path):
     """Simulated round boundary: a CORRECTNESS file from a LATER round
     than the ledger stamp appears (the driver always lands one after

@@ -53,7 +53,7 @@ def test_kafka_roundtrip_matches_file_twin(spark, tmp_path):
 
     # S4 → classify → 3-way sinks, bounded by availableNow semantics:
     # run until the topic's current end offsets are consumed
-    stations = synthetic_stations(spark, SF)
+    stations = synthetic_stations(spark)
     stream = observations_kafka_stream(spark, BOOTSTRAP, topic)
     q = run_stream(
         spark,

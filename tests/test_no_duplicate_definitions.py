@@ -165,6 +165,26 @@ def test_staged_swap_names_only_in_writers():
     assert not found, f"staged-swap dir names outside sinks/writers.py: {found}"
 
 
+def test_one_batch_appender():
+    """Every micro-batch append goes through sinks/writers.append_batch,
+    exactly-once on the batch id, with one commit marker
+    (``writers.COMMITTED``): no plain ``mode("append")`` write, which
+    duplicates a replayed batch, and no second ``"_batch_id"`` marker."""
+    found = [
+        f"{rel}:{node.lineno}"
+        for rel, tree in _package_trees(None)
+        for node in ast.walk(tree)
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "mode"
+            and any(isinstance(a, ast.Constant) and a.value == "append" for a in node.args)
+        )
+        or (isinstance(node, ast.Constant) and node.value == "_batch_id")
+    ]
+    assert not found, f"a second append or marker: {found}"
+
+
 # The only defaulted parameters no call in the repo has to set: settings
 # a deployment picks, not constants of the pipeline. An entry may name
 # several parameters of one function that together make one setting.

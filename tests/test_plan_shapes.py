@@ -386,3 +386,32 @@ def test_bot_screen_single_scan_single_exchange(spark):
     assert s.count("Scan parquet") == 1
     stripped = s.replace("Exchange RoundRobinPartitioning", "")
     assert stripped.count("Exchange") == 1
+
+
+def test_small_scan_spread_only_to_more_partitions():
+    """``hints.parallelize_small_scan`` spreads an under-split scan to
+    defaultParallelism partitions, never to a count at or below the
+    scan's own (no 1-way exchange on local[1]), and leaves a scan split
+    at least half as wide as the parallelism alone."""
+    from types import SimpleNamespace
+
+    from hrfco_data_pipeline_spark.functions.hints import parallelize_small_scan
+
+    class Frame:
+        def __init__(self, splits, cores):
+            self.rdd = SimpleNamespace(getNumPartitions=lambda: splits)
+            self.sparkSession = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=cores))
+
+        def repartition(self, n):
+            return n
+
+    for cores in range(1, 17):
+        for splits in range(1, 20):
+            frame = Frame(splits, cores)
+            got = parallelize_small_scan(frame)
+            if got is not frame:  # spread: to the parallelism, and wider
+                assert got == cores > splits, (splits, cores)
+            if splits >= max(2, cores // 2):  # wide enough already
+                assert got is frame, (splits, cores)
+        if cores > 1:  # the single-split testdata scan spreads
+            assert parallelize_small_scan(Frame(1, cores)) == cores

@@ -95,6 +95,144 @@ def test_stream_restart_exactly_once_fact_rows(spark, tmp_path):
     assert n2 == want
 
 
+def _sink_rows(spark, out: str) -> dict:
+    """Every sink's rows as a multiset, without the batch-clock columns
+    (two runs of the same input stamp different clocks)."""
+    from collections import Counter
+
+    rows = {}
+    for sink in ("archive", "fact", "alerts", "dlq"):
+        path = f"{out}/{sink}"
+        df = spark.read.json(path) if sink == "archive" else spark.read.parquet(path)
+        df = df.drop("created_at", "timestamp")
+        rows[sink] = Counter(tuple(r) for r in df.select(*sorted(df.columns)).collect())
+    return rows
+
+
+@pytest.fixture(scope="module")
+def clean_sinks(spark, tmp_path_factory):
+    """The sinks of one fault-free run over ``_polling_files(src, 8)``
+    (two micro-batches)."""
+    base = tmp_path_factory.mktemp("clean")
+    src, out = str(base / "src"), str(base / "out")
+    _polling_files(src, 8)
+    q = run_stream(spark, observations_file_stream(spark, src), synthetic_stations(spark), out, str(base / "ck"))
+    assert q.awaitTermination(300)
+    return _sink_rows(spark, out)
+
+
+@pytest.mark.parametrize("fault", ["archive", "fact", "alerts", "dlq", "move"])
+def test_stream_restart_after_fault_exactly_once_every_sink(spark, tmp_path, monkeypatch, clean_sinks, fault):
+    """Fail-stop faults in the second micro-batch, then a restart on the
+    same checkpoint: the restart replays the batch, and every sink ends
+    with the rows of a clean single run, no duplicates and no loss.
+    A sink fault is raised right after that sink's write returned; a
+    ``move`` fault is a non-``OSError`` ``BaseException`` (a kill) at
+    the fact sink's second file move, after one file of the batch has
+    moved into place and before the marker is bumped."""
+    import glob
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    import hrfco_data_pipeline_spark.streaming.pipeline as pl
+
+    src, out, ckpt = str(tmp_path / "src"), str(tmp_path / "out"), str(tmp_path / "ck")
+    _polling_files(src, 8)
+    fired = []
+
+    class Killed(BaseException):
+        pass
+
+    if fault == "move":
+        real_rename = os.rename
+
+        def rename(a, b):
+            if "/fact/" in b and os.path.basename(b).startswith("b000000000001-"):
+                fired.append(b)
+                if len(fired) == 2:
+                    raise Killed()
+            real_rename(a, b)
+
+        monkeypatch.setattr(os, "rename", rename)
+        write_fact = pl.write_fact
+
+        def killed_in_fact(*a, **k):
+            # a BaseException would hang the py4j callback; the sink is
+            # left as a kill leaves it, and the query ends with an error
+            try:
+                write_fact(*a, **k)
+            except Killed as exc:
+                raise RuntimeError("killed mid-commit") from exc
+
+        monkeypatch.setattr(pl, "write_fact", killed_in_fact)
+    else:
+        write = getattr(pl, f"write_{fault}")
+
+        def write_then_fail(*a, **k):
+            write(*a, **k)
+            fired.append(1)
+            if len(fired) == 2:
+                raise RuntimeError(f"fault after the {fault} write")
+
+        monkeypatch.setattr(pl, f"write_{fault}", write_then_fail)
+
+    def run_once():
+        q = pl.run_stream(spark, pl.observations_file_stream(spark, src), synthetic_stations(spark), out, ckpt)
+        return q.awaitTermination(300)
+
+    with pytest.raises(StreamingQueryException):
+        run_once()
+    assert len(fired) == 2
+    assert os.path.isdir(f"{out}/fact/_staging") == (fault == "move")
+    monkeypatch.undo()
+    assert run_once()
+    assert _sink_rows(spark, out) == clean_sinks
+    assert not glob.glob(f"{out}/*/_staging")
+
+
+def test_failed_guarded_write_leaves_no_staging(spark, tmp_path, monkeypatch):
+    """A write that fails mid-commit under a breaker is undone before
+    the breaker sees the error: no staging dir and none of the batch's
+    files stay behind, the failure lands in the DLQ, and the stream
+    carries on."""
+    import glob
+    import os
+
+    import hrfco_data_pipeline_spark.streaming.pipeline as pl
+    from hrfco_data_pipeline_spark.sinks.reliability import SinkCircuitBreaker
+
+    src, out, ckpt = str(tmp_path / "src"), str(tmp_path / "out"), str(tmp_path / "ck")
+    _polling_files(src, 8)
+    real_rename, moved = os.rename, []
+
+    def rename(a, b):  # the second file move of the fact sink's batch 1 fails
+        if "/fact/" in b and os.path.basename(b).startswith("b000000000001-"):
+            moved.append(b)
+            if len(moved) == 2:
+                raise OSError("disk gone")
+        real_rename(a, b)
+
+    monkeypatch.setattr(os, "rename", rename)
+    q = pl.run_stream(
+        spark,
+        pl.observations_file_stream(spark, src),
+        synthetic_stations(spark),
+        out,
+        ckpt,
+        breakers={"fact": SinkCircuitBreaker(name="fact")},
+    )
+    assert q.awaitTermination(300)
+    monkeypatch.undo()
+    assert len(moved) == 2
+    assert not glob.glob(f"{out}/*/_staging")
+    assert not glob.glob(f"{out}/fact/*/b000000000001-*")
+    assert glob.glob(f"{out}/fact/*/b000000000000-*")
+    reasons = [r.error_reason for r in spark.read.parquet(f"{out}/dlq").collect()]
+    assert "Storage failed: fact: OSError" in reasons
+    assert spark.read.parquet(f"{out}/alerts").count() == 2 * spark.read.parquet(f"{out}/fact").count()
+
+
 def test_snapshot_sink_complete_mode(spark, tmp_path):
     """A complete-mode aggregate materialized through snapshot_sink is
     a consistent, atomically-replaced parquet view of the latest state

@@ -214,7 +214,7 @@ def test_lm_stats_stream_merges_to_batch_counts(spark, tmp_path):
     want = {r.bg: r.c for r in bigram_counts(docs).collect()}
     assert want and got == want
     # replayed batch id: merge must no-op, counts unchanged
-    applied = int(open(f"{table}/_batch_id").read())
+    applied = int(open(f"{table}/_committed").read())
     junk = bigram_counts(docs.limit(5))
     merge_lm_counts(spark, table, junk, applied)
     again = {r.bg: r.c for r in spark.read.parquet(table).collect()}
@@ -247,7 +247,7 @@ def test_merge_lm_counts_recovers_mid_swap_crash(spark, tmp_path):
     os.rename(table, f"{table}__old__")
 
     # replayed batch 0 arrives: recovery must roll forward, then the
-    # restored _batch_id (0) suppresses the replay -> counts unchanged
+    # restored _committed marker (0) suppresses the replay -> counts unchanged
     merge_lm_counts(spark, table, bigram_counts(docs.limit(3)), 0)
     got = {r.bg: r.c for r in spark.read.parquet(table).collect()}
     assert got == want
@@ -256,7 +256,7 @@ def test_merge_lm_counts_recovers_mid_swap_crash(spark, tmp_path):
 
 
 def test_merge_lm_counts_rolls_back_uncommitted_staging(spark, tmp_path):
-    """Crash mid-write of the staging dir (no _batch_id marker inside)
+    """Crash mid-write of the staging dir (no _committed marker inside)
     after the live table was already moved aside by a previous crash:
     recovery must restore the backup, not trust the half-written
     staging and not start from scratch."""
@@ -280,7 +280,7 @@ def test_merge_lm_counts_rolls_back_uncommitted_staging(spark, tmp_path):
     merge_lm_counts(spark, table, bigram_counts(docs), 1)  # retry merges onto restored state
     got = {r.bg: r.c for r in spark.read.parquet(table).collect()}
     assert got == {k: 2 * v for k, v in base.items()}
-    assert int(open(f"{table}/_batch_id").read()) == 1
+    assert int(open(f"{table}/_committed").read()) == 1
 
 
 def test_merge_stations_recovers_mid_swap_crash(spark, tmp_path):
@@ -313,7 +313,7 @@ def test_merge_stations_recovers_mid_swap_crash(spark, tmp_path):
     success = f"{table}__staging__/_SUCCESS"
     if os.path.exists(success):
         os.remove(success)
-    assert recover_swap(table, marker="_committed") == "forward"
+    assert recover_swap(table) == "forward"
     assert not os.path.exists(f"{table}__old__")
 
     # crash DURING the staging write: _SUCCESS may exist (committer
@@ -641,61 +641,64 @@ def test_quantile_sample_stream_equals_batch_face(spark, tmp_path):
 
 
 def test_append_merge_incremental_layout_and_compaction(spark, tmp_path):
-    """The r9 _append_merge contract: per-batch I/O is O(batch) — each
-    micro-batch lands in its own atomic b<id> subdirectory instead of
-    rewriting the accumulated table (whose cumulative I/O grew
-    quadratically with stream length) — and every compact_every
-    batches the table folds flat. Replay must no-op BOTH while the
-    batch dir exists and AFTER compaction removed it (the carried
-    _batch_id marker), and an interrupted hidden-tmp write must be
-    swept, not read."""
+    """The _append_merge contract: per-batch I/O is O(batch) — each
+    micro-batch lands as its own ``b<id>-…`` files instead of rewriting
+    the accumulated table (whose cumulative I/O grew quadratically with
+    stream length) — and once compact_every batches are appended the
+    table folds flat. Replay must no-op BOTH while the batch files exist
+    and AFTER compaction removed them (the carried _committed marker),
+    and a commit a crash left midway must be undone, not read."""
     import os
 
     from hrfco_data_pipeline_spark.streaming.curation import (
         _append_merge,
-        _batch_dirs,
         compact_appended,
         read_appended,
     )
 
     table = str(tmp_path / "appended")
     mk = lambda lo, n: spark.range(lo, lo + n).selectExpr("id", "id * 2 AS v")
+    batches = lambda: sorted({n.split("-")[0] for n in os.listdir(table) if n.startswith("b")})
+    marker = lambda: int(open(os.path.join(table, "_committed")).read())
 
     for b in range(4):
         _append_merge(spark, table, mk(10 * b, 5), b, compact_every=0)
-    assert len(_batch_dirs(table)) == 4  # one dir per batch, no rewrite
+    assert len(batches()) == 4  # one file set per batch, no rewrite
     assert read_appended(spark, table).count() == 20
 
-    # replay while the batch dir exists -> no-op
+    # replay while the batch files exist -> no-op
     _append_merge(spark, table, mk(0, 5), 2, compact_every=0)
     assert read_appended(spark, table).count() == 20
 
-    # an interrupted tmp write is swept on the next call, never read
-    os.makedirs(os.path.join(table, ".tmp-b000000000099"))
+    # a commit that crashed after moving a file: the moved file and the
+    # staging dir are removed on the next call, and the batch lands once
+    os.makedirs(os.path.join(table, "_staging", "b000000000004"))
+    with open(os.path.join(table, "b000000000004-part-00000.parquet"), "w") as fh:
+        fh.write("torn")
     _append_merge(spark, table, mk(40, 5), 4, compact_every=0)
-    assert not os.path.exists(os.path.join(table, ".tmp-b000000000099"))
+    assert not os.path.exists(os.path.join(table, "_staging"))
     assert read_appended(spark, table).count() == 25
 
-    # compaction folds the dirs flat, keeps every row, carries the id
+    # compaction folds the batches flat, keeps every row, carries the id
     compact_appended(spark, table)
-    assert _batch_dirs(table) == []
+    assert batches() == []
     assert read_appended(spark, table).count() == 25
-    assert int(open(os.path.join(table, "_batch_id")).read()) == 4
+    assert marker() == 4
 
-    # replay AFTER compaction (batch dir gone) -> marker no-ops it
+    # replay AFTER compaction (batch files gone) -> marker no-ops it
     _append_merge(spark, table, mk(0, 5), 4, compact_every=0)
     assert read_appended(spark, table).count() == 25
 
-    # post-compaction appends mix flat files + new batch dirs
+    # post-compaction appends mix flat files + new batch files
     _append_merge(spark, table, mk(50, 3), 5, compact_every=0)
     assert read_appended(spark, table).count() == 28
-    assert len(_batch_dirs(table)) == 1
+    assert len(batches()) == 1
 
     # auto-compaction trips at the threshold
     _append_merge(spark, table, mk(60, 2), 6, compact_every=2)
-    assert _batch_dirs(table) == []
+    assert batches() == []
     assert read_appended(spark, table).count() == 30
-    assert int(open(os.path.join(table, "_batch_id")).read()) == 6
+    assert marker() == 6
 
 
 def test_lateness_monitor_stream_equals_batch_face(spark, tmp_path):
@@ -836,8 +839,10 @@ def test_lateness_monitor_stream_equals_batch_face(spark, tmp_path):
     )
     last = k - 1
     sdir = os.path.join(table, "sample")
-    shutil.rmtree(os.path.join(sdir, f"b{last:012d}"))
-    with open(os.path.join(sdir, "_batch_id"), "w") as fh:
+    for name in os.listdir(sdir):
+        if name.startswith(f"b{last:012d}-"):
+            os.remove(os.path.join(sdir, name))
+    with open(os.path.join(sdir, "_committed"), "w") as fh:
         fh.write(str(last - 1))
     lateness_state_update(
         spark, table, spark.createDataFrame(rows[last * per :], schema), last

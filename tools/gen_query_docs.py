@@ -128,6 +128,15 @@ def main() -> None:
     oracles = entry_mod.oracle_sql()
     hist = driver_history()
     write_evidence_ledger(queries, oracles, hist)
+    with open("docs/QUERIES.md", "w") as f:
+        f.write(query_catalog(queries, oracles))
+    print(f"wrote docs/QUERIES.md ({len(queries)} queries)")
+
+
+def query_catalog(queries, oracles) -> str:
+    """The text of docs/QUERIES.md: one row per registered query, in
+    registry order, with its implementation and first docstring
+    sentence."""
     lines = [
         "# Query catalog",
         "",
@@ -148,9 +157,7 @@ def main() -> None:
         lines.append(
             f"| {i} | `{name}` | {oracle} | `{mod}.{fname}` | {desc} |"
         )
-    with open("docs/QUERIES.md", "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"wrote docs/QUERIES.md ({len(queries)} queries)")
+    return "\n".join(lines) + "\n"
 
 
 if __name__ == "__main__":
