@@ -138,11 +138,18 @@ def station_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def alerts_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F3: dashboard 'alert' category filter — warning tiers only
-    (dashboard.html:991-1006; anomaly precedence excluded here)."""
+    (dashboard.html:991-1006; anomaly precedence excluded here).
+
+    Both tests are classify-derived, so the filter goes through
+    no_pushdown: pushed below the stations join and the scan spread, it
+    re-derived the whole classify chain inside the one-task scan stage
+    (sf0.1, local[4], warm wall: 6.8 s unshielded, 2.1 s shielded)."""
     a = alerts(spark, sf_dir)
     return a.filter(
-        F.col("warning_level").isin("ATTENTION", "CAUTION", "WARNING", "CRITICAL")
-        & ~F.col("is_anomaly")
+        no_pushdown(
+            F.col("warning_level").isin("ATTENTION", "CAUTION", "WARNING", "CRITICAL")
+            & ~F.col("is_anomaly")
+        )
     ).select("obs_id", "observation_code", "warning_level", "water_level")
 
 

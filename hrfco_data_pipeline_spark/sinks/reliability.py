@@ -20,6 +20,7 @@ CLOSED on success / OPEN again on failure. Clock injectable for tests.
 
 from __future__ import annotations
 
+import functools
 import time
 from collections import deque
 from collections.abc import Callable
@@ -111,3 +112,29 @@ def retry_call(
                 raise
             sleep(delay)
             delay *= 2
+
+
+def batch_function(fn: Callable) -> Callable:
+    """``fn(batch, batch_id)`` as a ``foreachBatch`` function that fails
+    its micro-batch on ANY exception.
+
+    pyspark's callback catches only ``Exception``. A ``BaseException``
+    that is not one (``KeyboardInterrupt``, ``SystemExit``, a kill)
+    raised inside ``fn`` kills the py4j callback connection instead,
+    and the query neither fails nor advances. Re-raised here as a
+    ``RuntimeError``, it fails the batch: the query ends with a
+    ``StreamingQueryException``, and a restart on the same checkpoint
+    replays the batch."""
+
+    @functools.wraps(fn)
+    def run(batch, batch_id: int) -> None:
+        try:
+            fn(batch, batch_id)
+        except Exception:
+            raise
+        except BaseException as exc:
+            raise RuntimeError(
+                f"micro-batch {batch_id} stopped by {type(exc).__name__}"
+            ) from exc
+
+    return run

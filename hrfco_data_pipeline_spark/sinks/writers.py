@@ -45,6 +45,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hrfco_data_pipeline_spark.sinks.reliability import batch_function
+
 # the one commit marker: the highest batch id a table contains; a
 # whole-table swap writes it into its staging dir after the data
 COMMITTED = "_committed"
@@ -339,4 +341,4 @@ def snapshot_sink(out_dir: str):
     def _write(batch_df, batch_id: int) -> None:
         swap_in(out_dir, batch_df.write.mode("overwrite").parquet, str(batch_id))
 
-    return _write
+    return batch_function(_write)

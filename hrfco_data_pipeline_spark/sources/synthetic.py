@@ -50,9 +50,13 @@ def synthetic_observations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The classify/wire pipelines downstream are compute-bound string
     # work with NO shuffle of their own; a single-row-group events file
     # scans as one task and would serialize them on one core. Spreading
-    # the tiny input here is safe exactly because nothing below needs a
+    # the input here is safe exactly because nothing below needs a
     # particular partitioning (the window/aggregation queries read
     # events directly and are NOT affected — see load_table's note).
+    # It happens only from functions/hints.SPREAD_MIN_BYTES up: the sf0.1
+    # events (2 MB) spread; the sf0.01 and perfbench ones (221 KB) scan
+    # straight into the chain, where the exchange and its one-task scan
+    # stage cost a dashboard request more than the spread saves.
     # NOTE (r17): this spread only helps if downstream filters on
     # DERIVED (parse/classify) columns are shielded with
     # functions/hints.no_pushdown — PushDownPredicates otherwise

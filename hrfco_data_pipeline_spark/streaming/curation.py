@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from hrfco_data_pipeline_spark.operators.textnorm import normalize_text, redact_pii
 from hrfco_data_pipeline_spark.plans.llm import _tokens, quality_score_expr
+from hrfco_data_pipeline_spark.sinks.reliability import batch_function
 
 
 def curate_documents(docs: DataFrame, model_gate: bool = False) -> DataFrame:
@@ -202,7 +203,7 @@ def lm_stats_stream(docs_stream: DataFrame, table_path: str):
             batch_id,
         )
 
-    return docs_stream.writeStream.foreachBatch(_merge)
+    return docs_stream.writeStream.foreachBatch(batch_function(_merge))
 
 
 # ---------------------------------------------------------------------------
@@ -319,7 +320,7 @@ def schema_drift_stream(parsed_stream: DataFrame, table_path: str):
             batch_id,
         )
 
-    return parsed_stream.writeStream.foreachBatch(_merge)
+    return parsed_stream.writeStream.foreachBatch(batch_function(_merge))
 
 
 def drift_report_from_counts(spark, table_path: str) -> DataFrame:
@@ -367,7 +368,7 @@ def bm25_index_stream(docs_stream: DataFrame, table_path: str):
             batch_id,
         )
 
-    return docs_stream.writeStream.foreachBatch(_merge)
+    return docs_stream.writeStream.foreachBatch(batch_function(_merge))
 
 
 def bm25_topk_from_index(spark, table_path: str) -> DataFrame:
@@ -431,7 +432,7 @@ def kmv_sketch_stream(events_stream: DataFrame, table_path: str):
             batch_id,
         )
 
-    return events_stream.writeStream.foreachBatch(_merge)
+    return events_stream.writeStream.foreachBatch(batch_function(_merge))
 
 
 def kmv_setops_from_partials(spark, table_path: str) -> DataFrame:
@@ -490,7 +491,7 @@ def quantile_sample_stream(events_stream: DataFrame, table_path: str):
             batch_id,
         )
 
-    return events_stream.writeStream.foreachBatch(_merge)
+    return events_stream.writeStream.foreachBatch(batch_function(_merge))
 
 
 def quantiles_from_samples(spark, table_path: str) -> DataFrame:
@@ -634,7 +635,7 @@ def lateness_monitor_stream(events_stream: DataFrame, table_path: str):
             batch_df.sparkSession, table_path, batch_df, batch_id
         )
 
-    return events_stream.writeStream.foreachBatch(_merge)
+    return events_stream.writeStream.foreachBatch(batch_function(_merge))
 
 
 def lateness_report_from_state(spark, table_path: str) -> DataFrame:
@@ -699,7 +700,7 @@ def tv_drift_stream(docs_stream: DataFrame, table_path: str):
             batch_id,
         )
 
-    return docs_stream.writeStream.foreachBatch(_merge)
+    return docs_stream.writeStream.foreachBatch(batch_function(_merge))
 
 
 def tv_report_from_counts(spark, table_path: str) -> DataFrame:
@@ -742,7 +743,7 @@ def scd2_ingest_stream(orders_stream: DataFrame, table_path: str):
         )
         _append_merge(batch_df.sparkSession, table_path, rows, batch_id)
 
-    return orders_stream.writeStream.foreachBatch(_merge)
+    return orders_stream.writeStream.foreachBatch(batch_function(_merge))
 
 
 def scd2_history_from_store(spark, table_path: str) -> DataFrame:
@@ -785,7 +786,7 @@ def ks_drift_stream(events_stream: DataFrame, table_path: str):
             batch_id,
         )
 
-    return events_stream.writeStream.foreachBatch(_merge)
+    return events_stream.writeStream.foreachBatch(batch_function(_merge))
 
 
 def ks_report_from_counts(spark, table_path: str) -> DataFrame:
@@ -825,7 +826,7 @@ def cms_stream(docs_stream: DataFrame, table_path: str):
             batch_id,
         )
 
-    return docs_stream.writeStream.foreachBatch(_merge)
+    return docs_stream.writeStream.foreachBatch(batch_function(_merge))
 
 
 def cms_counters_from_store(spark, table_path: str) -> DataFrame:
@@ -906,7 +907,7 @@ def psi_drift_stream(events_stream: DataFrame, table_path: str, edges: list):
             batch_id,
         )
 
-    return events_stream.writeStream.foreachBatch(_merge)
+    return events_stream.writeStream.foreachBatch(batch_function(_merge))
 
 
 def psi_report_vs_reference(
@@ -1168,7 +1169,7 @@ def session_fragment_stream(events_stream: DataFrame, table_path: str):
             batch_id,
         )
 
-    return events_stream.writeStream.foreachBatch(_merge)
+    return events_stream.writeStream.foreachBatch(batch_function(_merge))
 
 
 def session_report_from_fragments(spark, table_path: str) -> DataFrame:

@@ -38,9 +38,11 @@ checkpoint restarts the ids at 0 and needs a fresh output directory.
 The batch clock makes a replay write the same rows as the first try.
 A Kafka alert sink stays at-least-once. The DLQ carries parse failures
 and, with ``breakers``, sink failures (the reference's DLQ contract,
-SURVEY §4 note). The stations dim is re-read every micro-batch by the
-stream-static join, which subsumes the reference's threshold cache
-refresh (J1).
+SURVEY §4 note). Every micro-batch joins the stations dim's current
+files: a file-backed dim frame has its file index re-listed on the
+driver at the start of each batch (no Spark job), so a
+``sinks/writers.merge_stations`` between batches is seen by the next
+one. This subsumes the reference's threshold cache refresh (J1).
 
 Kafka options mirror S4 (subscribe hrfco-waterlevel, startingOffsets
 earliest); tests use the file source for hermeticity.
@@ -52,10 +54,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from hrfco_data_pipeline_spark.functions.hints import file_indexes
 from hrfco_data_pipeline_spark.operators.classify import (
     build_alerts,
     process_observations,
 )
+from hrfco_data_pipeline_spark.sinks.reliability import batch_function
 from hrfco_data_pipeline_spark.sinks.writers import (
     write_alerts,
     write_archive,
@@ -151,7 +155,13 @@ def run_stream(
     query (fail-stop default).
     """
 
+    # a frame's file index is fixed when the frame is made, and a station
+    # merge swaps the files it lists away
+    dim_files = file_indexes(stations)
+
     def process_batch(batch: DataFrame, batch_id: int) -> None:
+        for index in dim_files:
+            index.refresh()
         batch = batch.coalesce(1).persist()
         try:
             good = batch.filter(F.col("_corrupt").isNull())
@@ -238,7 +248,7 @@ def run_stream(
     # plan by the offset log's batchTimestampMs, the same on a replay
     writer = (
         src.withColumn(BATCH_TS, F.current_timestamp())
-        .writeStream.foreachBatch(process_batch)
+        .writeStream.foreachBatch(batch_function(process_batch))
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )

@@ -40,6 +40,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from hrfco_data_pipeline_spark.sinks.reliability import batch_function
+
 ALL_STATIONS = "all"
 
 Subscriber = Callable[[dict], None]
@@ -121,7 +123,7 @@ def attach_broadcast(
     AlertService.java:78-95, as a ``foreachBatch`` sink)."""
     writer = (
         alerts_stream.writeStream.foreachBatch(
-            lambda batch, _id: broadcaster.publish_batch(batch)
+            batch_function(lambda batch, _id: broadcaster.publish_batch(batch))
         )
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")

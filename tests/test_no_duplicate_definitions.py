@@ -185,6 +185,26 @@ def test_one_batch_appender():
     assert not found, f"a second append or marker: {found}"
 
 
+def test_every_batch_function_fails_its_batch_on_any_exception():
+    """Every ``foreachBatch`` function in the package goes through
+    ``sinks/reliability.batch_function``, so a ``BaseException`` raised
+    inside it fails the micro-batch instead of hanging the query."""
+    found = [
+        f"{rel}:{node.lineno}"
+        for rel, tree in _package_trees(None)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "foreachBatch"
+        and not (
+            len(node.args) == 1
+            and isinstance(node.args[0], ast.Call)
+            and getattr(node.args[0].func, "id", None) == "batch_function"
+        )
+    ]
+    assert not found, f"a foreachBatch function not wrapped in batch_function: {found}"
+
+
 # The only defaulted parameters no call in the repo has to set: settings
 # a deployment picks, not constants of the pipeline. An entry may name
 # several parameters of one function that together make one setting.

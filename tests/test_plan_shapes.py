@@ -11,6 +11,7 @@ from __future__ import annotations
 from hrfco_data_pipeline_spark.plans import hydro, llm, relational
 
 SF = "/root/testdata/sf0.01"
+TESTDATA = SF.rsplit("/", 1)[0]
 
 
 def _plan(df) -> str:
@@ -234,7 +235,9 @@ def test_resample_10min_parse_not_duplicated_into_scan_stage(spark):
     time at sf0.1). The no_pushdown barrier pins both filters above
     the projection: the optimized plan must evaluate the parse exactly
     once, and nothing below the Repartition may reference it."""
-    df = hydro.resample_10min(spark, SF)
+    # sf0.1: below functions/hints.SPREAD_MIN_BYTES (the sf0.01 events)
+    # the scan is not spread, and there is no Repartition to key on
+    df = hydro.resample_10min(spark, f"{TESTDATA}/sf0.1")
     opt = df._jdf.queryExecution().optimizedPlan().toString()
     assert opt.count("gettimestamp") == 1, opt.count("gettimestamp")
     assert "Repartition" in opt, (
@@ -388,30 +391,74 @@ def test_bot_screen_single_scan_single_exchange(spark):
     assert stripped.count("Exchange") == 1
 
 
-def test_small_scan_spread_only_to_more_partitions():
-    """``hints.parallelize_small_scan`` spreads an under-split scan to
-    defaultParallelism partitions, never to a count at or below the
-    scan's own (no 1-way exchange on local[1]), and leaves a scan split
-    at least half as wide as the parallelism alone."""
+def test_no_pushdown_rebuild_reuses_generated_code(spark):
+    """``no_pushdown`` carries a fixed shuffle seed, so a second build of
+    the same query generates the same code and compiles nothing. An
+    unseeded shuffle got a fresh seed, which Spark writes into the
+    generated code, at every analysis (4 new classes per repeat of
+    resample_10min)."""
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    hydro.resample_10min(spark, f"{TESTDATA}/sf0.001").collect()
+    before = compiled.getCount()
+    hydro.resample_10min(spark, f"{TESTDATA}/sf0.001").collect()
+    assert compiled.getCount() == before
+
+
+def test_small_scan_spread_only_to_more_partitions(monkeypatch):
+    """``hints.parallelize_small_scan`` decides from the scan's file
+    index: it spreads a scan of at least ``SPREAD_MIN_BYTES`` that Spark
+    splits under-wide to defaultParallelism partitions, never to a
+    count at or below the scan's own (no 1-way exchange on local[1]),
+    leaves a scan split at least half as wide as the parallelism alone,
+    and leaves a scan below the size floor, or a frame with no file
+    scan, alone."""
     from types import SimpleNamespace
 
-    from hrfco_data_pipeline_spark.functions.hints import parallelize_small_scan
+    from hrfco_data_pipeline_spark.functions import hints
+
+    floor = hints.SPREAD_MIN_BYTES
+    scan = {}
+    monkeypatch.setattr(hints, "file_indexes", lambda df: [scan["index"]] if scan else [])
+    monkeypatch.setattr(hints, "_scan_splits", lambda df, size, files: scan["splits"])
 
     class Frame:
-        def __init__(self, splits, cores):
-            self.rdd = SimpleNamespace(getNumPartitions=lambda: splits)
+        def __init__(self, cores):
             self.sparkSession = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=cores))
 
         def repartition(self, n):
             return n
 
+    def spread(splits, cores, size=floor):
+        scan.update(index=SimpleNamespace(sizeInBytes=lambda: size, inputFiles=lambda: ["f"]), splits=splits)
+        frame = Frame(cores)
+        got = hints.parallelize_small_scan(frame)
+        return None if got is frame else got
+
     for cores in range(1, 17):
         for splits in range(1, 20):
-            frame = Frame(splits, cores)
-            got = parallelize_small_scan(frame)
-            if got is not frame:  # spread: to the parallelism, and wider
+            got = spread(splits, cores)
+            if got is not None:  # spread: to the parallelism, and wider
                 assert got == cores > splits, (splits, cores)
             if splits >= max(2, cores // 2):  # wide enough already
-                assert got is frame, (splits, cores)
-        if cores > 1:  # the single-split testdata scan spreads
-            assert parallelize_small_scan(Frame(1, cores)) == cores
+                assert got is None, (splits, cores)
+            assert spread(splits, cores, size=floor - 1) is None  # below the floor
+        if cores > 1:  # a single-split scan at the floor spreads
+            assert spread(1, cores) == cores
+    scan.clear()  # no file scan
+    frame = Frame(8)
+    assert hints.parallelize_small_scan(frame) is frame
+
+
+def test_scan_splits_match_spark(spark):
+    """``hints._scan_splits`` predicts the partitions Spark's file scan
+    makes, for every driver table at every scale factor: the spread
+    decision reads it instead of planning the scan (``df.rdd``)."""
+    from hrfco_data_pipeline_spark.functions.hints import _scan_splits, file_indexes
+    from hrfco_data_pipeline_spark.sources.tables import TABLES, load_table
+
+    for sf in ("sf0.001", "sf0.01", "sf0.1"):
+        for name in TABLES:
+            df = load_table(spark, f"{TESTDATA}/{sf}", name)
+            (index,) = file_indexes(df)
+            got = _scan_splits(df, index.sizeInBytes(), len(index.inputFiles()))
+            assert got == df.rdd.getNumPartitions(), (sf, name)

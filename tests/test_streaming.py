@@ -425,3 +425,99 @@ def test_stream_steady_batches_reuse_generated_code(spark, tmp_path, monkeypatch
     assert len(after) == 3
     steady = [after[1] - after[0], after[2] - after[1]]  # batch 0 compiles every stage
     assert max(steady) <= 2, f"compilations per steady micro-batch: {steady}"
+
+
+def test_station_merge_between_batches_is_seen(spark, tmp_path):
+    """J1: a running stream over a file-backed stations dim classifies
+    each micro-batch against the dim's current rows. Batch 0 sees the
+    old thresholds of station 0; ``merge_stations`` then raises them
+    (swapping the dim's files away); batch 1 sees the new ones, and the
+    query is still running."""
+    import os
+    import time
+
+    import pyspark.sql.functions as F
+
+    from hrfco_data_pipeline_spark.operators.classify import process_observations
+    from hrfco_data_pipeline_spark.sinks.writers import committed_batch, merge_stations
+
+    src, out, ckpt = str(tmp_path / "src"), str(tmp_path / "out"), str(tmp_path / "ck")
+    dim = str(tmp_path / "stations")
+    synthetic_stations(spark).write.parquet(dim)
+    old_dim = spark.createDataFrame(spark.read.parquet(dim).collect())
+    raised = spark.createDataFrame(
+        [("0", "Station 0", "Addr 0", "20.00", "30.00", "40.00", "50.00")],
+        "wlobscd string, obsnm string, addr string, attwl string, wrnwl string, almwl string, srswl string",
+    )
+    os.makedirs(src)
+
+    def land(minute: int) -> None:
+        with open(os.path.join(src, f"f{minute}.json"), "w") as fh:
+            fh.write(f'{{"wlobscd": "0", "ymdhm": "2025010112{minute:02d}", "wl": "7.00", "fw": "1.0"}}\n')
+
+    def await_batch(batch_id: int) -> None:
+        deadline = time.monotonic() + 120
+        while committed_batch(f"{out}/fact") < batch_id:
+            assert q.isActive, q.exception()
+            assert time.monotonic() < deadline, f"batch {batch_id} not committed"
+            time.sleep(0.2)
+
+    def expected(stations) -> str:
+        record = spark.createDataFrame([("0", "202501011200", "7.00", "1.0")], "wlobscd string, ymdhm string, wl string, fw string")
+        return process_observations(record, stations).first()["flood_warning_level"]
+
+    land(0)
+    q = run_stream(spark, observations_file_stream(spark, src), spark.read.parquet(dim), out, ckpt, trigger_seconds=1)
+    try:
+        await_batch(0)
+        merge_stations(spark, dim, raised)
+        land(1)
+        await_batch(1)
+        assert q.isActive and q.exception() is None
+    finally:
+        q.stop()
+    levels = {
+        r["observation_time"].minute: r["flood_warning_level"]
+        for r in spark.read.parquet(f"{out}/fact").select("observation_time", "flood_warning_level").collect()
+    }
+    before, after = expected(old_dim), expected(raised)
+    assert before != after
+    assert levels == {0: before, 1: after}
+
+
+def test_base_exception_in_batch_fails_query(spark, tmp_path, monkeypatch, clean_sinks):
+    """A non-``Exception`` ``BaseException`` (a kill stand-in) raised by a
+    sink inside the micro-batch ends the query with an error instead of
+    hanging it; a restart on the same checkpoint leaves every sink with
+    the rows of a clean run."""
+    import glob
+
+    from pyspark.errors import StreamingQueryException
+
+    import hrfco_data_pipeline_spark.streaming.pipeline as pl
+
+    src, out, ckpt = str(tmp_path / "src"), str(tmp_path / "out"), str(tmp_path / "ck")
+    _polling_files(src, 8)
+
+    class Killed(BaseException):
+        pass
+
+    write_fact, fired = pl.write_fact, []
+
+    def killed_after_fact(*a, **k):
+        write_fact(*a, **k)
+        fired.append(1)
+        if len(fired) == 2:
+            raise Killed()
+
+    monkeypatch.setattr(pl, "write_fact", killed_after_fact)
+    q = pl.run_stream(spark, pl.observations_file_stream(spark, src), synthetic_stations(spark), out, ckpt)
+    # no stop() on failure: a query whose callback died would hang it
+    with pytest.raises(StreamingQueryException, match="Killed"):
+        q.awaitTermination(60)
+    assert len(fired) == 2
+    monkeypatch.undo()
+    q = pl.run_stream(spark, pl.observations_file_stream(spark, src), synthetic_stations(spark), out, ckpt)
+    assert q.awaitTermination(300)
+    assert _sink_rows(spark, out) == clean_sinks
+    assert not glob.glob(f"{out}/*/_staging")
