@@ -9,8 +9,10 @@
 A user of the reference pipeline gets the same surface as a runnable
 CLI: `run` executes a query against the parquet tables in --sf-dir and
 prints the result (tabular or JSON lines), `explain` prints the
-formatted physical plan Catalyst chose, and to stderr how many Spark
-jobs building it ran, if any. `census` builds every registered query
+formatted physical plan Catalyst chose, runs the query into the noop
+sink, and prints to stderr how many Spark jobs building it ran and the
+JVM's JIT compile ms during the build and during the execution.
+`census` builds every registered query
 whose name contains substr, in one session, and prints per query the
 Spark jobs its build ran, then the totals.
 """
@@ -41,6 +43,11 @@ def _spark(app: str):
     s = get_spark(app_name=app)
     s.sparkContext.setLogLevel("ERROR")
     return s
+
+
+def _jit_ms(spark) -> int:
+    """The driver JVM's JIT compile ms so far (``CompilationMXBean``)."""
+    return spark._jvm.java.lang.management.ManagementFactory.getCompilationMXBean().getTotalCompilationTime()
 
 
 def _build_jobs(spark, name: str, build):
@@ -108,14 +115,21 @@ def main(argv: list[str] | None = None) -> int:
     spark = _spark(f"cli-{args.cmd}-{args.query}")
     # a query may run Spark jobs while its plan is built (collected
     # metadata, materialized intermediates); count them by job group
+    jit = _jit_ms(spark)
     df, jobs = _build_jobs(spark, args.query, lambda: queries[args.query](spark, args.sf_dir))
     if args.cmd == "explain":
-        if jobs:
-            print(f"note: building the plan of {args.query} ran {jobs} Spark jobs", file=sys.stderr)
+        build_jit = _jit_ms(spark) - jit
         mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
         )
         print(df._jdf.queryExecution().explainString(mode))
+        jit = _jit_ms(spark)
+        df.write.format("noop").mode("overwrite").save()
+        print(
+            f"note: building the plan of {args.query} ran {jobs} Spark jobs; "
+            f"JIT compile ms: build {build_jit}, execution {_jit_ms(spark) - jit}",
+            file=sys.stderr,
+        )
         return 0
     if args.json:
         for row in df.limit(args.limit).collect():

@@ -116,7 +116,9 @@ def synthetic_stations(spark: SparkSession) -> DataFrame:
     Mirrors the dirty-case matrix in FIXTURES.md §2 / the reference's
     StationThresholdTest.
     """
-    df = spark.range(0, 100).select(F.col("id"))
+    # one slice: the broadcast that ships this dim to every hydro
+    # request's join then runs one task, not defaultParallelism
+    df = spark.range(0, 100, 1, 1).select(F.col("id"))
 
     def _build():
         code = F.col("id")

@@ -88,3 +88,23 @@ def test_dashboard_spread_follows_the_size_floor(spark, sf):
     big = os.path.getsize(f"{path}/events.parquet") >= SPREAD_MIN_BYTES
     assert big == (sf == "sf0.1")
     assert ("Repartition" in plan) == big
+
+
+def test_hydro_stations_broadcast_runs_one_task(spark):
+    """A hydro request ships the 100-row stations dim to its join in a
+    broadcast whose job runs one task (a one-slice range), not one task
+    per core."""
+    import __spark_entry__
+
+    sc = spark.sparkContext
+    df = __spark_entry__.queries()["hydro_alert_counts"](spark, SF01)
+    sc.setJobGroup("run-hydro_alert_counts", "run hydro_alert_counts")
+    try:
+        df.collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    jobs = [store.job(j) for j in sc.statusTracker().getJobIdsForGroup("run-hydro_alert_counts")]
+    # BroadcastExchangeExec tags its job "broadcast exchange (runId ...)"
+    assert [j.numTasks() for j in jobs if "broadcast exchange" in j.jobTags().mkString("|")] == [1]

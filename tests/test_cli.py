@@ -55,3 +55,22 @@ def test_census_counts_build_jobs_per_query(spark, capsys):
     assert main(["census", "events_median_bisect", "--sf-dir", "/root/testdata/sf0.001"]) == 0
     counts = dict(line.split("\t") for line in capsys.readouterr().out.splitlines())
     assert int(counts["events_median_bisect"]) > 0
+
+
+def test_explain_reports_jit_compile_ms(spark, capsys):
+    """``explain`` runs the query after printing its plan and reports the
+    JIT compile ms of the build and of the execution: deltas of the
+    JVM's ``CompilationMXBean`` total, so together at most what that
+    total moved over the whole call."""
+    from hrfco_data_pipeline_spark.__main__ import _jit_ms
+
+    before = _jit_ms(spark)
+    assert main(["explain", "hydro_alert_counts", "--sf-dir", "/root/testdata/sf0.001"]) == 0
+    moved = _jit_ms(spark) - before
+    out, err = capsys.readouterr()
+    assert "HashAggregate" in out
+    note = err.split("JIT compile ms: ")[1].split()
+    assert note[0] == "build" and note[2] == "execution"
+    build, execution = int(note[1].rstrip(",")), int(note[3])
+    assert build >= 0 and execution >= 0
+    assert build + execution <= moved
