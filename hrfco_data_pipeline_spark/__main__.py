@@ -10,11 +10,10 @@ A user of the reference pipeline gets the same surface as a runnable
 CLI: `run` executes a query against the parquet tables in --sf-dir and
 prints the result (tabular or JSON lines), `explain` prints the
 formatted physical plan Catalyst chose, runs the query into the noop
-sink, and prints to stderr how many Spark jobs building it ran and the
-JVM's JIT compile ms during the build and during the execution.
-`census` builds every registered query
-whose name contains substr, in one session, and prints per query the
-Spark jobs its build ran, then the totals.
+sink, and prints to stderr how many Spark jobs the build and the
+execution ran and the JVM's JIT compile ms during each. `census` builds
+every registered query whose name contains substr, in one session, and
+prints per query the Spark jobs its build ran, then the totals.
 """
 
 from __future__ import annotations
@@ -50,19 +49,42 @@ def _jit_ms(spark) -> int:
     return spark._jvm.java.lang.management.ManagementFactory.getCompilationMXBean().getTotalCompilationTime()
 
 
-def _build_jobs(spark, name: str, build):
-    """(the frame ``build()`` returns, the Spark jobs it ran), counted
-    in the job group ``plan-build-<name>`` once the listener bus has
-    caught up with every job started."""
+def _jobs(spark, group: str, fn):
+    """(what ``fn()`` returns, the Spark jobs it ran), counted in the
+    job group ``group`` once the listener bus has caught up with every
+    job started."""
     sc = spark.sparkContext
-    group = f"plan-build-{name}"
-    sc.setJobGroup(group, f"build {name}")
+    sc.setJobGroup(group, group)
     try:
-        df = build()
+        out = fn()
     finally:
         sc._jsc.clearJobGroup()
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _build_jobs(spark, name: str, build):
+    """(the frame ``build()`` returns, the Spark jobs it ran), counted
+    in the job group ``plan-build-<name>``."""
+    return _jobs(spark, f"plan-build-{name}", build)
+
+
+def _explain(spark, name: str, build) -> None:
+    """Print the formatted physical plan of ``build()``, run it into the
+    noop sink, and note on stderr the Spark jobs and the JVM's JIT
+    compile ms of the build and of the execution."""
+    jit = _jit_ms(spark)
+    df, build_jobs = _build_jobs(spark, name, build)
+    build_jit = _jit_ms(spark) - jit
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    print(df._jdf.queryExecution().explainString(mode))
+    jit = _jit_ms(spark)
+    _, run_jobs = _jobs(spark, f"run-{name}", lambda: df.write.format("noop").mode("overwrite").save())
+    print(
+        f"note: building the plan of {name} ran {build_jobs} Spark jobs, its execution {run_jobs}; "
+        f"JIT compile ms: build {build_jit}, execution {_jit_ms(spark) - jit}",
+        file=sys.stderr,
+    )
 
 
 def _census(spark, queries: dict, substr: str, sf_dir: str) -> None:
@@ -113,24 +135,13 @@ def main(argv: list[str] | None = None) -> int:
         return 2
 
     spark = _spark(f"cli-{args.cmd}-{args.query}")
+    build = lambda: queries[args.query](spark, args.sf_dir)  # noqa: E731
+    if args.cmd == "explain":
+        _explain(spark, args.query, build)
+        return 0
     # a query may run Spark jobs while its plan is built (collected
     # metadata, materialized intermediates); count them by job group
-    jit = _jit_ms(spark)
-    df, jobs = _build_jobs(spark, args.query, lambda: queries[args.query](spark, args.sf_dir))
-    if args.cmd == "explain":
-        build_jit = _jit_ms(spark) - jit
-        mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-        print(df._jdf.queryExecution().explainString(mode))
-        jit = _jit_ms(spark)
-        df.write.format("noop").mode("overwrite").save()
-        print(
-            f"note: building the plan of {args.query} ran {jobs} Spark jobs; "
-            f"JIT compile ms: build {build_jit}, execution {_jit_ms(spark) - jit}",
-            file=sys.stderr,
-        )
-        return 0
+    df, _ = _build_jobs(spark, args.query, build)
     if args.json:
         for row in df.limit(args.limit).collect():
             print(json.dumps(row.asDict(), default=str))

@@ -6,21 +6,29 @@ skew joins, shuffle partitions default small locally but should be sized
 to ~128 MB per partition at cluster scale, and Arrow is enabled so any
 pandas-UDF path is batch-vectorized.
 
-The driver JVM starts with raised C2 (tier-4) thresholds
-(``C2_THRESHOLDS``). A dashboard request and a streaming micro-batch
-run in a JVM a minute old, where HotSpot's C2 compiler otherwise
-recompiles lukewarm Catalyst, closure-cleaner and serializer code.
-Compiler threads were about half of the JVM's CPU in both perfbench
-windows (C2 84% of JIT compile time, JFR). C1 (tier 3) and OSR of hot
-data loops (``Tier4BackEdgeThreshold``) keep their defaults, so a long
-scan still reaches C2. C1-only (``-XX:TieredStopAtLevel=1``) halves the
-dashboard and ingest CPU too, but runs warm sf0.1 queries 2-3x slower
-(``hydro_resample_10min`` 5.3 -> 14 s); ``-XX:-DontCompileHugeMethods``
-and ``spark.sql.codegen.hugeMethodLimit=8000`` were a wash or worse,
-and ``-XX:CICompilerCount=2`` gave about -10%. CHANGES.md has the sweep.
-The cost: lukewarm data-path code also stays in C1 longer, and the
-``bench.py`` sf0.1 totals (each query run once cold, once warm) came out
-about 7% slower in a two-pair A/B.
+The driver JVM starts with a throttled C2 (tier-4) compiler
+(``JIT_FLAGS``): one C2 thread, and a steeper load feedback. HotSpot
+multiplies the tier-4 thresholds by 1 + queued C2 methods / (C2 threads
+x ``Tier4LoadFeedback``). With one thread and a feedback of 1, ten
+queued methods raise them 11-fold, where HotSpot's own choice on 4 CPUs
+(two threads, feedback 3) raises them 2.7-fold. A dashboard request and
+a streaming micro-batch run in a JVM a minute old: at HotSpot's
+defaults, compiler threads were about half of its CPU in both perfbench
+windows, most of it C2 (84% of JIT compile time, JFR) on lukewarm
+Catalyst, Janino, closure-cleaner and serializer code. When the queue is
+empty the thresholds are HotSpot's defaults, so code that stays hot
+still reaches C2.
+
+Rejected, with numbers in CHANGES.md: static tier-4 thresholds
+(``Tier4InvocationThreshold`` and its two siblings at 3x, 10x and 30x)
+cut the perfbench CPU by 14-34%, but their ``bench.py`` sf0.1 runs read
+207-226 s warm against 197-206 s at the defaults, the gap opening after
+the JVM's first minutes; exempting the data path (generated code,
+``sql.execution``, ``unsafe``, parquet) with a per-method
+``CompileThresholdScaling`` read 225 s. C1 only
+(``-XX:TieredStopAtLevel=1``) runs warm sf0.1 queries 2-3x slower;
+``-XX:-DontCompileHugeMethods`` and
+``spark.sql.codegen.hugeMethodLimit=8000`` were a wash or worse.
 """
 
 from __future__ import annotations
@@ -29,15 +37,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Ten times HotSpot's tier-4 defaults (5,000 invocations, or 600 with
-# 15,000 invocations plus loop back-edges). In a sweep of 3x, 10x and
-# 30x (4-CPU box, local[4], perfbench --seconds 12) 10x is the smallest
-# that gets most of the gain; its A/B against the defaults: dashboard_reads
-# cpu_ms_per_op 1,254 -> 836 ms (10 of 10 pairs), ingest 4,910 -> 4,020
-# ms per micro-batch (6 of 6), setup_s 15% and 21% lower.
-C2_THRESHOLDS = (
-    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 -XX:Tier4CompileThreshold=150000"
-)
+# One C1 and one C2 compiler thread (HotSpot picks 1 + 2 on 4 CPUs and
+# more on bigger boxes), and a tier-4 load feedback of 1 (default 3).
+JIT_FLAGS = "-XX:CICompilerCount=2 -XX:Tier4LoadFeedback=1"
 
 
 def get_spark(
@@ -51,10 +53,12 @@ def get_spark(
     Defaults are safe for a 1000-executor cluster as well as local[N]:
     AQE on (coalesces small shuffle partitions, rewrites skew joins),
     broadcast threshold generous enough to broadcast dimension tables,
-    Arrow on for any pandas interop, and the driver JVM's C2 for hot
-    methods only. A caller's ``spark.driver.extraJavaOptions`` reaches
-    the JVM next to ``C2_THRESHOLDS`` (they ride on
-    ``spark.driver.defaultJavaOptions``).
+    Arrow on for any pandas interop, and the driver JVM's C2 throttled
+    while its queue is long. ``JIT_FLAGS`` ride on
+    ``spark.driver.defaultJavaOptions``: a caller's
+    ``spark.driver.extraJavaOptions`` reaches the JVM next to them, but a
+    ``spark.driver.defaultJavaOptions`` from an administrator's
+    ``spark-defaults.conf`` is replaced.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -79,7 +83,7 @@ def get_spark(
         # inert; locally it saturates local[N] on the driver testdata.
         .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.driver.defaultJavaOptions", C2_THRESHOLDS)
+        .config("spark.driver.defaultJavaOptions", JIT_FLAGS)
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

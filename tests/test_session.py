@@ -1,5 +1,5 @@
-"""``get_spark`` starts the driver JVM with the engine's C2 (tier-4)
-thresholds, read back from HotSpot itself, and a caller's own
+"""``get_spark`` starts the driver JVM with the engine's JIT flags, read
+back from HotSpot itself, and a caller's own
 ``spark.driver.extraJavaOptions`` still reaches that JVM."""
 
 from __future__ import annotations
@@ -9,10 +9,10 @@ import os
 import subprocess
 import sys
 
-from hrfco_data_pipeline_spark.session import C2_THRESHOLDS
+from hrfco_data_pipeline_spark.session import JIT_FLAGS
 
-# {"Tier4InvocationThreshold": "50000", ...} from "-XX:<name>=<value> ..."
-EXPECTED = dict(opt.removeprefix("-XX:").split("=") for opt in C2_THRESHOLDS.split())
+# {"CICompilerCount": "2", ...} from "-XX:<name>=<value> ..."
+EXPECTED = dict(opt.removeprefix("-XX:").split("=") for opt in JIT_FLAGS.split())
 
 
 def _vm_options(jvm, names) -> dict[str, tuple[str, str]]:
@@ -23,14 +23,14 @@ def _vm_options(jvm, names) -> dict[str, tuple[str, str]]:
     return {n: (bean.getVMOption(n).getValue(), bean.getVMOption(n).getOrigin().toString()) for n in names}
 
 
-def test_session_jvm_runs_with_the_c2_thresholds(spark):
+def test_session_jvm_runs_with_the_jit_flags(spark):
     """The test session came from ``get_spark``: its JVM holds every
-    threshold, set on the command line, and the tier-4 back-edge (OSR)
-    threshold keeps HotSpot's default."""
-    assert set(EXPECTED) == {"Tier4InvocationThreshold", "Tier4MinInvocationThreshold", "Tier4CompileThreshold"}
-    flags = _vm_options(spark._jvm, [*EXPECTED, "Tier4BackEdgeThreshold"])
+    flag, set on the command line, and the tier-4 thresholds the
+    feedback scales keep HotSpot's defaults."""
+    assert set(EXPECTED) == {"CICompilerCount", "Tier4LoadFeedback"}
+    flags = _vm_options(spark._jvm, [*EXPECTED, "Tier4InvocationThreshold"])
     assert {n: flags[n] for n in EXPECTED} == {n: (v, "VM_CREATION") for n, v in EXPECTED.items()}
-    assert flags["Tier4BackEdgeThreshold"] == ("40000", "DEFAULT")
+    assert flags["Tier4InvocationThreshold"][1] == "DEFAULT"
 
 
 PROBE = """
@@ -51,10 +51,10 @@ spark.stop()
 """
 
 
-def test_caller_extra_java_options_reach_the_jvm_next_to_the_thresholds():
+def test_caller_extra_java_options_reach_the_jvm_next_to_the_jit_flags():
     """A fresh JVM (a subprocess: the test session's JVM is already up)
     started with a caller's ``spark.driver.extraJavaOptions`` holds both
-    the caller's system property and flag and the engine's thresholds."""
+    the caller's system property and flag and the engine's JIT flags."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     proc = subprocess.run([sys.executable, "-c", PROBE], cwd=repo, capture_output=True, text=True, timeout=300)
     assert proc.returncode == 0, proc.stderr[-2000:]
