@@ -22,8 +22,9 @@ still reaches C2.
 Rejected, with numbers in CHANGES.md: static tier-4 thresholds
 (``Tier4InvocationThreshold`` and its two siblings at 3x, 10x and 30x)
 cut the perfbench CPU by 14-34%, but their ``bench.py`` sf0.1 runs read
-207-226 s warm against 197-206 s at the defaults, the gap opening after
-the JVM's first minutes; exempting the data path (generated code,
+207-226 s warm against 197-206 s in three runs at the defaults (a
+fourth read 221 s), the gap opening after the JVM's first minutes;
+exempting the data path (generated code,
 ``sql.execution``, ``unsafe``, parquet) with a per-method
 ``CompileThresholdScaling`` read 225 s. C1 only
 (``-XX:TieredStopAtLevel=1``) runs warm sf0.1 queries 2-3x slower;
